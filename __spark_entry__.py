@@ -632,9 +632,8 @@ def q33_ivf_topk(spark, sf_dir):
     nearest cells, exact cosine rank within. Every stage is exact
     integer arithmetic over the quantized vectors, so the DuckDB oracle
     replays the k-means itself (unrolled iterations) and matches
-    bit-for-bit. The MLlib variant (similarity.ivf_topk) remains the
-    library path for real clusters; its probe-all ≡ brute-force
-    exactness is pinned in tests."""
+    bit-for-bit. Probing every cell equals brute-force cosine_topk
+    (pinned in tests)."""
     qz = _quantized(spark, sf_dir)
     return SIM.ivf_topk_exact(
         qz.filter(F.col("vec_id") < 10), qz, k=5, n_cells=Q33_CELLS,

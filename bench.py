@@ -33,7 +33,7 @@ from etl_rs_spark.operators import dedup_scale as DS
 from etl_rs_spark.operators import similarity as SIM
 from etl_rs_spark.operators.lww import lww_agg
 from etl_rs_spark.operators.normalize_cdc import normalize_events, valid_flag
-from etl_rs_spark.session import force, get_spark
+from etl_rs_spark.session import force, get_spark, host_cpus
 from etl_rs_spark.sinks.lakehouse import LakehouseTable
 from etl_rs_spark.sources.binlog import BinlogSpec, gen_events
 from etl_rs_spark.streaming.replay import process_batch
@@ -259,7 +259,7 @@ def no_jvm_calibration(cpus: int) -> dict:
         ("mem_stream", _stream, 8_000_000),
     ):
         t0 = time.monotonic()
-        with Pool(min(int(cpus), 32)) as pool:
+        with Pool(min(cpus, 32)) as pool:
             pool.map(fn, [arg] * 32)
         out[f"{name}_sec"] = round(time.monotonic() - t0, 3)
     return out
@@ -358,11 +358,11 @@ def bench_replay(spark, binlog: str) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = host_cpus()
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     spark = get_spark(app_name="etl-rs-spark-bench", master=f"local[{cpus}]")
     try:
-        calib_pre = no_jvm_calibration(int(cpus))
+        calib_pre = no_jvm_calibration(cpus)
         queries = bench_queries(spark, sf_dir)
         ann_recall = bench_ann_recall(spark, sf_dir)
         corpus_prep = bench_corpus_prep(spark, sf_dir)
@@ -386,7 +386,7 @@ def main() -> None:
             phase_probes.append(_phase_probe(spark))
         finally:
             shutil.rmtree(binlog_tmp, ignore_errors=True)
-        calib_post = no_jvm_calibration(int(cpus))
+        calib_post = no_jvm_calibration(cpus)
         mem_sec = (calib_pre["mem_stream_sec"] + calib_post["mem_stream_sec"]) / 2
         out = {
             "metric": "cdc_replay_events_per_sec",
@@ -409,7 +409,7 @@ def main() -> None:
             "headline_x_mem_stream": round(
                 replay["events_per_sec_merge"] * mem_sec, 1
             ),
-            "cpus": int(cpus),
+            "cpus": cpus,
         }
         print(json.dumps(out))
     finally:

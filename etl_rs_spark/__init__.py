@@ -13,7 +13,8 @@ Structured Streaming stack:
   shuffle-first (blocking-key equi self-join instead of driver-side
   hash partitioning).
 - ``operators.lww``: last-writer-wins resolution over ``(lsn, offset)``
-  with optional salting for hot keys.
+  as one ``max_by`` aggregation whose map-side partial aggregate
+  pre-combines hot keys.
 - ``sources.binlog`` + ``streaming.replay`` + ``sinks.lakehouse``:
   the CDC path — ordered change-event replay into an exactly-once,
   snapshot-committed, hash-bucketed lake table with additive schema

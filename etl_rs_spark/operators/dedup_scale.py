@@ -9,9 +9,9 @@ record-linkage over business keys; a training-data pipeline also needs
   a bucket key (exact hash / LSH band bucket / blocking column), never
   from a cross join;
 - symmetry breaking ``id_l < id_r`` on every pair join;
-- all hashes are arithmetic mod p = 2^31-1 over a corpus-derived word-id
-  vocabulary — deterministic across engines, so a SQL oracle can verify
-  every stage bit-for-bit (no engine-private hash functions in results).
+- all hashes are arithmetic mod p = 2^31-1 over md5-derived word ids —
+  deterministic across engines, so a SQL oracle can verify every stage
+  bit-for-bit (no engine-private hash functions in results).
 
 Shuffle budget per operator is noted in each docstring; everything is
 native Column expressions (JVM-side; scalar chains codegen, the
@@ -52,46 +52,6 @@ def cap_group_size(
 # ---------------------------------------------------------------------------
 # exact dedup
 
-def exact_dedup(
-    df: DataFrame, content_cols: list[str], id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact dedup: keep the min-id row per distinct content.
-
-    One hash-partitioned aggregation (map-side partial min first), keyed
-    by the content columns themselves. NULL contents form their own
-    group (null-safe join — a plain equi semi-join would silently DROP
-    every null-content row). For very wide content at scale, key the
-    shuffle on a digest instead so only 32 bytes move —
-    ``exact_dedup_digest`` below.
-    """
-    keep = df.groupBy(*content_cols).agg(F.min(id_col).alias(id_col))
-    l, r = df.alias("l"), keep.alias("r")
-    cond = F.col(f"l.`{id_col}`") == F.col(f"r.`{id_col}`")
-    for c in content_cols:
-        cond = cond & F.col(f"l.`{c}`").eqNullSafe(F.col(f"r.`{c}`"))
-    return l.join(r, cond, "left_semi")
-
-
-def exact_dedup_digest(
-    df: DataFrame, content_cols: list[str], id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact dedup shuffling a sha2 digest instead of full content.
-    Digest collisions are ignored (2^-128); survivors = min id per
-    digest. The digest is over the JSON encoding of the content struct,
-    which is unambiguous under NULLs, empty strings, and values that
-    contain any would-be separator byte."""
-    digest = F.sha2(
-        F.to_json(F.struct(*[F.col(c) for c in content_cols])), 256
-    )
-    with_d = df.withColumn("_digest", digest)
-    w = Window.partitionBy("_digest").orderBy(id_col)
-    return (
-        with_d.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_digest", "_rn")
-    )
-
-
 def dedup_digest_stats(
     df: DataFrame, content_cols: list[str], id_col: str = "doc_id"
 ) -> DataFrame:
@@ -99,7 +59,12 @@ def dedup_digest_stats(
     aggregation: min(id) + count(*) grouped by sha2(content). Content
     never enters the shuffle — only the 64-hex digest moves — and the
     partial min/count combine map-side. This is the plan exact-dedup
-    reporting should have at 100 TB (vs content-keyed groupBy + join)."""
+    reporting should have at 100 TB (vs content-keyed groupBy + join).
+
+    The digest is over the JSON encoding of the content struct, which
+    is unambiguous under NULLs, empty strings and values that contain
+    any would-be separator byte, so NULL contents form their own group.
+    Digest collisions are ignored (2^-128)."""
     digest = F.sha2(
         F.to_json(F.struct(*[F.col(c) for c in content_cols])), 256
     )
@@ -114,22 +79,15 @@ def dedup_digest_stats(
 
 
 # ---------------------------------------------------------------------------
-# word -> id mapping for arithmetic hashing. Two paths:
-#
-# - word_hash60 / doc_word_ids_hashed: the SCALE path and the default
-#   for every contract query. id = first 60 bits of md5(word) — no
-#   vocab build, no join, no shuffle, and exactly reproducible in ANSI
-#   SQL (DuckDB: ('0x' || substr(md5(w),1,15))::BIGINT), so the oracles
-#   stay bit-exact. At 60 bits a 10^7-word vocabulary expects ~5e-5
-#   collisions (vs ~2e4 under the old mod-2^31-1 residues) — exact-set
-#   Jaccard is undistorted at web-scale vocabularies. Consumers that
-#   need the universal-hash domain [0, p) (minhash, simhash, shingle
-#   folds) reduce mod p INTERNALLY — their outputs are unchanged,
-#   because (x mod p) of the 60-bit id equals the old mod-p id.
-# - word_id_map / doc_word_ids: dense lexicographic-rank vocabulary.
-#   Kept for tests that want ids in [1, |V|]; its rank window is a
-#   single-partition global sort, so it must never appear in a scale
-#   pipeline (test_plans.py gates contract queries against it).
+# word -> id mapping for arithmetic hashing (word_hash60 /
+# doc_word_ids_hashed). id = first 60 bits of md5(word) — no vocab
+# build, no join, no shuffle, and exactly reproducible in ANSI SQL
+# (DuckDB: ('0x' || substr(md5(w),1,15))::BIGINT), so the oracles stay
+# bit-exact. At 60 bits a 10^7-word vocabulary expects ~5e-5 collisions
+# (vs ~2e4 under mod-2^31-1 residues) — exact-set Jaccard is
+# undistorted at web-scale vocabularies. Consumers that need the
+# universal-hash domain [0, p) (minhash, simhash, shingle folds) reduce
+# mod p INTERNALLY.
 
 def word_hash60(col: Column) -> Column:
     """Word -> bigint id in [0, 2^60): first 15 hex chars of
@@ -167,40 +125,6 @@ def doc_word_ids_hashed(
     zero joins, embarrassingly parallel at any corpus size."""
     return df.select(
         id_col, *extra_cols, F.transform(words(text_col), word_hash60).alias(out_col)
-    )
-
-
-def word_id_map(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Corpus vocabulary: distinct word -> dense id by lexicographic rank.
-
-    NOTE: the rank is a single-partition global sort over the distinct
-    vocabulary — acceptable only for small-corpus fixtures that need
-    dense ids. Scale pipelines use ``doc_word_ids_hashed`` (no vocab
-    build at all); contract queries are plan-gated against this path.
-    """
-    distinct = df.select(F.explode(words(text_col)).alias("word")).distinct()
-    w = Window.orderBy("word")
-    return distinct.withColumn("word_id", F.row_number().over(w).cast("bigint"))
-
-
-def doc_word_ids(
-    df: DataFrame,
-    vocab: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    out_col: str = "word_ids",
-) -> DataFrame:
-    """Map each doc to its ordered array of word ids via explode ->
-    broadcast vocab join -> re-assemble ordered by position."""
-    tokens = df.select(
-        id_col, F.posexplode(words(text_col)).alias("pos", "word")
-    )
-    mapped = tokens.join(F.broadcast(vocab), "word")
-    return (
-        mapped.groupBy(id_col)
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "word_id"))).alias("_pw"))
-        .withColumn(out_col, F.col("_pw.word_id"))
-        .drop("_pw")
     )
 
 

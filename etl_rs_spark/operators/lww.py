@@ -4,23 +4,17 @@ The reference's precedent is Kafka (partition, offset) addressing
 (crates/libs/lib-etl/src/config.rs:10-17) — the winner per ``doc_id`` is
 the event with the greatest ``(lsn, offset)``.
 
-Four physical strategies, same semantics:
+Two physical strategies, same semantics:
 
 - ``lww_window``: row_number over a per-key window. One shuffle, but a
   hot key serializes into a single task — fine for balanced keys.
 - ``lww_agg``: ``max_by(payload_struct, order_struct)`` aggregation.
   Spark plans a partial (map-side) aggregate before the shuffle, so a
   hot key is pre-combined on every input partition — each mapper ships
-  ONE candidate row per key it saw. This is the skew story: the partial
-  agg IS the salted pre-aggregation (an explicit two-phase variant with
-  a hash salt is provided for the case where the optimizer's partial agg
-  is disabled or the combine ratio needs forcing).
-- ``lww_thin``: two-pass shuffle-byte minimizer — a THIN aggregation
-  over (key, order) only decides the winners, then the winner keys are
-  broadcast back against the scan so full payloads never ride the
-  big shuffle. See its docstring for the cost model and when it wins.
+  ONE candidate row per key it saw.
 
-Default everywhere: ``lww_agg``.
+The engine uses ``lww_agg`` everywhere; ``lww_window`` stays as the
+baseline it is measured against.
 """
 
 from __future__ import annotations
@@ -53,85 +47,3 @@ def lww_agg(
     winner = F.max_by(F.struct(*[F.col(c) for c in payload]), ord_struct).alias("_w")
     out = df.groupBy(key).agg(winner)
     return out.select(key, *[F.col(f"_w.{c}").alias(c) for c in payload])
-
-
-def lww_thin(
-    df: DataFrame,
-    key: str = "doc_id",
-    order: tuple[str, ...] = ("lsn", "offset"),
-) -> DataFrame:
-    """Shuffle-thin LWW: decide winners on a KEY-ONLY shuffle, fetch
-    payloads without shuffling them.
-
-    ``lww_agg``'s one shuffle carries a full-payload candidate row per
-    (mapper, key) — with many keys per mapper the partial agg barely
-    combines, so nearly the whole token-array payload crosses the wire.
-    This variant instead:
-
-    1. aggregates ``max(struct(order))`` per key over a projection of
-       ONLY (key, *order) — Catalyst prunes the scan to three small
-       columns, so the big shuffle moves ~30 bytes/row, not the payload;
-    2. broadcasts the winner (key, order) set and inner-joins it back
-       against the scan — the payload side is filtered IN PLACE with
-       zero shuffle (BroadcastHashJoin);
-    3. re-aggregates the joined survivors (exact duplicate deliveries
-       share the winning (lsn, offset) and identical payloads) — a
-       winners-sized payload shuffle, ~n_keys rows instead of n_events.
-
-    Cost model: payload bytes shuffled drop from O(events) to O(keys);
-    the price is a second scan of the source and a broadcast of the
-    winner keys. WINS when events/key is high and the key set fits in
-    executor memory (10^8 keys x ~30B ≈ 3 GB — the practical ceiling);
-    beyond that cardinality the broadcast is infeasible and a shuffle
-    join-back would re-shuffle the payload side anyway, so ``lww_agg``'s
-    single full shuffle is the right plan. The replay bench measures
-    both at two parallelism levels (BENCH/BASELINE.md).
-
-    Note: ``df`` is consumed twice — pass a frame that re-reads cheaply
-    (a parquet scan), not an expensive unpersisted derivation.
-    """
-    payload = [c for c in df.columns if c != key]
-    ord_struct = F.struct(*[F.col(c) for c in order])
-    win_keys = (
-        df.select(key, *order)
-        .groupBy(key)
-        .agg(F.max(ord_struct).alias("_wo"))
-        .select(key, *[F.col(f"_wo.{c}").alias(c) for c in order])
-    )
-    # the join-back must be NULL-SAFE: a key whose winning order tuple
-    # contains NULL (source that doesn't stamp lsn) still wins in
-    # lww_agg's max_by, and a plain equi join (NULL != NULL) would
-    # silently drop it here — diverging from the other strategies.
-    # <=> keys still plan as a BroadcastHashJoin.
-    left, right = df.alias("_l"), win_keys.alias("_r")
-    cond = None
-    for c in [key, *order]:
-        e = F.col(f"_l.{c}").eqNullSafe(F.col(f"_r.{c}"))
-        cond = e if cond is None else cond & e
-    survivors = left.join(F.broadcast(right), on=cond, how="inner").select("_l.*")
-    # duplicate deliveries of the winning event are payload-identical;
-    # one winners-sized agg folds them (same max_by shape as lww_agg)
-    winner = F.max_by(F.struct(*[F.col(c) for c in payload]), ord_struct).alias("_w")
-    out = survivors.groupBy(key).agg(winner)
-    return out.select(key, *[F.col(f"_w.{c}").alias(c) for c in payload])
-
-
-def lww_salted(
-    df: DataFrame,
-    key: str = "doc_id",
-    order: tuple[str, ...] = ("lsn", "offset"),
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Explicit two-phase LWW: partial max per (key, salt), then final max
-    per key. The salt spreads a hot key over ``salt_buckets`` reducers in
-    phase 1; phase 2 re-aggregates ≤ salt_buckets rows per key."""
-    payload = [c for c in df.columns if c != key]
-    ord_struct = F.struct(*[F.col(c) for c in order])
-    winner = F.max_by(F.struct(*[F.col(c) for c in payload]), ord_struct).alias("_w")
-
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64(*[F.col(c) for c in order]), F.lit(salt_buckets)))
-    partial = salted.groupBy(key, "_salt").agg(winner)
-    partial = partial.select(key, *[F.col(f"_w.{c}").alias(c) for c in payload])
-
-    final = partial.groupBy(key).agg(winner)
-    return final.select(key, *[F.col(f"_w.{c}").alias(c) for c in payload])

@@ -10,17 +10,12 @@ semantics (SURVEY.md §2.10), re-expressed over the ``tokens`` payload:
   INVALID and dropped — the etl-rs "null on invalid" rule lifted to the
   row level; deletes carry no payload and are always valid.
 
-Two flavors, parity-tested like the reference's dual transform flavors:
-``normalize_events`` is pure Column expressions (codegen, no Python);
-``normalize_events_pandas`` is the Arrow pandas-UDF flavor
-(mapInPandas) for when per-record logic outgrows expressions.
+Both ``valid_flag`` and ``normalize_events`` are pure Column
+expressions (no Python).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -34,7 +29,7 @@ def valid_flag(df: DataFrame, vocab: int = 50257) -> DataFrame:
     winners are chosen — the O(events) hot path streams no new arrays."""
     # coalesce: exists() over a NULL tokens array is NULL, and a
     # three-valued _valid makes negative filters (~_valid) silently
-    # miss those rows; the pandas flavor yields a plain False
+    # miss those rows
     return df.withColumn(
         "_valid",
         F.coalesce(
@@ -46,8 +41,9 @@ def valid_flag(df: DataFrame, vocab: int = 50257) -> DataFrame:
 
 
 def normalize_events(df: DataFrame, vocab: int = 50257, max_len: int = 2048) -> DataFrame:
-    """Native flavor. Adds ``_valid``; callers filter on it (keeping the
-    invalid rows observable for lineage counters)."""
+    """Clean tokens and recompute ``n_tok``. Adds ``_valid``; callers
+    filter on it (keeping the invalid rows observable for lineage
+    counters)."""
     cleaned = F.slice(
         F.filter("tokens", lambda t: (t >= 0) & (t < F.lit(vocab))), 1, max_len
     )
@@ -63,48 +59,3 @@ def normalize_events(df: DataFrame, vocab: int = 50257, max_len: int = 2048) -> 
         F.coalesce((F.col("op") == "delete") | (F.col("n_tok") > 0), F.lit(False)),
     )
 
-
-def normalize_events_pandas(
-    df: DataFrame, vocab: int = 50257, max_len: int = 2048
-) -> DataFrame:
-    """Arrow pandas-UDF flavor (same semantics; parity-tested)."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    fields = list(df.schema.fields)
-    if "_valid" not in df.columns:
-        fields.append(StructField("_valid", BooleanType()))
-    schema = StructType(fields)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            is_delete = pdf["op"] == "delete"
-
-            def clean(t):
-                if t is None:
-                    return None
-                # null ELEMENTS are legal in array<int>; the native
-                # flavor's F.filter drops them (null predicate), so
-                # drop them here too instead of crashing on 0 <= None
-                return [int(x) for x in t if x is not None and 0 <= x < vocab][:max_len]
-
-            toks = pdf["tokens"].map(clean)
-            toks[is_delete] = None
-            pdf["tokens"] = toks
-            pdf["n_tok"] = toks.map(lambda t: len(t) if t is not None else None).astype("Int32")
-            pdf["_valid"] = is_delete | (pdf["n_tok"].fillna(0) > 0)
-            yield pdf
-
-    return df.mapInPandas(batches, schema)
-
-
-def normalize_py(row: dict, vocab: int = 50257, max_len: int = 2048) -> dict | None:
-    """Scalar oracle used by the pandas replay oracle in tests."""
-    if row["op"] == "delete":
-        return {**row, "tokens": None, "n_tok": None}
-    toks = row.get("tokens")
-    if toks is None:
-        return None
-    cleaned = [int(t) for t in toks if 0 <= t < vocab][:max_len]
-    if not cleaned:
-        return None
-    return {**row, "tokens": cleaned, "n_tok": len(cleaned)}

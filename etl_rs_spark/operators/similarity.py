@@ -1,18 +1,19 @@
 """Approximate-nearest-neighbor search over embedding columns.
 
-Two strategies over ``array<float>`` embeddings:
+Top-k search over ``array<float>`` embeddings:
 
 - ``cosine_topk`` — exact brute force: broadcast the (small) query set
   against the corpus, dot products via zip_with/aggregate (codegen, no
   Python), per-query top-k via window. The baseline and the verifier.
-- ``lsh_topk`` — random-hyperplane LSH: sign-bit bucket per plane group,
-  equi join query->corpus on bucket, rank within bucket. The scale path:
-  corpus is bucketed once (write-time partitioning at 100 TB), probes
-  touch only matching buckets.
+- ``ivf_topk_exact`` — IVF ANN: a deterministic integer Lloyd's coarse
+  quantizer buckets the corpus into cells; each query ranks exactly
+  within its ``n_probe`` nearest cells.
 
-Hyperplanes are deterministic ±1 vectors derived from the same
-arithmetic hash family as dedup_scale (h_j(d) mod 2), so an external
-SQL oracle reproduces bucket ids exactly. Ranking uses the RAW double
+Near-duplicate pairs (``embedding_near_dup_pairs``) bucket by
+random-hyperplane LSH (``lsh_bucket``). Hyperplanes are deterministic
+±1 vectors derived from the same arithmetic hash family as dedup_scale
+(h_j(d) mod 2), so an external SQL oracle reproduces bucket ids
+exactly. Ranking uses the RAW double
 score (exact for the quantized integer vectors the contract queries
 feed in — no cross-engine divergence possible); only the *reported*
 score is rounded to 6 decimals. Ties break on corpus id.
@@ -21,9 +22,8 @@ Scale controls (100 TB):
 - ``auto_n_planes`` derives the plane count from corpus size so the
   expected bucket occupancy stays constant as the corpus grows (fixed
   n_planes means O(n^2 / 2^planes) in-bucket pairs — quadratic);
-- ``lsh_topk`` multiprobes the query's bucket plus its lowest-margin
-  single-bit flips (query-directed multiprobe) to buy recall without
-  shrinking buckets;
+- ``bands_for_recall`` derives the OR-amplification band count that
+  buys a recall floor without shrinking buckets;
 - ``embedding_near_dup_pairs`` takes ``max_bucket_size``: buckets
   larger than the cap are excluded from pairing (the dedup
   ``max_block_size`` rule — a mega-bucket means the planes under-split
@@ -91,7 +91,7 @@ def cosine_topk(
     """Exact top-k cosine neighbors for each query vector.
 
     The query side is broadcast (queries are small by construction; for
-    query sets beyond broadcast size, swap in the LSH path). Excludes
+    query sets beyond broadcast size, use ``ivf_topk_exact``). Excludes
     self-matches. Returns (query_id, neighbor_id, score, rank).
     """
     q = queries.select(
@@ -209,177 +209,6 @@ def lsh_bucket(vec: Column, n_planes: int, dim: int) -> Column:
     return bucket
 
 
-def lsh_probe_buckets(
-    vec: Column, n_planes: int, dim: int, n_probe: int
-) -> Column:
-    """Query-directed multiprobe: the vector's own bucket plus the
-    ``n_probe - 1`` buckets obtained by flipping the sign bits with the
-    SMALLEST projection margins (the planes the vector sits closest to —
-    exactly where a near-neighbor most likely landed on the other side).
-    Returns an array of distinct bucket ids, own bucket first. Pure
-    column algebra; margins order deterministically (tie-break on the
-    flip mask)."""
-    projs = [_plane_projection(vec, j, dim) for j in range(n_planes)]
-    bits = [(p > 0).cast("int") for p in projs]
-    bucket = F.lit(0)
-    for b in bits:
-        bucket = bucket * 2 + b
-    flips = F.array_sort(
-        F.array(
-            *[
-                F.struct(
-                    F.abs(projs[j]).alias("margin"),
-                    F.lit(1 << (n_planes - 1 - j)).alias("mask"),
-                )
-                for j in range(n_planes)
-            ]
-        )
-    )
-    n_flips = min(max(n_probe - 1, 0), n_planes)
-    probes = F.concat(
-        F.array(bucket),
-        F.transform(
-            F.slice(flips, 1, n_flips), lambda s: bucket.bitwiseXOR(s["mask"])
-        ),
-    )
-    return probes
-
-
-def lsh_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    dim: int,
-    k: int = 5,
-    n_planes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-    n_probe: int = 1,
-) -> DataFrame:
-    """ANN top-k: exact ranking restricted to the query's probed LSH
-    buckets.
-
-    The corpus is bucketed by sign-LSH (at scale: a write-time partition
-    column, so a probe reads one partition); each query probes its own
-    bucket plus the ``n_probe - 1`` lowest-margin single-bit flips
-    (lsh_probe_buckets) and query->corpus is an equi join on bucket.
-    A corpus vector lives in exactly one bucket, so probes never produce
-    duplicate (query, neighbor) rows. Recall grows with n_probe at cost
-    proportional to buckets touched — the scale knob that does NOT
-    shrink buckets (vs lowering n_planes, which grows every bucket).
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        norm(F.col(vec_col)).alias("_qn"),
-        F.explode(
-            lsh_probe_buckets(F.col(vec_col), n_planes, dim, n_probe)
-        ).alias("_bucket"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        norm(F.col(vec_col)).alias("_cn"),
-        lsh_bucket(F.col(vec_col), n_planes, dim).alias("_bucket"),
-    )
-    scored = (
-        q.join(c, "_bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "score",
-            _cosine_precomputed(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")),
-        )
-    )
-    scored = _finite_scores(scored)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("score", round_digits).alias("score"), "rank",
-        )
-    )
-
-
-def ivf_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    round_digits: int = 6,
-) -> DataFrame:
-    """IVF (inverted-file) ANN: k-means coarse quantizer -> corpus
-    bucketed by nearest centroid (at 100 TB: a write-time partition
-    column) -> each query probes its ``n_probe`` nearest cells and
-    ranks exactly within them.
-
-    Trains MLlib KMeans on the corpus (seeded, deterministic given
-    fixed input/partitioning). Recall grows with n_probe; n_probe =
-    n_cells degenerates to exact brute force.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    train = corpus.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
-    model = KMeans(k=n_cells, seed=seed, featuresCol="features").fit(train)
-    centroids = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(centroids, "cell int, centroid array<double>")
-
-    def nearest_cells(side: DataFrame, sid: str, n: int) -> DataFrame:
-        """Assign each vector its n nearest centroids via broadcast
-        join + window (no per-row Python)."""
-        d = side.crossJoin(F.broadcast(cent_df)).withColumn(
-            "_dist",
-            F.aggregate(
-                F.zip_with(
-                    F.col(vec_col), "centroid",
-                    lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-                ),
-                F.lit(0.0), lambda acc, x: acc + x,
-            ),
-        )
-        w = Window.partitionBy(sid).orderBy(F.asc("_dist"), F.asc("cell"))
-        return (
-            d.withColumn("_cr", F.row_number().over(w))
-            .filter(F.col("_cr") <= n)
-            .drop("_dist", "_cr", "centroid")
-        )
-
-    c_cells = nearest_cells(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)), "neighbor_id", 1
-    ).withColumnsRenamed({vec_col: "_cv"}).withColumn("_cn", norm(F.col("_cv")))
-    q_cells = nearest_cells(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col)), "query_id", n_probe
-    ).withColumnsRenamed({vec_col: "_qv"}).withColumn("_qn", norm(F.col("_qv")))
-
-    scored = (
-        q_cells.join(c_cells, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "score",
-            _cosine_precomputed(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")),
-        )
-    )
-    scored = _finite_scores(scored)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("score", round_digits).alias("score"), "rank",
-        )
-    )
-
-
 def ann_recall(approx: DataFrame, exact: DataFrame) -> float:
     """Recall of an ANN result against the brute-force truth: the
     fraction of exact (query_id, neighbor_id) pairs the approximate
@@ -391,294 +220,6 @@ def ann_recall(approx: DataFrame, exact: DataFrame) -> float:
     if total == 0:
         return 1.0
     return e.intersect(a).count() / total
-
-
-#: layout-metadata sidecar written next to the bucketed parquet (the
-#: leading underscore keeps Spark's file index from treating it as data)
-LSH_META_FILE = "_lsh_meta.json"
-
-
-def write_lsh_partitioned(
-    df: DataFrame,
-    path: str,
-    dim: int,
-    n_planes: int,
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the corpus in the write-time layout the ANN probes
-    want: parquet partitioned by sign-LSH bucket. At 100 TB this is the
-    difference between a probe reading ONE directory and scanning the
-    corpus.
-
-    The bucket space (n_planes, dim, vec_col) is recorded in a
-    ``_lsh_meta.json`` sidecar so readers validate against the layout
-    that was actually written instead of re-taking the parameters on
-    faith — a mismatched n_planes would compute probe buckets in a
-    different bucket space and silently return wrong/empty neighbors.
-
-    The sidecar goes through the Hadoop FS API (same resolver as the
-    parquet writer), so ``path`` may be any scheme the session can
-    write — local, hdfs://, s3a://."""
-    (
-        df.withColumn("bucket", lsh_bucket(F.col(vec_col), n_planes, dim))
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(path)
-    )
-    _sidecar_write(
-        df.sparkSession, f"{path}/{LSH_META_FILE}",
-        {"n_planes": n_planes, "dim": dim, "vec_col": vec_col},
-    )
-
-
-def read_lsh_meta(path: str, spark=None) -> dict | None:
-    """Load the ``_lsh_meta.json`` layout sidecar (None when absent).
-    Resolved through the Hadoop FS API of the active session so remote
-    schemes work; falls back to local ``open()`` when no session is
-    alive (driver-side tooling inspecting a local layout)."""
-    return _sidecar_read(spark, f"{path}/{LSH_META_FILE}")
-
-
-def _sidecar_write(spark, path_str: str, obj: dict) -> None:
-    """Write a small JSON sidecar THROUGH the Hadoop FileSystem of the
-    session (r4 ADVICE: local ``open()`` silently broke hdfs://s3a://
-    layouts while the parquet half succeeded). One create+write — these
-    are O(100 bytes) layout descriptors, never data."""
-    import json
-
-    fs, hpath = _hadoop_fs(spark, path_str)
-    out = fs.create(hpath, True)
-    try:
-        out.write(bytearray(json.dumps(obj).encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _sidecar_read(spark, path_str: str) -> dict | None:
-    import json
-
-    if spark is None:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-    if spark is None:  # no JVM: local-path tooling fallback
-        import os
-
-        if not os.path.exists(path_str):
-            return None
-        with open(path_str) as f:
-            return json.load(f)
-    fs, hpath = _hadoop_fs(spark, path_str)
-    if not fs.exists(hpath):
-        return None
-    ins = fs.open(hpath)
-    try:
-        baos = spark._jvm.java.io.ByteArrayOutputStream()
-        spark._jvm.org.apache.hadoop.io.IOUtils.copyBytes(ins, baos, 4096, False)
-        data = bytes(baos.toByteArray())
-    finally:
-        ins.close()
-    return json.loads(data.decode("utf-8"))
-
-
-def _hadoop_fs(spark, path_str: str):
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path_str)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
-def lsh_topk_partitioned(
-    spark,
-    path: str,
-    queries: DataFrame,
-    dim: int | None = None,
-    k: int = 5,
-    n_planes: int | None = None,
-    n_probe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str | None = None,
-    round_digits: int = 6,
-) -> DataFrame:
-    """ANN top-k against a bucket-partitioned corpus on storage.
-
-    The query batch's probe buckets (own + lowest-margin flips) are
-    collected — O(n_queries * n_probe) ints, never corpus-sized — and
-    pushed into the scan as a partition filter: the parquet source
-    reads ONLY the probed bucket directories (PartitionFilters in the
-    plan, gated in test_plans.py). Results are identical to lsh_topk
-    on the same corpus/parameters.
-
-    The layout parameters (n_planes, dim, vec_col) default to the
-    ``_lsh_meta.json`` sidecar ``write_lsh_partitioned`` recorded;
-    explicitly passed values are VALIDATED against it — probing a
-    4-plane layout with 5-plane buckets would silently miss every
-    neighbor, so a mismatch raises instead."""
-    meta = read_lsh_meta(path, spark)
-    if meta is not None:
-        for name, passed in (("n_planes", n_planes), ("dim", dim), ("vec_col", vec_col)):
-            if passed is not None and passed != meta[name]:
-                raise ValueError(
-                    f"{name}={passed!r} does not match the written layout "
-                    f"{name}={meta[name]!r} (from {path}/{LSH_META_FILE})"
-                )
-        n_planes = meta["n_planes"]
-        dim = meta["dim"]
-        vec_col = meta["vec_col"]
-    else:
-        if n_planes is None or dim is None:
-            raise ValueError(
-                f"no {LSH_META_FILE} sidecar at {path!r}; pass n_planes and "
-                f"dim explicitly for layouts written by other tools"
-            )
-        vec_col = vec_col or "embedding"
-    # persist: the probe-bucket plan feeds both the wanted-buckets
-    # collect and the probe join — cache the query-batch-sized result
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        norm(F.col(vec_col)).alias("_qn"),
-        F.explode(
-            lsh_probe_buckets(F.col(vec_col), n_planes, dim, n_probe)
-        ).alias("bucket"),
-    ).persist()
-    wanted = sorted({int(r["bucket"]) for r in q.select("bucket").distinct().collect()})
-    # release the cache NOW (r3 ADVICE: repeated probe calls in a
-    # long-lived session accumulated blocks): the wanted-collect was the
-    # only consumer inside this function; when the returned lazy plan
-    # executes it recomputes the query-batch-sized probe frame once —
-    # O(n_queries), never corpus-sized.
-    q.unpersist(blocking=False)
-    c = (
-        spark.read.parquet(path)
-        .filter(F.col("bucket").isin(wanted))  # -> partition pruning
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cv"),
-            norm(F.col(vec_col)).alias("_cn"),
-            "bucket",
-        )
-    )
-    scored = (
-        q.join(c, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "score",
-            _cosine_precomputed(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")),
-        )
-    )
-    scored = _finite_scores(scored)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("score", round_digits).alias("score"), "rank",
-        )
-    )
-
-
-IVF_META_FILE = "_ivf_meta.json"
-
-
-def write_ivf_partitioned(
-    corpus: DataFrame,
-    path: str,
-    n_cells: int = 16,
-    n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[int]]:
-    """Materialize the corpus in the IVF layout the probes want:
-    parquet partitioned by nearest-centroid cell (deterministic integer
-    Lloyd's — the same quantizer as ivf_topk_exact), with the trained
-    centroids + layout parameters in an ``_ivf_meta.json`` sidecar.
-    At 100 TB a probe reads n_probe cell DIRECTORIES instead of
-    scanning the corpus — the same write-time contract as
-    write_lsh_partitioned, with a data-adaptive partitioner. Returns
-    the centroids (driver-side n_cells x dim ints, never O(corpus)).
-    Like its LSH twin, the ``_ivf_meta.json`` sidecar goes through the
-    Hadoop FS API, so ``path`` may be any writable scheme."""
-    cents = _train_integer_lloyds(corpus, n_cells, n_iters, id_col, vec_col)
-    cent_df = _cent_frame(corpus.sparkSession, cents)
-    assigned = _assign_cells(
-        corpus.select(id_col, vec_col), cent_df, 1, id_col, vec_col
-    )
-    (
-        assigned.write.partitionBy("cell")
-        .mode("overwrite")
-        .parquet(path)
-    )
-    _sidecar_write(
-        corpus.sparkSession, f"{path}/{IVF_META_FILE}",
-        {"n_cells": n_cells, "id_col": id_col, "vec_col": vec_col,
-         "centroids": cents},
-    )
-    return cents
-
-
-def ivf_topk_partitioned(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-    round_digits: int = 6,
-) -> DataFrame:
-    """ANN top-k against an IVF-partitioned corpus on storage: each
-    query's n_probe nearest cells are computed against the sidecar's
-    centroids (broadcast, O(n_cells) driver bytes) and pushed into the
-    scan as a partition filter — only the probed cell directories are
-    read. Results equal ivf_topk_exact with the same quantizer."""
-    meta = _sidecar_read(spark, f"{path}/{IVF_META_FILE}")
-    if meta is None:
-        raise ValueError(
-            f"no {IVF_META_FILE} sidecar at {path!r} — was the layout "
-            f"written by write_ivf_partitioned?"
-        )
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    cents = [[int(x) for x in c] for c in meta["centroids"]]
-    cent_df = _cent_frame(spark, cents)
-
-    # persist: the assignment plan (broadcast-centroid cross join +
-    # window) is executed once for the wanted-cells collect and once in
-    # the probe join below — cache the query-batch-sized result instead
-    # of computing it twice
-    q_cells = _assign_cells(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col)),
-        cent_df, n_probe, "query_id", vec_col,
-    ).withColumnsRenamed({vec_col: "_qv"}).withColumn("_qn", norm(F.col("_qv"))).persist()
-    wanted = sorted({int(r["cell"]) for r in q_cells.select("cell").distinct().collect()})
-    # release the cache NOW (r3 ADVICE — see lsh_topk_partitioned): the
-    # returned plan recomputes the query-batch-sized assignment once.
-    q_cells.unpersist(blocking=False)
-    c = (
-        spark.read.parquet(path)
-        .filter(F.col("cell").isin(wanted))  # -> partition pruning
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cv"),
-            norm(F.col(vec_col)).alias("_cn"),
-            "cell",
-        )
-    )
-    scored = (
-        q_cells.join(c, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "score",
-            _cosine_precomputed(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")),
-        )
-    )
-    scored = _finite_scores(scored)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("score", round_digits).alias("score"), "rank",
-        )
-    )
 
 
 def _sq_dist_int(a: Column, b: Column) -> Column:
@@ -714,8 +255,8 @@ def _assign_cells(
 def _train_integer_lloyds(
     corpus: DataFrame, n_cells: int, iters: int, id_col: str, vec_col: str
 ) -> list[list[int]]:
-    """The deterministic integer Lloyd's quantizer shared by
-    ivf_topk_exact and write_ivf_partitioned: init = lowest-id vectors,
+    """The deterministic integer Lloyd's quantizer of ivf_topk_exact:
+    init = lowest-id vectors,
     exact integer distances, ties to the lower cell, floor-mean
     centroid updates (empty cells keep their previous centroid), fixed
     iteration count. Per-iteration driver traffic is n_cells rows."""
@@ -756,9 +297,9 @@ def ivf_topk_exact(
     vec_col: str = "embedding",
     round_digits: int = 6,
 ) -> DataFrame:
-    """IVF ANN with a DETERMINISTIC integer Lloyd's coarse quantizer —
-    the oracle-checkable twin of ``ivf_topk`` (whose MLlib k-means
-    centroids are not SQL-expressible).
+    """IVF ANN with a DETERMINISTIC integer Lloyd's coarse quantizer,
+    so the result is oracle-checkable (a library k-means's centroids
+    are not SQL-expressible).
 
     Over integer-quantized vectors every step is exact integer
     arithmetic: init centroids = the vectors of the ``n_cells`` smallest
@@ -767,9 +308,7 @@ def ivf_topk_exact(
     cells keep their previous centroid); fixed ``iters`` iterations.
     An external SQL engine reproduces the centroids, cells and ranking
     bit-for-bit. Per-iteration driver traffic is n_cells rows (the
-    centroids) — never O(corpus). Training and cell assignment are the
-    shared _train_integer_lloyds / _assign_cells helpers, which
-    write_ivf_partitioned reuses for the write-time-partitioned layout.
+    centroids) — never O(corpus).
     """
     spark = corpus.sparkSession
     cents = _train_integer_lloyds(corpus, n_cells, iters, id_col, vec_col)

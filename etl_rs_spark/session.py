@@ -17,7 +17,21 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def host_cpus() -> int:
+    """Cores this process may run on; ``SPARK_GRAFT_CPUS`` overrides."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def host_driver_mem() -> str:
+    """Driver heap: half of physical RAM (the local-mode driver also runs
+    the executors, and the OS, page cache and Python workers need the
+    rest); ``SPARK_DRIVER_MEM`` overrides."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram // 2**31)}g"
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -57,9 +71,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cores = host_cpus()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
-    shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    shuffle_partitions = shuffle_partitions or cores
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -70,7 +84,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", host_driver_mem())
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

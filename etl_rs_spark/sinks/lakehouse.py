@@ -365,7 +365,7 @@ class LakehouseTable:
         serial pass in front of the merge."""
         man = self.manifest()
         if batch_key in man["committed"]:
-            return {"skipped": True, "version": man["version"]}
+            return {"skipped": True, "version": man["version"], "batch": batch_key}
 
         payload_cols = [
             c for c in changes.columns if c != self.key_col and c not in ENVELOPE_COLS
@@ -516,7 +516,11 @@ class LakehouseTable:
                 batch_key, touched, out_dir, offsets or {}, lineage or {}
             )
             if version is None:  # another writer committed this batch
-                return {"skipped": True, "batch": batch_key}
+                return {
+                    "skipped": True,
+                    "version": self.manifest()["version"],
+                    "batch": batch_key,
+                }
             new_buckets = self.manifest()["buckets"]
         out = {"skipped": False, "version": version, "touched_buckets": touched}
         # MOR maintenance policy: fold deltas once any bucket's live

@@ -5,7 +5,7 @@ Pipeline per micro-batch (or per bounded batch replay):
   events -> skip already-committed offsets (checkpoint resume)
          -> metadata-driven column mapping (schema evolution)
          -> normalize (clip-to-vocab, recompute n_tok, drop invalid)
-         -> LWW per doc_id over (lsn, offset) (salted/partial-agg)
+         -> LWW per doc_id over (lsn, offset) (partial-agg max_by)
          -> idempotent MERGE into the lake table (exactly-once commit)
 
 Lineage counters per batch (north rule): rows_in, dup_deliveries,
@@ -29,7 +29,7 @@ from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from etl_rs_spark.operators.lww import lww_agg, lww_salted, lww_thin
+from etl_rs_spark.operators.lww import lww_agg
 from etl_rs_spark.operators.normalize_cdc import normalize_events, valid_flag
 from etl_rs_spark.sinks.lakehouse import LakehouseTable
 from etl_rs_spark.streaming.schema_evolution import ColumnMapping
@@ -83,14 +83,6 @@ class _AsyncCollect:
 class ReplayConfig:
     vocab: int = 50257
     max_len: int = 2048
-    salted_lww: bool = False
-    salt_buckets: int = 16
-    #: LWW physical strategy: None -> "salted" if salted_lww else "agg";
-    #: "thin" = key-only shuffle + broadcast join-back (operators.lww
-    #: .lww_thin — payload bytes shuffled drop from O(events) to
-    #: O(keys); requires the winner key set to fit in executor memory)
-    lww_strategy: str | None = None
-    collect_lineage: bool = True
     #: drop events at-or-below each partition's committed offset before
     #: merging. ONLY sound when batches arrive in per-partition offset
     #: order (ordered segment replay, a Kafka tail). A file-based
@@ -117,7 +109,7 @@ def process_batch(
     # three redundant JSON loads per trigger on the streaming hot path
     man0 = table.manifest()
     if batch_key in man0["committed"]:
-        return {"skipped": True, "batch": batch_key}
+        return {"skipped": True, "version": man0["version"], "batch": batch_key}
 
     # checkpoint resume: drop events at or below the committed offset of
     # their partition (idempotent MERGE makes this an optimization, but
@@ -183,37 +175,20 @@ def process_batch(
     flagged = valid_flag(events, vocab=cfg.vocab)
     # remaining lineage counters ride ON the merge job itself via
     # Observations — no persist of the full batch, no extra passes.
-    obs_norm = obs_win = None
-    if cfg.collect_lineage:
-        obs_norm = Observation()
-        flagged = flagged.observe(
-            obs_norm,
-            F.sum(F.when(~F.coalesce(F.col("_valid"), F.lit(False)), 1).otherwise(0)).alias("invalid"),
-        )
+    obs_norm = Observation()
+    flagged = flagged.observe(
+        obs_norm,
+        F.sum(F.when(~F.coalesce(F.col("_valid"), F.lit(False)), 1).otherwise(0)).alias("invalid"),
+    )
     valid = flagged.filter("_valid").drop("_valid", "partition")
-    strategy = cfg.lww_strategy or ("salted" if cfg.salted_lww else "agg")
-    if strategy == "salted":
-        winners = lww_salted(
-            valid, key=table.key_col, order=("lsn", "offset"),
-            salt_buckets=cfg.salt_buckets,
-        )
-    elif strategy == "thin":
-        # consumes `valid` twice (winner-key agg + join-back); the
-        # validity flag is a cheap early-exit exists over the scan, and
-        # the payload never rides the big shuffle — see lww_thin
-        winners = lww_thin(valid, key=table.key_col, order=("lsn", "offset"))
-    elif strategy == "agg":
-        winners = lww_agg(valid, key=table.key_col, order=("lsn", "offset"))
-    else:
-        raise ValueError(f"unknown lww_strategy {strategy!r}")
+    winners = lww_agg(valid, key=table.key_col, order=("lsn", "offset"))
     winners = normalize_events(winners, vocab=cfg.vocab, max_len=cfg.max_len).drop("_valid")
-    if cfg.collect_lineage:
-        obs_win = Observation()
-        winners = winners.observe(
-            obs_win,
-            F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("deletes"),
-            F.sum(F.when(F.col("op") != "delete", 1).otherwise(0)).alias("upserts"),
-        )
+    obs_win = Observation()
+    winners = winners.observe(
+        obs_win,
+        F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("deletes"),
+        F.sum(F.when(F.col("op") != "delete", 1).otherwise(0)).alias("upserts"),
+    )
 
     # COW on a NON-EMPTY table consumes winners twice (touched-bucket
     # scan + merge join) — cache the small post-LWW frame only there;
@@ -240,10 +215,7 @@ def process_batch(
         return lin
 
     try:
-        result = table.merge(
-            winners, batch_key, offsets=offsets_fn,
-            lineage=lineage_fn if cfg.collect_lineage else {},
-        )
+        result = table.merge(winners, batch_key, offsets=offsets_fn, lineage=lineage_fn)
     except BaseException:
         # merge died before consuming offsets_fn: stop the orphaned
         # envelope job instead of letting it run to completion for a

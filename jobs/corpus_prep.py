@@ -48,7 +48,7 @@ from etl_rs_spark.operators import dedup_scale as DS
 from etl_rs_spark.operators.graph import dedup_survivors
 from etl_rs_spark.operators.mixing import mix_sample
 from etl_rs_spark.operators.packing import pack_sequences
-from etl_rs_spark.session import get_spark
+from etl_rs_spark.session import get_spark, host_cpus
 
 
 def prep_corpus(
@@ -151,8 +151,7 @@ def main() -> None:
                     help="mix weight per source (repeatable); omit all to skip mixing")
     ap.add_argument("--default-weight", type=float, default=1.0,
                     help="weight for sources not named by --weight")
-    ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=host_cpus())
     ap.add_argument(
         "--no-stage-counts", action="store_true",
         help="skip per-stage row counts (each one recomputes the "

@@ -33,12 +33,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from etl_rs_spark.operators.lww import lww_agg, lww_salted, lww_thin
+from etl_rs_spark.operators.lww import lww_agg
 from etl_rs_spark.operators.normalize_cdc import normalize_events, valid_flag
-from etl_rs_spark.session import force, get_spark
+from etl_rs_spark.session import get_spark, host_cpus
 from etl_rs_spark.sinks.lakehouse import LakehouseTable
 from etl_rs_spark.sources.binlog import BinlogSpec, gen_events
-from etl_rs_spark.streaming.replay import ReplayConfig, process_batch
+from etl_rs_spark.streaming.replay import process_batch
 
 
 def main() -> None:
@@ -46,19 +46,13 @@ def main() -> None:
     ap.add_argument("--events", type=int, default=2_000_000)
     ap.add_argument("--docs", type=int, default=200_000)
     ap.add_argument("--partitions", type=int, default=32)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=host_cpus())
     ap.add_argument(
         "--mode", choices=["merge", "dataflow", "streaming"], default="merge",
         help="streaming = Structured Streaming foreachBatch drain over "
              "segment files (availableNow), exactly-once MERGE per trigger",
     )
     ap.add_argument("--segments", type=int, default=1, help="replay in N ordered batches")
-    ap.add_argument("--salted-lww", action="store_true")
-    ap.add_argument(
-        "--lww", choices=["agg", "salted", "thin"], default=None,
-        help="LWW physical strategy (default: salted if --salted-lww "
-             "else agg); thin = key-only shuffle + broadcast join-back",
-    )
     ap.add_argument("--table-mode", choices=["cow", "mor"], default="cow")
     ap.add_argument("--compact-after", action="store_true",
                     help="run MOR compaction after the replay (timed separately)")
@@ -81,11 +75,6 @@ def main() -> None:
         "--conf", action="append", default=[], metavar="K=V",
         help="extra SparkConf entries (spark-submit style), e.g. "
              "--conf spark.io.compression.codec=zstd",
-    )
-    ap.add_argument(
-        "--stages", action="store_true",
-        help="also time pipeline prefixes (scan / +normalize / +lww) so the "
-             "merge cost decomposes into per-stage attributions",
     )
     args = ap.parse_args()
 
@@ -125,28 +114,6 @@ def main() -> None:
             F.count(F.lit(1)).alias("n"), F.max("lsn").alias("m")
         ).collect()[0]
         n_events, max_lsn = int(stats["n"]), int(stats["m"])
-        stage_sec: dict[str, float] = {}
-        if args.stages:
-            # cumulative pipeline prefixes on the same input (each forced
-            # via the noop sink); deltas attribute cost per stage. Run
-            # BEFORE the timed replay: they also warm the page cache, so
-            # the replay timing below is the steady-state figure.
-            # warm the page cache / JIT first so the FIRST timed stage
-            # doesn't absorb one-off costs the later stages skip
-            force(events)
-            t = time.monotonic()
-            force(events)
-            stage_sec["scan"] = round(time.monotonic() - t, 3)
-            t = time.monotonic()
-            # "normalize" stage = the validity flag (the hot-path
-            # normalize work; full normalize runs post-LWW on winners)
-            force(valid_flag(events).filter("_valid"))
-            stage_sec["scan_normalize"] = round(time.monotonic() - t, 3)
-            t = time.monotonic()
-            v0 = valid_flag(events).filter("_valid").drop("_valid")
-            w0 = lww_agg(v0, key="doc_id")
-            force(normalize_events(w0).drop("_valid"))
-            stage_sec["scan_normalize_lww"] = round(time.monotonic() - t, 3)
 
         t0 = time.monotonic()
         per_partition: list[dict] = []
@@ -157,10 +124,7 @@ def main() -> None:
             # materialization) -> LWW on raw payloads -> normalize only
             # the per-key winners
             valid = valid_flag(events).filter("_valid").drop("_valid")
-            lww_fn = {"salted": lww_salted, "thin": lww_thin}.get(
-                args.lww or ("salted" if args.salted_lww else "agg"), lww_agg
-            )
-            winners = lww_fn(valid, key="doc_id")
+            winners = lww_agg(valid, key="doc_id")
             out = normalize_events(winners).drop("_valid")
             pp = (
                 out.groupBy("partition")
@@ -184,7 +148,6 @@ def main() -> None:
                 spark, lake_path, n_buckets=32, mode=args.table_mode,
                 auto_compact_files=args.auto_compact_files,
             )
-            cfg = ReplayConfig(salted_lww=args.salted_lww, lww_strategy=args.lww)
             if args.mode == "streaming":
                 # materialize segment files (untimed), then time the
                 # exactly-once foreachBatch drain incl. checkpointing
@@ -208,18 +171,18 @@ def main() -> None:
                 t0 = time.monotonic()
                 q = replay_stream(
                     spark, table, f"{seg_root}/seg-*",
-                    os.path.join(seg_root, "_ckpt"), schema, cfg=cfg,
+                    os.path.join(seg_root, "_ckpt"), schema,
                     max_files_per_trigger=max(1, n_files // 8),
                 )
                 q.awaitTermination()
             elif args.segments <= 1:
-                process_batch(table, events, "replay:bulk", cfg=cfg)
+                process_batch(table, events, "replay:bulk")
             else:
                 step = (max_lsn + args.segments - 1) // args.segments
                 for s in range(args.segments):
                     lo, hi = s * step + 1, min((s + 1) * step, max_lsn)
                     seg = events.filter((F.col("lsn") >= lo) & (F.col("lsn") <= hi))
-                    process_batch(table, seg, f"replay:seg-{s}", cfg=cfg)
+                    process_batch(table, seg, f"replay:seg-{s}")
             elapsed = time.monotonic() - t0
             if args.compact_after:
                 t1 = time.monotonic()
@@ -255,7 +218,6 @@ def main() -> None:
             "segments": args.segments,
             "elapsed_sec": round(elapsed, 3),
             "events_per_sec": round(n_events / elapsed, 1),
-            "stage_sec": stage_sec or None,
             "lineage": lineage,
             "per_partition": per_partition,
         }))

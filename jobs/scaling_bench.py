@@ -89,15 +89,11 @@ MODES = ["dataflow", "merge-mor", "merge-cow"]
 HEADLINE = "merge-mor"
 
 
-def run_once(
-    cpus: int, events: int, docs: int, mode: str, binlog: str, stages: bool = False
-) -> dict:
+def run_once(cpus: int, events: int, docs: int, mode: str, binlog: str) -> dict:
     replay_mode, _, table_mode = mode.partition("-")
     cmd = [sys.executable, REPLAY, "--events", str(events), "--docs", str(docs),
            "--cpus", str(cpus), "--mode", replay_mode, "--binlog", binlog,
            "--table-mode", table_mode or "cow"]
-    if stages:
-        cmd.append("--stages")
     out = subprocess.run(cmd, capture_output=True, text=True, check=True, cwd=ROOT)
     last = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
     return json.loads(last)
@@ -142,20 +138,6 @@ def main() -> None:
                       f"{r['events_per_sec']} ev/s ({r['elapsed_sec']}s)",
                       file=sys.stderr)
 
-    # per-stage attribution for the merge modes at the outer levels:
-    # cumulative noop-forced prefixes (scan / +normalize / +lww) next to
-    # the full merge — decomposes the merge cost into dataflow vs
-    # write+commit so a scaling gap can be blamed on the right stage
-    stage_rows: list[tuple[str, int, dict, float]] = []
-    for mode in MODES:
-        if mode == "dataflow":
-            continue
-        for cpus in (LEVELS[0], LEVELS[-1]):
-            r = run_once(cpus, events, docs, mode, binlog_dir, stages=True)
-            stage_rows.append((mode, cpus, r.get("stage_sec") or {}, r["elapsed_sec"]))
-            print(f"[scaling] stages mode={mode} cpus={cpus}: "
-                  f"{r.get('stage_sec')} merge={r['elapsed_sec']}s", file=sys.stderr)
-
     def eff(mode: str, a: int, b: int) -> float:
         return round(
             (results[mode][b]["events_per_sec"] / results[mode][a]["events_per_sec"])
@@ -174,10 +156,6 @@ def main() -> None:
         "scaling_efficiency": {
             m: {f"{a}->{b}": eff(m, a, b) for a, b in PAIRS} for m in results
         },
-        "stage_sec": [
-            {"mode": m, "cpus": c, **st, "full_merge": full}
-            for m, c, st, full in stage_rows
-        ],
     }
     print(json.dumps(summary))
 
@@ -247,28 +225,6 @@ def main() -> None:
             lines.append(
                 f"| {m} | {a} -> {b} | {eff(m, a, b):.3f} | {calib_eff[f'{a}->{b}']:.3f} |"
             )
-    lines += [
-        "",
-        "## Per-stage attribution (merge decomposition)",
-        "",
-        "Cumulative noop-forced prefixes of the same job on the same",
-        "binlog: `scan` -> `+normalize` -> `+LWW` (= the dataflow), then",
-        "the full exactly-once MERGE. The write+commit leg is",
-        "`full_merge - scan_normalize_lww`. This attributes any scaling",
-        "gap to the stage that actually causes it. Stage prefixes and",
-        "the full merge are separate timed runs in one JVM: +-20%",
-        "machine variance means small deltas (incl. slightly negative",
-        "write+commit) read as 'write adds ~0 beyond the dataflow'.",
-        "",
-        "| mode | cpus | scan | +normalize | +LWW | full merge | write+commit |",
-        "|---|---|---|---|---|---|---|",
-    ]
-    for m, c, st, full in stage_rows:
-        wc = full - st.get("scan_normalize_lww", 0)
-        lines.append(
-            f"| {m} | {c} | {st.get('scan', 0):.1f}s | {st.get('scan_normalize', 0):.1f}s "
-            f"| {st.get('scan_normalize_lww', 0):.1f}s | {full:.1f}s | {wc:.1f}s |"
-        )
     lines += [
         "",
         "Per-partition committed offsets, lag and lineage counters are",

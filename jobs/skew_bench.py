@@ -1,14 +1,13 @@
 """Skew evidence: LWW strategies on a hot-key binlog.
 
 Generates a binlog where ~2 doc_ids receive 30% of all events (the
-north rule's "skewed hot doc_ids" case) and times the three LWW
+north rule's "skewed hot doc_ids" case) and times the two LWW
 strategies:
 
 - lww_window  — row_number over a per-key window: the hot key
   serializes into ONE task (the anti-pattern);
 - lww_agg     — max_by with map-side partial aggregation: every mapper
-  pre-combines the hot key to one candidate row (default);
-- lww_salted  — explicit two-phase salt -> re-agg.
+  pre-combines the hot key to one candidate row (the engine's).
 
 Also prints linearity evidence for the 10^10 extrapolation: the same
 merge replay at growing event counts — events/sec should stay flat.
@@ -26,9 +25,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import shutil
 
-from etl_rs_spark.operators.lww import lww_agg, lww_salted, lww_window
+from etl_rs_spark.operators.lww import lww_agg, lww_window
 from etl_rs_spark.operators.normalize_cdc import valid_flag
-from etl_rs_spark.session import get_spark
+from etl_rs_spark.session import get_spark, host_cpus
 from etl_rs_spark.sinks.lakehouse import LakehouseTable
 from etl_rs_spark.sources.binlog import BinlogSpec, gen_events
 from etl_rs_spark.streaming.replay import process_batch
@@ -38,7 +37,7 @@ from etl_rs_spark.session import force as noop  # shared noop-force helper
 
 
 def main() -> None:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = host_cpus()
     spark = get_spark(app_name="skew-bench", master=f"local[{cpus}]",
                       shuffle_partitions=cpus)
     out: dict = {"skew": {}, "linearity": []}
@@ -55,7 +54,7 @@ def main() -> None:
             "_valid", "partition", "ts"
         )
         noop(lww_agg(norm.limit(100_000), key="doc_id"))  # JIT/codegen warmup
-        for name, fn in [("window", lww_window), ("agg", lww_agg), ("salted", lww_salted)]:
+        for name, fn in [("window", lww_window), ("agg", lww_agg)]:
             t0 = time.monotonic()
             noop(fn(norm, key="doc_id"))
             out["skew"][name] = round(time.monotonic() - t0, 2)

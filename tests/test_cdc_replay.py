@@ -1,19 +1,21 @@
 """CDC engine correctness: replay -> final-state equality vs the
 sequential pandas oracle (token-array equality per doc_id), exactly-once,
-checkpoint resume, salting parity, schema evolution, streaming."""
+checkpoint resume, LWW parity, schema evolution, streaming."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from etl_rs_spark.operators.lww import lww_agg, lww_salted, lww_thin, lww_window
-from etl_rs_spark.operators.normalize_cdc import (
-    normalize_events,
-    normalize_events_pandas,
-)
+from etl_rs_spark.operators.lww import lww_agg, lww_window
+from etl_rs_spark.operators.normalize_cdc import normalize_events
 from etl_rs_spark.sinks.lakehouse import LakehouseTable
-from etl_rs_spark.sources.binlog import BinlogSpec, gen_events, write_segments
+from etl_rs_spark.sources.binlog import (
+    BinlogSpec,
+    gen_events,
+    read_offset_range,
+    write_segments,
+)
 from etl_rs_spark.streaming.replay import (
     ReplayConfig,
     process_batch,
@@ -73,6 +75,44 @@ def test_exactly_once_reapply(spark, tmp_path, binlog, oracle_state):
     assert table_state(table.read()) == oracle_state
 
 
+def test_skipped_commit_has_one_result_shape(spark, tmp_path, binlog):
+    """Re-running a committed batch through process_batch or straight
+    through merge returns the same skip result: the batch key and the
+    table's current version."""
+    _, segs, _ = binlog
+    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8)
+    events = spark.read.parquet(segs[0])
+    first = process_batch(table, events, "seg0", cfg=CFG)
+    assert first["skipped"] is False
+    want = {"skipped": True, "version": first["version"], "batch": "seg0"}
+    assert process_batch(table, events, "seg0", cfg=CFG) == want
+    assert table.merge(events, "seg0") == want
+
+
+def test_read_offset_range_is_inclusive(spark, binlog):
+    """read_offset_range returns exactly one partition's events with
+    start <= offset <= end, both bounds included."""
+    path, segs, _ = binlog
+    offsets = sorted({
+        r["offset"] for r in spark.read.parquet(*segs)
+        .filter(F.col("partition") == 1).select("offset").collect()
+    })
+    start, end = offsets[len(offsets) // 4], offsets[3 * len(offsets) // 4]
+
+    def keys(df):
+        return sorted(
+            (r["partition"], r["offset"], r["lsn"])
+            for r in df.select("partition", "offset", "lsn").collect()
+        )
+
+    got = keys(read_offset_range(spark, path, 1, start, end))
+    want = keys(spark.read.parquet(*segs).filter(
+        (F.col("partition") == 1) & F.col("offset").between(start, end)
+    ))
+    assert got == want
+    assert got[0][1] == start and got[-1][1] == end
+
+
 def test_binlog_id_keys_survive_relocation(spark, tmp_path, binlog, oracle_state):
     """A caller-supplied stable binlog_id (r3 ADVICE) keys batches on
     (basename, binlog_id) instead of the absolute-path digest: the same
@@ -123,39 +163,20 @@ def test_lww_flavors_agree(spark, binlog):
     _, segs, _ = binlog
     df = spark.read.parquet(*segs)
     norm = normalize_events(df, VOCAB, MAX_LEN).filter("_valid").drop("_valid", "ts")
-    a = {r["doc_id"]: (r["lsn"], r["offset"]) for r in lww_agg(df=norm).collect()}
-    s = {r["doc_id"]: (r["lsn"], r["offset"]) for r in lww_salted(df=norm).collect()}
-    w = {r["doc_id"]: (r["lsn"], r["offset"]) for r in lww_window(df=norm).collect()}
-    t = {r["doc_id"]: (r["lsn"], r["offset"]) for r in lww_thin(df=norm).collect()}
-    assert a == s == w == t
-    # full-row equality for the thin variant (its join-back path must
-    # return the winner's PAYLOAD, not just its order columns; duplicate
-    # deliveries of the winning event must fold to one row)
+    # full rows: the winner's PAYLOAD must match, not just its order
+    # columns, and duplicate deliveries of the winning event must fold
+    # to one row
     cols = sorted(norm.columns)
-    a_rows = {tuple(r[c] if not isinstance(r[c], list) else tuple(r[c]) for c in cols)
-              for r in lww_agg(df=norm).collect()}
-    t_rows = {tuple(r[c] if not isinstance(r[c], list) else tuple(r[c]) for c in cols)
-              for r in lww_thin(df=norm).collect()}
-    assert a_rows == t_rows
 
+    def rows(out):
+        return sorted(
+            tuple(tuple(r[c]) if isinstance(r[c], list) else r[c] for c in cols)
+            for r in out.collect()
+        )
 
-def test_normalize_flavors_agree(spark, binlog):
-    _, segs, _ = binlog
-    df = spark.read.parquet(*segs).drop("ts")
-    native = normalize_events(df, VOCAB, MAX_LEN)
-    pand = normalize_events_pandas(df, VOCAB, MAX_LEN)
-
-    def canon(d):
-        return {
-            (r["partition"], r["offset"], r["lsn"]): (
-                tuple(r["tokens"]) if r["tokens"] is not None else None,
-                r["n_tok"],
-                r["_valid"],
-            )
-            for r in d.collect()
-        }
-
-    assert canon(native) == canon(pand)
+    a = rows(lww_agg(df=norm))
+    assert len(a) == len({r[cols.index("doc_id")] for r in a})
+    assert a == rows(lww_window(df=norm))
 
 
 def test_valid_flag_matches_normalize_valid(spark, binlog):
@@ -433,9 +454,8 @@ def test_hostile_null_envelopes_commit_and_reconverge(spark, tmp_path):
 
 def test_lww_flavors_agree_on_null_order_columns(spark):
     """A key whose winning (lsn, offset) contains NULLs (a source that
-    doesn't stamp lsn) must not vanish from lww_thin — its join-back is
-    null-safe. All-null, mixed, and no-null keys must agree with
-    lww_agg row-for-row."""
+    doesn't stamp lsn) must not vanish: max_by orders NULL below every
+    value, so all-null, mixed and no-null keys each keep one winner."""
     rows = [
         # duplicate deliveries share the payload (the binlog invariant) —
         # a tie on (NULL, NULL) must fold to one row, not pick between
@@ -457,10 +477,12 @@ def test_lww_flavors_agree_on_null_order_columns(spark):
             r["doc_id"]: (r["lsn"], r["offset"], tuple(r["tokens"]))
             for r in out.collect()
         }
-    a, t = state(lww_agg(df)), state(lww_thin(df))
-    assert set(t) == {"all_null", "mixed", "null_offset", "plain"}
-    assert a == t
-    assert t["mixed"] == (7, 1, (4,)) and t["plain"] == (2, 0, (8,))
+    assert state(lww_agg(df)) == {
+        "all_null": (None, None, (1,)),
+        "mixed": (7, 1, (4,)),
+        "null_offset": (3, 2, (6,)),
+        "plain": (2, 0, (8,)),
+    }
 
 
 def test_bulk_replay_matches_oracle(spark, tmp_path, binlog, oracle_state):
@@ -724,9 +746,8 @@ def test_segment_keys_distinct_across_roots(spark, tmp_path):
 
 
 def test_normalize_handles_null_token_elements(spark):
-    """Null ELEMENTS inside a tokens array: the native flavor's filter
-    drops them; the pandas flavor must match instead of crashing on
-    '0 <= None'. _valid is a real boolean (never NULL) in both."""
+    """Null ELEMENTS inside a tokens array are dropped by the filter,
+    and _valid is a real boolean (never NULL)."""
     df = spark.createDataFrame(
         [
             ("insert", 1, 0, 1, [None, 5], 2),
@@ -735,11 +756,10 @@ def test_normalize_handles_null_token_elements(spark):
         ],
         "op string, lsn long, partition int, offset long, tokens array<int>, n_tok int",
     )
-    for fn in (normalize_events, normalize_events_pandas):
-        rows = {r["lsn"]: r for r in fn(df, VOCAB, MAX_LEN).collect()}
-        assert list(rows[1]["tokens"]) == [5] and rows[1]["_valid"] is True
-        assert rows[2]["_valid"] is False        # plain False, not NULL
-        assert rows[3]["_valid"] is True
+    rows = {r["lsn"]: r for r in normalize_events(df, VOCAB, MAX_LEN).collect()}
+    assert list(rows[1]["tokens"]) == [5] and rows[1]["_valid"] is True
+    assert rows[2]["_valid"] is False        # plain False, not NULL
+    assert rows[3]["_valid"] is True
 
 
 def test_streaming_batch_keys_distinct_across_checkpoints(spark, tmp_path, binlog, oracle_state):

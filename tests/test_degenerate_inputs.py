@@ -10,7 +10,7 @@ from pyspark.sql import functions as F  # noqa: F401
 
 from etl_rs_spark.operators import dedup_scale as ds
 from etl_rs_spark.operators.graph import connected_components, dedup_survivors
-from etl_rs_spark.operators.lww import lww_agg, lww_thin
+from etl_rs_spark.operators.lww import lww_agg
 from etl_rs_spark.operators.mixing import mix_sample
 from etl_rs_spark.operators.normalize_cdc import normalize_events
 from etl_rs_spark.operators.packing import pack_sequences
@@ -48,8 +48,6 @@ CASES = {
     "pack_sequences": lambda s: pack_sequences(
         _empty(s, "doc_id long, tokens array<int>"), 16),
     "lww_agg": lambda s: lww_agg(
-        _empty(s, "doc_id string, lsn long, offset long, tokens array<int>")),
-    "lww_thin": lambda s: lww_thin(
         _empty(s, "doc_id string, lsn long, offset long, tokens array<int>")),
     "normalize_events": lambda s: normalize_events(_empty(s, EVENT_DDL), 50257, 64),
 }

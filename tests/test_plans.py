@@ -109,29 +109,6 @@ def test_no_single_partition_exchange_in_contract_queries(spark):
             assert "NestedLoop" not in p, f"{name} has a nested-loop join"
 
 
-def test_lsh_partitioned_probe_prunes_buckets(spark, tmp_path):
-    """The ANN probe against a bucket-partitioned corpus must push the
-    probed bucket ids into the scan as PartitionFilters — the probe
-    reads only its bucket directories, never the corpus."""
-    from etl_rs_spark.operators import similarity as sim
-    from pyspark.sql import functions as F
-
-    rows = [(i, [float(i % 7) - 3, float(i % 5) - 2, 1.0, 0.5]) for i in range(64)]
-    vecs = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-    path = str(tmp_path / "corpus")
-    sim.write_lsh_partitioned(vecs, path, dim=4, n_planes=3)
-    q = sim.lsh_topk_partitioned(
-        spark, path, vecs.filter(F.col("vec_id") < 2), dim=4, k=3,
-        n_planes=3, n_probe=1,
-    )
-    p = plan_of(q)
-    scan_lines = [l for l in p.splitlines() if "PartitionFilters" in l]
-    assert scan_lines, "corpus scan has no partition filter"
-    # the probed bucket ids reach the scan (IN-list, or an equality
-    # when Catalyst simplifies a single probe)
-    assert any("bucket" in l and "PartitionFilters: []" not in l for l in scan_lines)
-
-
 def test_whole_stage_codegen_on_transforms(spark):
     """The expression-flavor transforms stay inside WholeStageCodegen
     (no Python eval nodes in the plan)."""

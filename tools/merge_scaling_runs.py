@@ -6,8 +6,7 @@ Why this exists: single-JVM runs on this VM swing ±30% with machine
 phase, so since round 3 the published scaling evidence is the best of
 two full generator runs (3 interleaved reps each, ~30 min apart) —
 six samples per cell — judged against the calibration ceilings of the
-sessions that produced them. The per-stage attribution table is taken
-from whichever run produced the faster full merge at each (mode, cpus).
+sessions that produced them.
 
 Usage:
     python tools/merge_scaling_runs.py run1.json run2.json [round_label]
@@ -41,27 +40,6 @@ def main(run1_path: str, run2_path: str, label: str = "round 4") -> None:
         m: {f"{a}->{b}": round((best[m][b] / best[m][a]) / (b / a), 3) for a, b in pairs}
         for m in modes
     }
-    # stage rows per (mode, cpus): prefer MONOTONE attributions (full
-    # merge >= its own LWW prefix — a prefix timed in a slower machine
-    # phase than the full run produces a meaningless negative residual),
-    # then the faster full merge among those
-    stages: dict[tuple[str, int], dict] = {}
-
-    def better(new: dict, old: dict | None) -> bool:
-        if old is None:
-            return True
-        new_mono = new["full_merge"] >= new.get("scan_normalize_lww", 0)
-        old_mono = old["full_merge"] >= old.get("scan_normalize_lww", 0)
-        if new_mono != old_mono:
-            return new_mono
-        return new["full_merge"] < old["full_merge"]
-
-    for run in (r1, r2):
-        for row in run.get("stage_sec", []):
-            key = (row["mode"], row["cpus"])
-            if better(row, stages.get(key)):
-                stages[key] = row
-
     ts = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
     cal = lambda run, kind, p: run[f"{kind}_calibration_efficiency"][p]
     L = [
@@ -146,27 +124,6 @@ def main(run1_path: str, run2_path: str, label: str = "round 4") -> None:
         "remove exactly this ceiling. See SCALE_EVIDENCE.md for the",
         "write+commit isolation that pins the non-dataflow constant to",
         "0.6-1.7s and the round-4 LWW strategy A/B.",
-        "",
-        "## Per-stage attribution (merge decomposition)",
-        "",
-        "Cumulative noop-forced prefixes of the same job on the same",
-        "binlog: `scan` -> `+normalize` -> `+LWW` (= the dataflow), then",
-        "the full exactly-once MERGE; faster-of-both-sessions per row.",
-        "Stage prefixes and the full merge are separate timed runs in one",
-        "JVM: ±20-30% machine variance means `full - prefix` reads as an",
-        "upper bound on write+commit (the isolated measurement in",
-        "SCALE_EVIDENCE.md is the accurate one).",
-        "",
-        "| mode | cpus | scan | +normalize | +LWW | full merge | full - LWW prefix |",
-        "|---|---|---|---|---|---|---|",
-    ]
-    for (m, c), row in sorted(stages.items()):
-        wc = row["full_merge"] - row.get("scan_normalize_lww", 0)
-        L.append(
-            f"| {m} | {c} | {row.get('scan',0):.1f}s | {row.get('scan_normalize',0):.1f}s "
-            f"| {row.get('scan_normalize_lww',0):.1f}s | {row['full_merge']:.1f}s | {wc:.1f}s |"
-        )
-    L += [
         "",
         "10^10-event scale is evidenced by sustained-rate extrapolation:",
         "the generator is lazy (`spark.range`-derived, never materialized)",

@@ -33,7 +33,7 @@ from etl_rs_spark.operators import dedup_scale as DS
 from etl_rs_spark.operators import similarity as SIM
 from etl_rs_spark.operators.lww import lww_agg
 from etl_rs_spark.operators.normalize_cdc import normalize_events, valid_flag
-from etl_rs_spark.session import force, get_spark, host_cpus
+from etl_rs_spark.session import force, get_spark, host_cpus, host_driver_mem
 from etl_rs_spark.sinks.lakehouse import LakehouseTable
 from etl_rs_spark.sources.binlog import BinlogSpec, gen_events
 from etl_rs_spark.streaming.replay import process_batch
@@ -410,6 +410,7 @@ def main() -> None:
                 replay["events_per_sec_merge"] * mem_sec, 1
             ),
             "cpus": cpus,
+            "driver_mem": host_driver_mem(),
         }
         print(json.dumps(out))
     finally:

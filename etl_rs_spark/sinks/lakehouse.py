@@ -6,16 +6,19 @@ Iceberg runtime jar, so the same semantics are implemented on plain
 parquet + an atomic manifest-swap commit protocol (the shape of an
 Iceberg snapshot commit):
 
-- ``data/v{N}/_bucket={B}/*.parquet`` — immutable data files, hash-
-  bucketed by ``pmod(murmur3(key), n_buckets)`` (Spark's own shuffle
-  hash — see ``_bucket``; the manifest records the hash family and
-  ``open`` refuses a mismatch). A MERGE rewrites ONLY
-  the buckets touched by the batch (Iceberg copy-on-write at bucket
-  granularity); untouched buckets keep their existing files.
+- ``data/v{N}-{id}/_bucket={B}/*.parquet`` — immutable data files,
+  hash-bucketed by ``pmod(murmur3(key), n_buckets)`` (Spark's own
+  shuffle hash — see ``_bucket``; the manifest records the hash family
+  and ``open`` refuses a mismatch). A MERGE only appends the batch's
+  delta files to their buckets (Iceberg merge-on-read); readers
+  LWW-resolve each key across a bucket's files, and ``compact()`` folds
+  the deltas back into one base per bucket.
 - ``_snapshots/v{N}.json`` — the manifest: schema, per-bucket file
   lists, committed batch ids, per-partition committed offsets, lineage
-  counters. Written via exclusive create; ``_snapshots/CURRENT`` is
-  swapped by atomic rename. Readers see v{N} or v{N+1}, never a blend.
+  counters. Linked by exclusive create only after its data files are
+  durable, so every linked version is committed; ``_snapshots/CURRENT``
+  is a hint the reader scans forward from. Readers see v{N} or
+  v{N+1}, never a blend.
 
 Exactly-once: a batch key already present in ``committed`` is skipped
 (the reference is at-least-once via Kafka auto-commit,
@@ -37,6 +40,7 @@ snapshot scan.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import uuid
@@ -60,23 +64,24 @@ BUCKET_HASH = "murmur3-pmod"
 
 
 class ConcurrentCommitError(RuntimeError):
-    """Another writer claimed the snapshot version this commit targeted
-    (optimistic concurrency, Iceberg-style). The losing attempt's data
-    files are orphans (never referenced by any manifest) and the table
-    state is untouched — re-run the operation against the fresh
-    manifest; merge() is idempotent under its batch-key guard, and MOR
-    merges rebase-and-retry internally before surfacing this."""
+    """A commit could not be applied (optimistic concurrency,
+    Iceberg-style): either a file it rewrites was already removed by a
+    concurrent rewrite, or it lost 10 version races in a row. Merges and
+    compactions rebase onto a concurrent commit internally; only these
+    cases surface. The losing attempt's data files are orphans (never
+    referenced by any manifest) and the table state is untouched —
+    re-run the operation; merge() is idempotent under its batch-key
+    guard."""
 
 
 class LakehouseTable:
-    """``mode="cow"`` (copy-on-write, default): a MERGE rewrites every
-    bucket the batch touches; reads are plain scans. ``mode="mor"``
-    (merge-on-read): a MERGE only APPENDS the batch's delta files to
-    their buckets; readers LWW-resolve (max (_lsn,_offset) per key)
-    across base+delta files, and ``compact()`` folds deltas back into
-    one base per bucket. MOR turns the per-batch write cost from
-    O(table) to O(batch) — the Iceberg MOR/positional-delete shape —
-    at the price of an agg at read time until compaction."""
+    """Merge-on-read lake table: a MERGE only APPENDS the batch's delta
+    files to their buckets; readers LWW-resolve (max (_lsn,_offset) per
+    key) across base+delta files, and ``compact()`` folds deltas back
+    into one base per bucket. The per-batch write cost is O(batch), not
+    O(table) — the Iceberg MOR/positional-delete shape — at the price
+    of an agg at read time until compaction (``auto_compact_files``
+    bounds it)."""
 
     def __init__(
         self,
@@ -84,15 +89,15 @@ class LakehouseTable:
         path: str,
         key_col: str = "doc_id",
         n_buckets: int = 16,
-        mode: str = "cow",
+        mode: str = "mor",
         auto_compact_files: int | None = None,
     ):
-        """``auto_compact_files``: MOR maintenance policy — after a merge
+        """``auto_compact_files``: the maintenance policy — after a merge
         commit, if any bucket holds more than this many live files,
         ``compact()`` runs as its own follow-up snapshot commit. Bounds
-        read amplification (a MOR read scans base + every delta file and
+        read amplification (a read scans base + every delta file and
         pays an LWW agg over all of them) without a caller-managed
-        maintenance schedule. Unlike the LAYOUT fields (mode/n_buckets,
+        maintenance schedule. Unlike the LAYOUT fields (key_col/n_buckets,
         manifest-authoritative — changing them would corrupt bucket
         placement), this is pure maintenance policy: passing a non-None
         value when opening an existing table ADOPTS it immediately and
@@ -103,15 +108,24 @@ class LakehouseTable:
         is an ordinary optimistic snapshot commit, so readers see either
         the pre- or post-compaction version, never a blend, and a
         concurrent writer losing the version race simply retries against
-        the compacted manifest."""
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
+        the compacted manifest.
+
+        ``mode`` accepts only ``"mor"``: copy-on-write was removed. A
+        table whose manifest records ``"mode": "cow"`` opens as
+        merge-on-read — its files already hold one row per key per
+        bucket, a valid base layout."""
+        if mode != "mor":
+            raise ValueError(
+                f"mode={mode!r}: copy-on-write was removed; 'mor' "
+                f"(merge-on-read, compacted by auto_compact_files) is the "
+                f"only write path"
+            )
         self.spark = spark
         self.path = path
         self.key_col = key_col
         self.n_buckets = n_buckets
         os.makedirs(self._snap_dir, exist_ok=True)
-        if not os.path.exists(self._current_path):
+        if not os.path.exists(self._manifest_path(0)):
             try:
                 self._write_manifest(
                     {
@@ -142,7 +156,6 @@ class LakehouseTable:
         # 16-bucket table) must not make merge() compute touched buckets
         # in the wrong bucket space — existing rows would sit in
         # unscanned buckets and never LWW-resolve (silent duplicates).
-        self.mode = man.get("mode", "cow")
         self.key_col = man.get("key_col", key_col)
         self.n_buckets = int(man.get("n_buckets", n_buckets))
         # maintenance policy, not layout: an explicit constructor value
@@ -173,16 +186,28 @@ class LakehouseTable:
     def _current_path(self) -> str:
         return os.path.join(self._snap_dir, "CURRENT")
 
+    def _manifest_path(self, version: int) -> str:
+        return os.path.join(self._snap_dir, f"v{version}.json")
+
     def manifest(self) -> dict:
+        """The newest committed snapshot's manifest. CURRENT is a hint:
+        the scan moves forward from it while ``v{N+1}.json`` exists,
+        which is safe because a version is linked only after its data
+        is durable. A pointer that lags (a writer died before moving it)
+        or was moved backwards therefore never hides a commit."""
         try:
             with open(self._current_path) as f:
                 version = int(f.read().strip())
+        except FileNotFoundError:
+            version = 0  # v0's creator has not moved the pointer yet
         except ValueError as e:
             # CURRENT is written via atomic rename, so garbage here means
             # external corruption — name the file, don't leak int()'s error
             raise ValueError(
                 f"corrupt CURRENT pointer at {self._current_path!r}: {e}"
             ) from e
+        while os.path.exists(self._manifest_path(version + 1)):
+            version += 1
         return self.manifest_at(version)
 
     def manifest_at(self, version: int) -> dict:
@@ -190,7 +215,7 @@ class LakehouseTable:
         manifest (and its immutable data files) stays on disk, so any
         historical snapshot can be read back — Iceberg-style time
         travel."""
-        path = os.path.join(self._snap_dir, f"v{version}.json")
+        path = self._manifest_path(version)
         if not os.path.exists(path):
             raise ValueError(f"no snapshot v{version} at {self.path!r}")
         try:
@@ -199,47 +224,31 @@ class LakehouseTable:
         except json.JSONDecodeError as e:
             # manifests are written tmp+link (never partially visible), so
             # a parse failure means disk-level corruption — say which
-            # snapshot file, so the operator can roll CURRENT back a version
+            # snapshot file, so the operator can move it aside
             raise ValueError(f"corrupt manifest {path!r}: {e}") from e
 
     def _write_manifest(self, man: dict, version: int) -> None:
-        final = os.path.join(self._snap_dir, f"v{version}.json")
+        final = self._manifest_path(version)
         tmp = final + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump(man, f)
-        # exclusive commit: os.link fails if v{N}.json already exists —
-        # either a concurrent writer claimed the version, or a previous
-        # writer crashed between its link and its CURRENT swap
+        # exclusive commit: os.link fails if v{N}.json already exists,
+        # i.e. another writer claimed the version
         try:
             os.link(tmp, final)
         except FileExistsError:
-            os.unlink(tmp)
-            # the existing v{N}.json is FULLY durable (data written and
-            # manifest linked before any pointer move), so if CURRENT
-            # still lags we COMPLETE that commit's pointer swap here —
-            # without this, every later commit recomputes version N and
-            # re-collides, wedging the table permanently
-            if self._current_version() < version:
-                self._swap_current(version)
             raise ConcurrentCommitError(
                 f"snapshot v{version} at {self.path!r} was claimed by "
                 f"another commit; re-run against the fresh manifest"
-            )
-        os.unlink(tmp)
-        self._swap_current(version)
-
-    def _swap_current(self, version: int) -> None:
+            ) from None
+        finally:
+            os.unlink(tmp)
+        # the pointer only saves readers a forward scan (see manifest),
+        # so a racing writer moving it backwards is harmless
         cur_tmp = self._current_path + f".tmp-{uuid.uuid4().hex}"
         with open(cur_tmp, "w") as f:
             f.write(str(version))
         os.rename(cur_tmp, self._current_path)  # atomic swap
-
-    def _current_version(self) -> int:
-        try:
-            with open(self._current_path) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return -1
 
     # -- read ----------------------------------------------------------------
 
@@ -247,7 +256,7 @@ class LakehouseTable:
         """Bucket id = pmod(murmur3(key), n_buckets) — DELIBERATELY the
         same hash family Spark's own shuffle partitioner uses
         (HashPartitioning = pmod(Murmur3Hash, n)). Consequence: the
-        upstream LWW groupBy / merge join, which shuffle on the key,
+        upstream LWW groupBy, which shuffles on the key,
         leave every bucket's rows CO-LOCATED in one task whenever the
         shuffle partition count and n_buckets divide each other — so the
         bucketed write below needs NO extra repartition (one full-payload
@@ -257,7 +266,7 @@ class LakehouseTable:
     def _bucket_aligned(self) -> bool:
         """True when the session's shuffle partition count and n_buckets
         divide each other — the condition under which an upstream
-        key-shuffle (LWW groupBy / merge join) leaves every bucket's rows
+        key-shuffle (the LWW groupBy) leaves every bucket's rows
         co-located in a bounded number of tasks, so the bucketed write
         needs no extra repartition.
 
@@ -267,12 +276,10 @@ class LakehouseTable:
         never SPLITS a bucket across tasks; the dynamic partitionBy
         still emits at most one file per (bucket, task-holding-it), and
         that count only shrinks under coalescing. The one AQE rule that
-        can split a bucket is the skew-join handler on the COW merge
-        join (OptimizeSkewedJoin duplicates a skewed partition's rows
-        across tasks) — a few extra files in the skewed bucket for that
-        commit, folded by the next rewrite of the bucket; routing stays
-        correct because partitionBy keys on the _bucket VALUE, not the
-        task."""
+        can split a partition, the skew-join handler, has no join to act
+        on: the write path's only shuffle is the LWW aggregate. Routing
+        would stay correct regardless, because partitionBy keys on the
+        _bucket VALUE, not the task."""
         try:
             sp = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         except Exception:
@@ -290,17 +297,33 @@ class LakehouseTable:
             return df
         return df.repartition(self.n_buckets, F.col("_bucket"))
 
-    def _new_data_dir(self, version: int) -> str:
-        """Writer-unique data directory for one commit attempt:
-        ``data/v{N}-{uuid}``. Two writers racing the same target version
-        then write to DIFFERENT directories, so the loser's
-        mode('overwrite') cannot delete files a winner's committed
-        manifest already references — the os.link manifest guard stays
-        the sole arbiter (Iceberg gets the same property from unique
-        data file names). A losing attempt leaves an orphan directory;
-        harmless, removable by any GC that keeps directories referenced
-        by retained manifests."""
-        return os.path.join(self.path, "data", f"v{version}-{uuid.uuid4().hex[:8]}")
+    def _write_buckets(self, df: DataFrame, version: int) -> dict[str, list[str]]:
+        """Bucket-partitioned write of ``df`` (carrying ``_bucket``) into a
+        writer-unique ``data/v{N}-{uuid}``; returns the new files per
+        bucket. Two writers racing the same target version write to
+        DIFFERENT directories, so the loser's mode('overwrite') cannot
+        delete files a winner's committed manifest already references —
+        the os.link manifest guard stays the sole arbiter (Iceberg gets
+        the same property from unique data file names). A losing attempt
+        leaves an orphan directory; harmless, removable by any GC that
+        keeps directories referenced by retained manifests.
+
+        Aligned shuffle conf -> no repartition: the input arrives
+        key-shuffled and _bucket is the same Murmur3 family, so the
+        dynamic partitionBy emits ~1 file per bucket per task holding
+        it. Misaligned callers get one repartition instead of tasks x
+        buckets small files."""
+        out_dir = os.path.join(self.path, "data", f"v{version}-{uuid.uuid4().hex[:8]}")
+        self._bucket_colocated(df).write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
+        return {
+            d.split("=", 1)[1]: [
+                os.path.join(out_dir, d, f)
+                for f in os.listdir(os.path.join(out_dir, d))
+                if f.endswith(".parquet")
+            ]
+            for d in os.listdir(out_dir)
+            if d.startswith("_bucket=")
+        }
 
     def _full_schema_ddl(self, man: dict) -> str:
         cols = [f"`{self.key_col}` string"]
@@ -327,16 +350,17 @@ class LakehouseTable:
 
         return lww_agg(df, key=self.key_col, order=("_lsn", "_offset"))
 
+    def _resolved(self, man: dict) -> DataFrame:
+        """Every live file of ``man``, LWW-resolved to one row per key."""
+        files = [f for fl in man["buckets"].values() for f in fl]
+        return self._resolve(self._read_files(man, files))
+
     def read(self, include_meta: bool = False, version: int | None = None) -> DataFrame:
         """Snapshot scan; ``version`` time-travels to any committed
         snapshot (data files are immutable and manifests are retained,
         so an old version reads exactly what it read when current)."""
         man = self.manifest() if version is None else self.manifest_at(version)
-        files = [f for fl in man["buckets"].values() for f in fl]
-        df = self._read_files(man, files)
-        if self.mode == "mor":
-            df = self._resolve(df)
-        df = df.filter(~F.col("_deleted"))
+        df = self._resolved(man).filter(~F.col("_deleted"))
         return df if include_meta else df.drop(*META_COLS)
 
     def committed_offsets(self) -> dict[int, int]:
@@ -355,7 +379,8 @@ class LakehouseTable:
         lineage: dict[str, int] | "Callable[[], dict[str, int]]" | None = None,
     ) -> dict:
         """MERGE one LWW-resolved change batch (one row per key; columns:
-        key_col, op, lsn, offset, payload...). Returns commit info.
+        key_col, op, lsn, offset, payload...) by appending it as a delta.
+        Returns commit info.
 
         ``lineage`` and ``offsets`` may be callables resolved AFTER the
         data write and before the manifest commit — this lets callers
@@ -367,30 +392,14 @@ class LakehouseTable:
         if batch_key in man["committed"]:
             return {"skipped": True, "version": man["version"], "batch": batch_key}
 
-        payload_cols = [
-            c for c in changes.columns if c != self.key_col and c not in ENVELOPE_COLS
-        ]
-        # additive schema evolution: append never-seen payload columns.
-        # A KNOWN column arriving with a DIFFERENT type is rejected
-        # loudly: writing it as-is would commit mixed-type files that
-        # poison every later mergeSchema read ("Failed to merge
-        # incompatible data types") after the bad batch is already
-        # durable — evolution here is additive, never type-changing.
-        known = dict(man["payload_schema"])
         chg_types = dict(changes.dtypes)
-        new_schema = list(man["payload_schema"])
-        for c in payload_cols:
-            if c not in known:
-                new_schema.append([c, chg_types[c]])
-            elif chg_types[c] != known[c]:
-                raise ValueError(
-                    f"payload column {c!r} arrives as {chg_types[c]} but the "
-                    f"table records {known[c]}; additive evolution cannot "
-                    f"change a column's type — cast the batch or add a new "
-                    f"column"
-                )
-        man["payload_schema"] = new_schema
-        target_payload = [n for n, _ in new_schema]
+        batch_schema = [
+            [c, chg_types[c]]
+            for c in changes.columns
+            if c != self.key_col and c not in ENVELOPE_COLS
+        ]
+        # refuses a type change BEFORE anything is written
+        schema = _widen(man["payload_schema"], batch_schema)
 
         chg = changes.withColumn("_bucket", self._bucket(F.col(self.key_col)))
         chg = (
@@ -398,139 +407,43 @@ class LakehouseTable:
             .withColumn("_offset", F.col("offset").cast("bigint"))
             .withColumn("_deleted", F.col("op") == "delete")
         )
-        for n, t in new_schema:  # null-fill payload columns absent in batch
+        for n, t in schema:  # null-fill payload columns absent in batch
             if n not in chg.columns:
                 chg = chg.withColumn(n, F.lit(None).cast(t))
-        chg = chg.select(self.key_col, *target_payload, *META_COLS, "_bucket")
-
-        table_empty = not any(man["buckets"].values())
-        if self.mode == "mor":
-            # merge-on-read: the batch IS the delta — append its files,
-            # never read or rewrite existing data. O(batch) write cost.
-            merged = chg
-            touched = None
-        elif table_empty:
-            # bulk fast path (initial load / bench bulk replay): no
-            # current rows can conflict, so skip BOTH the touched-bucket
-            # pre-scan and the full-outer join — one shuffle, one write.
-            merged = chg
-            touched = None  # derived from the write output below
-        else:
-            touched = sorted(
-                r["_bucket"] for r in chg.select("_bucket").distinct().collect()
-            )
-            cur_files = [f for b in touched for f in man["buckets"].get(str(b), [])]
-            cur = self._read_files(man, cur_files)
-
-            # NULL-key rows bypass the join: a full-outer on key never
-            # matches NULL, and the take_new NULL-guard would then emit
-            # an all-NULL husk (payload and _deleted silently discarded)
-            # instead of the row. Stored verbatim, matching the MOR and
-            # empty-table paths — NULL keys are never LWW-resolved.
-            null_new = chg.filter(F.col(self.key_col).isNull())
-            chg = chg.filter(F.col(self.key_col).isNotNull())
-
-            c, n = cur.alias("c"), chg.alias("n")
-            joined = c.join(n, on=F.col(f"c.{self.key_col}") == F.col(f"n.{self.key_col}"), how="full_outer")
-            take_new = F.col(f"c.{self.key_col}").isNull() | (
-                F.struct(F.col("n._lsn"), F.col("n._offset"))
-                > F.struct(F.col("c._lsn"), F.col("c._offset"))
-            )
-            take_new = F.col(f"n.{self.key_col}").isNotNull() & take_new
-            merged_cols = [
-                F.coalesce(F.col(f"n.{self.key_col}"), F.col(f"c.{self.key_col}")).alias(self.key_col)
-            ]
-            for col in target_payload + META_COLS:
-                merged_cols.append(
-                    F.when(take_new, F.col(f"n.{col}")).otherwise(F.col(f"c.{col}")).alias(col)
-                )
-            merged = joined.select(*merged_cols)
-            merged = merged.withColumn(
-                "_bucket", self._bucket(F.col(self.key_col))
-            ).unionByName(null_new)
-
-        version = man["version"] + 1
-        out_dir = self._new_data_dir(version)
-        # aligned shuffle conf -> no repartition before the bucketed
-        # write: the batch arrives key-shuffled (LWW agg or merge join),
-        # and _bucket is the same Murmur3 family as that shuffle, so
-        # buckets are already co-located — the dynamic partitionBy sorts
-        # within tasks and emits ~1 file per bucket. Misaligned callers
-        # get one repartition instead of tasks x buckets small files.
-        (
-            self._bucket_colocated(merged).write.partitionBy("_bucket")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        if touched is None:
-            touched = sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(out_dir)
-                if d.startswith("_bucket=")
-            )
-
-        new_buckets = dict(man["buckets"])
-        for b in touched:
-            bdir = os.path.join(out_dir, f"_bucket={b}")
-            files = (
-                [os.path.join(bdir, f) for f in os.listdir(bdir) if f.endswith(".parquet")]
-                if os.path.isdir(bdir)
-                else []
-            )
-            if self.mode == "mor":
-                # append the delta; existing base/delta files stay live
-                new_buckets[str(b)] = new_buckets.get(str(b), []) + files
-            else:
-                new_buckets[str(b)] = files
-        man["buckets"] = new_buckets
+        chg = chg.select(self.key_col, *[n for n, _ in schema], *META_COLS, "_bucket")
+        # the batch IS the delta: append its files, never read or
+        # rewrite existing data — O(batch) write cost
+        added = self._write_buckets(chg, man["version"] + 1)
 
         if callable(lineage):
             lineage = lineage()  # post-write: observations have landed
         if callable(offsets):
             offsets = offsets()  # post-write: the concurrent job joined
-        for p, o in (offsets or {}).items():
-            k = str(p)
-            man["offsets"][k] = max(int(man["offsets"].get(k, -1)), int(o))
-        cum = man["lineage"]
-        for k, v in (lineage or {}).items():
-            cum[k] = int(cum.get(k, 0)) + int(v)
-        man["committed"].append(batch_key)
-        man["history"] = (man["history"] + [{"batch": batch_key, "version": version, "lineage": lineage or {}}])[-100:]
-        man["version"] = version
-        # persist the in-session maintenance policy (see __init__: an
-        # explicit constructor value overrides the manifest's)
-        man["auto_compact_files"] = self.auto_compact_files
-        try:
-            self._write_manifest(man, version)
-        except ConcurrentCommitError:
-            if self.mode != "mor":
-                # COW rewrote whole buckets from a now-STALE base — the
-                # written files may be missing the winner's rows, so a
-                # manifest-level rebase would lose data. The caller
-                # re-runs merge(); the batch-key guard makes that safe.
-                raise
-            # MOR only APPENDS delta files, so the commit rebases onto
-            # the fresh manifest: same files, new version. offsets and
-            # lineage are resolved dicts by now — reapplied fresh.
-            version = self._rebase_mor_commit(
-                batch_key, touched, out_dir, offsets or {}, lineage or {}
-            )
-            if version is None:  # another writer committed this batch
-                return {
-                    "skipped": True,
-                    "version": self.manifest()["version"],
-                    "batch": batch_key,
-                }
-            new_buckets = self.manifest()["buckets"]
-        out = {"skipped": False, "version": version, "touched_buckets": touched}
-        # MOR maintenance policy: fold deltas once any bucket's live
-        # file count exceeds the threshold — a SEPARATE follow-up
-        # snapshot commit, after the batch is already durable, so a
-        # compaction failure never loses the merge
-        if (
-            self.mode == "mor"
-            and self.auto_compact_files
-            and any(len(fl) > self.auto_compact_files for fl in new_buckets.values())
+        lineage, offsets = lineage or {}, offsets or {}
+
+        def mutate(m: dict) -> None:
+            m["payload_schema"] = _widen(m["payload_schema"], batch_schema)
+            for p, o in offsets.items():
+                m["offsets"][str(p)] = max(int(m["offsets"].get(str(p), -1)), int(o))
+            for k, v in lineage.items():
+                m["lineage"][k] = int(m["lineage"].get(k, 0)) + int(v)
+            m["committed"].append(batch_key)
+            self._replace_files(m, batch_key, added, lineage=lineage)
+
+        man = self._commit(man, mutate, batch_key)
+        if man is None:  # another writer committed this batch
+            return {"skipped": True, "version": self.manifest()["version"], "batch": batch_key}
+        out = {
+            "skipped": False,
+            "version": man["version"],
+            "touched_buckets": sorted(int(b) for b in added),
+        }
+        # maintenance policy: fold deltas once any bucket's live file
+        # count exceeds the threshold — a SEPARATE follow-up snapshot
+        # commit, after the batch is already durable, so a compaction
+        # failure never loses the merge
+        if self.auto_compact_files and any(
+            len(fl) > self.auto_compact_files for fl in man["buckets"].values()
         ):
             try:
                 c = self.compact()
@@ -546,113 +459,89 @@ class LakehouseTable:
                 out["auto_compact_error"] = str(e)
         return out
 
-    def _rebase_mor_commit(
-        self,
-        batch_key: str,
-        touched: list[int],
-        out_dir: str,
-        offsets: dict,
-        lineage: dict,
-    ) -> int | None:
-        """Re-attach an already-written MOR delta to the FRESH manifest
-        after losing a version race. Safe precisely because MOR merges
-        append files without rewriting any existing ones. Returns the
-        committed version, or None when another writer already
-        committed this batch_key (our files become orphans). Bounded
-        retries: each loss means real concurrent progress, so contention
-        this deep signals a misconfigured deployment and raises."""
-        for _ in range(10):
-            man = self.manifest()
+    # -- commit -----------------------------------------------------------------
+
+    def _commit(
+        self, base: dict, mutate: Callable[[dict], None], batch_key: str | None = None
+    ) -> dict | None:
+        """The one snapshot commit. Applies ``mutate`` to a copy of
+        ``base`` and links the result as ``base["version"] + 1``. After a
+        lost version race it re-reads the manifest and re-applies
+        ``mutate`` there, targeting THAT manifest's version + 1, so the
+        commit always carries every concurrent commit (a rebase).
+        ``mutate`` raises ConcurrentCommitError when a file it removes is
+        no longer live — the one conflict rule (Iceberg's "no conflicting
+        deletes"). Returns the linked manifest, or None when
+        ``batch_key`` is already committed. Bounded: each lost race means
+        real concurrent progress, so contention this deep signals a
+        misconfigured deployment and raises."""
+        man = copy.deepcopy(base)
+        for attempt in range(10):
+            if attempt:
+                man = self.manifest()
             if batch_key in man["committed"]:
                 return None
-            # max with the pointer: defensive against a manifest whose
-            # internal version field lags its filename (external repair
-            # tooling) — colliding below CURRENT can never win
-            version = max(man["version"], self._current_version()) + 1
-            new_buckets = dict(man["buckets"])
-            for b in touched:
-                bdir = os.path.join(out_dir, f"_bucket={b}")
-                files = (
-                    [os.path.join(bdir, f) for f in os.listdir(bdir) if f.endswith(".parquet")]
-                    if os.path.isdir(bdir)
-                    else []
-                )
-                new_buckets[str(b)] = new_buckets.get(str(b), []) + files
-            man["buckets"] = new_buckets
-            for p, o in offsets.items():
-                k = str(p)
-                man["offsets"][k] = max(int(man["offsets"].get(k, -1)), int(o))
-            for k, v in lineage.items():
-                man["lineage"][k] = int(man["lineage"].get(k, 0)) + int(v)
-            man["committed"].append(batch_key)
-            man["history"] = (
-                man["history"] + [{"batch": batch_key, "version": version, "lineage": lineage}]
-            )[-100:]
-            man["version"] = version
-            man["auto_compact_files"] = self.auto_compact_files
+            man["version"] += 1
+            mutate(man)
             try:
-                self._write_manifest(man, version)
-                return version
+                self._write_manifest(man, man["version"])
+                return man
             except ConcurrentCommitError:
                 continue
         raise ConcurrentCommitError(
-            f"lost 10 consecutive version races committing {batch_key!r} "
+            f"lost 10 consecutive version races committing {batch_key or 'a rewrite'!r} "
             f"at {self.path!r} — too many concurrent writers on one table"
         )
 
-    def _rewrite_and_commit(self, man: dict, df: DataFrame, label: str) -> int:
-        """Full-table rewrite commit shared by compact() and
-        vacuum_tombstones(): bucket-partitioned write of ``df`` into a
-        fresh data dir, bucket map rebuilt from the output listing, one
-        snapshot commit recorded under ``label``. Commits at the
-        CALLER's manifest version + 1 — ``df`` was derived from that
-        snapshot, so if anything committed in between the version race
-        surfaces as ConcurrentCommitError (state unharmed, caller
-        re-runs) instead of the rewrite silently dropping the
-        interleaved batch. The write needs no repartition when the
-        shuffle conf is bucket-aligned (upstream groupBy uses the same
-        Murmur3 family); misaligned callers get one repartition."""
-        version = man["version"] + 1
-        out_dir = self._new_data_dir(version)
-        (
-            self._bucket_colocated(df).write.partitionBy("_bucket")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        new_buckets: dict[str, list[str]] = {}
-        for d in os.listdir(out_dir):
-            if not d.startswith("_bucket="):
-                continue
-            b = d.split("=", 1)[1]
-            bdir = os.path.join(out_dir, d)
-            new_buckets[b] = [
-                os.path.join(bdir, f) for f in os.listdir(bdir) if f.endswith(".parquet")
-            ]
-        man["buckets"] = new_buckets
+    def _replace_files(
+        self,
+        man: dict,
+        label: str,
+        added: dict[str, list[str]],
+        removed: frozenset[str] = frozenset(),
+        lineage: dict | None = None,
+    ) -> None:
+        """The file-level part of every commit's ``mutate``: drop
+        ``removed``, append ``added`` per bucket, record the history
+        entry and the session's maintenance policy."""
+        if not removed <= {f for fl in man["buckets"].values() for f in fl}:
+            raise ConcurrentCommitError(
+                f"{label!r} at {self.path!r} rewrites files a concurrent "
+                f"rewrite already replaced; re-run against the fresh manifest"
+            )
+        buckets = {b: [f for f in fl if f not in removed] for b, fl in man["buckets"].items()}
+        for b, fl in added.items():
+            buckets[b] = buckets.get(b, []) + fl
+        man["buckets"] = {b: fl for b, fl in buckets.items() if fl}
         man["history"] = (
-            man["history"] + [{"batch": label, "version": version, "lineage": {}}]
+            man["history"] + [{"batch": label, "version": man["version"], "lineage": lineage or {}}]
         )[-100:]
-        man["version"] = version
-        self._write_manifest(man, version)
-        return version
+        # persist the in-session maintenance policy (see __init__: an
+        # explicit constructor value overrides the manifest's)
+        man["auto_compact_files"] = self.auto_compact_files
+
+    def _rewrite(self, base: dict, df: DataFrame, label: str) -> int:
+        """Replace every live file of ``base`` by ``df`` (one row per
+        key), written bucket-partitioned. Removes exactly the files it
+        read, so it rebases over a concurrent delta append and conflicts
+        only with another rewrite."""
+        removed = frozenset(f for fl in base["buckets"].values() for f in fl)
+        df = df.withColumn("_bucket", self._bucket(F.col(self.key_col)))
+        added = self._write_buckets(df, base["version"] + 1)
+        return self._commit(base, lambda m: self._replace_files(m, label, added, removed))["version"]
 
     # -- compaction (merge-on-read maintenance) -----------------------------
 
     def compact(self) -> dict:
-        """Fold all MOR delta files into one base per bucket: LWW-resolve
-        every key, rewrite the buckets, swap the manifest. After
-        compaction a read is a plain scan again (until the next delta).
-        Tombstones are RETAINED by compaction (a replayed older insert
-        must still lose to the delete); drop them with a retention job
-        once the upstream log is known to be past their lsn."""
+        """Fold all delta files into one base per bucket: LWW-resolve
+        every key, rewrite the buckets, commit. After compaction a read
+        is a plain scan again (until the next delta). Tombstones are
+        RETAINED by compaction (a replayed older insert must still lose
+        to the delete); drop them with vacuum_tombstones once the
+        upstream log is known to be past their lsn."""
         man = self.manifest()
-        if self.mode != "mor":
-            return {"skipped": True, "reason": "cow table"}
-        files = [f for fl in man["buckets"].values() for f in fl]
-        n_files = len(files)
-        resolved = self._resolve(self._read_files(man, files))
-        resolved = resolved.withColumn("_bucket", self._bucket(F.col(self.key_col)))
-        version = self._rewrite_and_commit(man, resolved, "_compact")
+        n_files = sum(len(fl) for fl in man["buckets"].values())
+        version = self._rewrite(man, self._resolved(man), "_compact")
         return {"skipped": False, "version": version, "compacted_files": n_files}
 
     # -- tombstone retention -------------------------------------------------
@@ -669,15 +558,28 @@ class LakehouseTable:
         will never arrive. Without it, dropping a tombstone would let a
         late replay resurrect a deleted key — which is why tombstones
         are retained by default and this is an explicit maintenance
-        call. MOR tables are LWW-resolved first (per-key winners), so
-        the rewrite doubles as a compaction."""
+        call. Keys are LWW-resolved first, so the rewrite doubles as a
+        compaction."""
         man = self.manifest()
-        files = [f for fl in man["buckets"].values() for f in fl]
-        df = self._read_files(man, files)
-        if self.mode == "mor":
-            df = self._resolve(df)
-        keep = df.filter(
+        keep = self._resolved(man).filter(
             ~(F.col("_deleted") & (F.col("_lsn") < F.lit(int(min_lsn))))
-        ).withColumn("_bucket", self._bucket(F.col(self.key_col)))
-        version = self._rewrite_and_commit(man, keep, f"_vacuum<{min_lsn}")
+        )
+        version = self._rewrite(man, keep, f"_vacuum<{min_lsn}")
         return {"skipped": False, "version": version, "min_lsn": int(min_lsn)}
+
+
+def _widen(schema: list, cols: list) -> list:
+    """Additive schema evolution: ``schema`` plus the never-seen
+    ``[name, ddl_type]`` pairs of ``cols``. A KNOWN column arriving with a
+    DIFFERENT type is rejected loudly: writing it as-is would commit
+    mixed-type files that poison every later mergeSchema read ("Failed
+    to merge incompatible data types") after the bad batch is durable."""
+    known = dict(schema)
+    for c, t in cols:
+        if c in known and known[c] != t:
+            raise ValueError(
+                f"payload column {c!r} arrives as {t} but the table records "
+                f"{known[c]}; additive evolution cannot change a column's "
+                f"type — cast the batch or add a new column"
+            )
+    return schema + [[c, t] for c, t in cols if c not in known]

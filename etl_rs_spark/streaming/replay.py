@@ -104,9 +104,9 @@ def process_batch(
     cfg = cfg or ReplayConfig()
     mapping = mapping or ColumnMapping.base()
 
-    # ONE manifest read per batch: is_committed / committed_offsets /
-    # the cache_winners probe each re-parse the (growing) manifest —
-    # three redundant JSON loads per trigger on the streaming hot path
+    # ONE manifest read per batch: is_committed / committed_offsets
+    # each re-parse the (growing) manifest — redundant JSON loads per
+    # trigger on the streaming hot path
     man0 = table.manifest()
     if batch_key in man0["committed"]:
         return {"skipped": True, "version": man0["version"], "batch": batch_key}
@@ -190,15 +190,6 @@ def process_batch(
         F.sum(F.when(F.col("op") != "delete", 1).otherwise(0)).alias("upserts"),
     )
 
-    # COW on a NON-EMPTY table consumes winners twice (touched-bucket
-    # scan + merge join) — cache the small post-LWW frame only there;
-    # the MOR path AND the empty-table bulk fast path (initial load)
-    # are single-consumer and stream straight through, so persisting
-    # would cache the entire normalized batch for nothing.
-    cache_winners = table.mode == "cow" and any(man0["buckets"].values())
-    if cache_winners:
-        winners = winners.persist()
-
     def lineage_fn() -> dict[str, int]:
         # resolved AFTER the merge write executes (observations are
         # collected by that job, and the concurrent envelope job has
@@ -222,9 +213,6 @@ def process_batch(
         # batch that no longer exists
         per_part_fut.cancel()
         raise
-    finally:
-        if cache_winners:
-            winners.unpersist()
     return result
 
 

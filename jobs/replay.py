@@ -53,12 +53,11 @@ def main() -> None:
              "segment files (availableNow), exactly-once MERGE per trigger",
     )
     ap.add_argument("--segments", type=int, default=1, help="replay in N ordered batches")
-    ap.add_argument("--table-mode", choices=["cow", "mor"], default="cow")
     ap.add_argument("--compact-after", action="store_true",
-                    help="run MOR compaction after the replay (timed separately)")
+                    help="run compaction after the replay (timed separately)")
     ap.add_argument(
         "--auto-compact-files", type=int, default=None, metavar="N",
-        help="MOR maintenance policy: compact any bucket exceeding N live "
+        help="maintenance policy: compact any bucket exceeding N live "
              "files at commit time (manifest-recorded; bounds read "
              "amplification over long segmented replays)",
     )
@@ -145,8 +144,7 @@ def main() -> None:
             # bucket count is a table property, not a cluster property —
             # fixed so both scaling levels do identical layout work
             table = LakehouseTable(
-                spark, lake_path, n_buckets=32, mode=args.table_mode,
-                auto_compact_files=args.auto_compact_files,
+                spark, lake_path, n_buckets=32, auto_compact_files=args.auto_compact_files,
             )
             if args.mode == "streaming":
                 # materialize segment files (untimed), then time the
@@ -210,7 +208,6 @@ def main() -> None:
 
         print(json.dumps({
             "mode": args.mode,
-            "table_mode": args.table_mode,
             "compact_sec": compact_sec,
             "cpus": args.cpus,
             "events": n_events,

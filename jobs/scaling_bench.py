@@ -81,19 +81,15 @@ def cpu_calibration(levels: list[int]) -> dict[int, float]:
 REPS = int(os.environ.get("SCALING_REPS", "3"))
 
 
-#: benched replay configurations: pure dataflow, exactly-once MERGE in
-#: both table modes. MOR is the headline (O(batch) delta writes beat
-#: COW's bucket rewrites for every segmented/incremental replay and tie
-#: on bulk loads — see SCALE_EVIDENCE.md).
-MODES = ["dataflow", "merge-mor", "merge-cow"]
-HEADLINE = "merge-mor"
+#: benched replay configurations: pure dataflow and the exactly-once
+#: MERGE into the merge-on-read lake table (the headline)
+MODES = ["dataflow", "merge"]
+HEADLINE = "merge"
 
 
 def run_once(cpus: int, events: int, docs: int, mode: str, binlog: str) -> dict:
-    replay_mode, _, table_mode = mode.partition("-")
     cmd = [sys.executable, REPLAY, "--events", str(events), "--docs", str(docs),
-           "--cpus", str(cpus), "--mode", replay_mode, "--binlog", binlog,
-           "--table-mode", table_mode or "cow"]
+           "--cpus", str(cpus), "--mode", mode, "--binlog", binlog]
     out = subprocess.run(cmd, capture_output=True, text=True, check=True, cwd=ROOT)
     last = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
     return json.loads(last)
@@ -174,9 +170,8 @@ def main() -> None:
         "Sandbox stand-in for the north rule's two cluster sizes: the",
         "identical job at N and 4N local cores; efficiency =",
         "(throughput_4N / throughput_N) / 4. `dataflow` = stored binlog",
-        "read -> normalize -> LWW resolve; `merge-*` adds the",
-        "exactly-once MERGE commit (mor = merge-on-read headline,",
-        "cow = copy-on-write).",
+        "read -> normalize -> LWW resolve; `merge` adds the",
+        "exactly-once MERGE commit into the merge-on-read table.",
         "",
         "## Machine ceilings (calibration, no Spark, no JVM)",
         "",
@@ -241,8 +236,8 @@ def main() -> None:
         "",
         "## Further scale evidence",
         "",
-        "Skew handling, copy-on-write vs merge-on-read write",
-        "amplification, and linearity measurements live in",
+        "Skew handling, write amplification (including the",
+        "copy-on-write record behind its removal) and linearity live in",
         "[SCALE_EVIDENCE.md](SCALE_EVIDENCE.md) — maintained separately",
         "so rerunning this generator never destroys them.",
     ]

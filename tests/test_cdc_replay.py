@@ -297,7 +297,7 @@ def test_streaming_kafka_envelope_with_evolution(spark, tmp_path):
     K.to_kafka_frame(df, "binlog").write.parquet(wire)
 
     mapping = ColumnMapping.base().evolved(MappedColumn("tag", "tag", "string"))
-    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8, mode="mor")
+    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8)
     q = replay_stream(
         spark, table, wire, str(tmp_path / "ckpt"), K.KAFKA_RAW_SCHEMA,
         mapping=mapping, cfg=CFG, max_files_per_trigger=5,
@@ -316,7 +316,7 @@ def test_mor_compaction_interleaved_with_replay(spark, tmp_path, binlog, oracle_
     incremental batches. Deltas appended after a compaction must still
     LWW-resolve against the compacted base; final state == oracle."""
     _, segs, _ = binlog
-    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8, mode="mor")
+    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8)
     replay_segments(spark, table, segs[:2], cfg=CFG)
     table.compact()
     replay_segments(spark, table, segs[2:], cfg=CFG)
@@ -335,11 +335,11 @@ def test_mor_auto_compaction_bounds_read_amplification(
     before the follow-up compaction commit folds it), while a policy-off
     table's file count grows with every batch — and the final state is
     identical to the oracle in both. The policy survives reopen (it is
-    manifest state, like mode/n_buckets)."""
+    manifest state, like n_buckets)."""
     _, segs, _ = binlog
-    plain = LakehouseTable(spark, str(tmp_path / "plain"), n_buckets=8, mode="mor")
+    plain = LakehouseTable(spark, str(tmp_path / "plain"), n_buckets=8)
     auto = LakehouseTable(
-        spark, str(tmp_path / "auto"), n_buckets=8, mode="mor",
+        spark, str(tmp_path / "auto"), n_buckets=8,
         auto_compact_files=2,
     )
     compactions = 0
@@ -356,7 +356,7 @@ def test_mor_auto_compaction_bounds_read_amplification(
     assert table_state(auto.read()) == oracle_state
     assert table_state(plain.read()) == oracle_state
     # reopening reads the policy from the manifest, not the constructor
-    reopened = LakehouseTable(spark, str(tmp_path / "auto"), n_buckets=8, mode="mor")
+    reopened = LakehouseTable(spark, str(tmp_path / "auto"), n_buckets=8)
     assert reopened.auto_compact_files == 2
 
 
@@ -370,12 +370,12 @@ def test_auto_compact_policy_adoptable_on_existing_table(
     manifest's None."""
     _, segs, _ = binlog
     path = str(tmp_path / "t")
-    t0 = LakehouseTable(spark, path, n_buckets=8, mode="mor")
+    t0 = LakehouseTable(spark, path, n_buckets=8)
     ev0 = spark.read.option("mergeSchema", True).parquet(segs[0])
     process_batch(t0, ev0, f"a:{segs[0]}", cfg=CFG)
     assert t0.manifest()["auto_compact_files"] is None
     # reopen WITH the policy: adopted in-session and active immediately
-    t1 = LakehouseTable(spark, path, n_buckets=8, mode="mor", auto_compact_files=1)
+    t1 = LakehouseTable(spark, path, n_buckets=8, auto_compact_files=1)
     assert t1.auto_compact_files == 1
     fired = 0
     for seg in segs[1:]:
@@ -387,7 +387,7 @@ def test_auto_compact_policy_adoptable_on_existing_table(
     assert max(len(v) for v in t1.manifest()["buckets"].values()) <= 2
     assert table_state(t1.read()) == oracle_state
     # the adopted policy is now manifest state: a plain reopen inherits it
-    assert LakehouseTable(spark, path, mode="mor").auto_compact_files == 1
+    assert LakehouseTable(spark, path).auto_compact_files == 1
 
 
 def test_corrupt_manifest_errors_name_the_file(spark, tmp_path, binlog):
@@ -397,7 +397,7 @@ def test_corrupt_manifest_errors_name_the_file(spark, tmp_path, binlog):
     int() parse error."""
     _, segs, _ = binlog
     path = str(tmp_path / "t")
-    t = LakehouseTable(spark, path, n_buckets=4, mode="mor")
+    t = LakehouseTable(spark, path, n_buckets=4)
     process_batch(t, spark.read.option("mergeSchema", True).parquet(segs[0]),
                   "b0", cfg=CFG)
     man_path = str(tmp_path / "t" / "_snapshots" / "v1.json")
@@ -431,7 +431,7 @@ def test_hostile_null_envelopes_commit_and_reconverge(spark, tmp_path):
         "op string, lsn long, partition int, offset long, ts long, "
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
-    t = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=4, mode="mor")
+    t = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=4)
     cfg = ReplayConfig(vocab=50257, max_len=16)
     process_batch(t, df, "hostile", cfg=cfg)
 
@@ -486,17 +486,15 @@ def test_lww_flavors_agree_on_null_order_columns(spark):
 
 
 def test_bulk_replay_matches_oracle(spark, tmp_path, binlog, oracle_state):
-    """The empty-table bulk fast path (no touched-bucket scan, no merge
-    join) must land the same final state as segmented replay — it is
-    the bench headline path, so its correctness is pinned against the
-    oracle directly, in both table modes."""
+    """One bulk batch into an empty table must land the same final state
+    as segmented replay — it is the bench headline path, so its
+    correctness is pinned against the oracle directly."""
     path, _, _ = binlog
     events = spark.read.option("mergeSchema", True).parquet(f"{path}/seg-*")
-    for mode in ("cow", "mor"):
-        table = LakehouseTable(spark, str(tmp_path / f"t_{mode}"), n_buckets=8, mode=mode)
-        r = process_batch(table, events, "bulk", cfg=CFG)
-        assert not r["skipped"]
-        assert table_state(table.read()) == oracle_state
+    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8)
+    r = process_batch(table, events, "bulk", cfg=CFG)
+    assert not r["skipped"]
+    assert table_state(table.read()) == oracle_state
 
 
 def test_streaming_replay_split_segments(spark, tmp_path, binlog, oracle_state):
@@ -513,7 +511,7 @@ def test_streaming_replay_split_segments(spark, tmp_path, binlog, oracle_state):
     seg_root = str(tmp_path / "splitsegs")
     write_segments(df.repartition(4), seg_root, n_segments=4, max_lsn=SPEC.n_events)
 
-    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8, mode="mor")
+    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8)
     schema = spark.read.parquet(f"{seg_root}/seg-00000").schema
     q = replay_stream(
         spark, table, f"{seg_root}/seg-*", str(tmp_path / "ckpt"), schema,
@@ -526,11 +524,10 @@ def test_streaming_replay_split_segments(spark, tmp_path, binlog, oracle_state):
 
 
 def test_mor_replay_matches_oracle_and_compacts(spark, tmp_path, binlog, oracle_state):
-    """Merge-on-read mode: append-only deltas + read-time LWW resolve
-    must yield the same final state as copy-on-write; compaction folds
-    deltas without changing the state."""
+    """Append-only deltas + read-time LWW resolve yield the oracle's
+    final state; compaction folds deltas without changing the state."""
     _, segs, _ = binlog
-    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8, mode="mor")
+    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8)
     results = replay_segments(spark, table, segs, cfg=CFG)
     assert all(not r["skipped"] for r in results)
     assert table_state(table.read()) == oracle_state
@@ -556,7 +553,7 @@ def test_mor_merge_is_order_insensitive(spark, tmp_path, binlog, oracle_state):
     segments, so this drives table.merge directly with reversed
     batches.)"""
     _, segs, _ = binlog
-    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8, mode="mor")
+    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8)
     for i, seg in enumerate(reversed(segs)):
         df = spark.read.parquet(seg)
         norm = normalize_events(df, VOCAB, MAX_LEN).filter("_valid").drop(
@@ -570,16 +567,14 @@ def test_mor_merge_is_order_insensitive(spark, tmp_path, binlog, oracle_state):
 def test_out_of_order_replay_with_filter_disabled(spark, tmp_path, binlog, oracle_state):
     """Batches replayed in REVERSE order through the full process_batch
     path reconverge to the oracle state once the committed-offset
-    filter (which assumes ordered delivery) is disabled — in BOTH table
-    modes: the (lsn, offset) row guard (COW) / read-time LWW (MOR) are
-    the actual correctness mechanism, the filter is an ordered-replay
-    optimization."""
+    filter (which assumes ordered delivery) is disabled: read-time LWW
+    over (lsn, offset) is the actual correctness mechanism, the filter
+    is an ordered-replay optimization."""
     _, segs, _ = binlog
     cfg = ReplayConfig(vocab=VOCAB, max_len=MAX_LEN, filter_committed_offsets=False)
-    for mode in ("cow", "mor"):
-        table = LakehouseTable(spark, str(tmp_path / f"t_{mode}"), n_buckets=8, mode=mode)
-        replay_segments(spark, table, list(reversed(segs)), cfg=cfg)
-        assert table_state(table.read()) == oracle_state
+    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8)
+    replay_segments(spark, table, list(reversed(segs)), cfg=cfg)
+    assert table_state(table.read()) == oracle_state
 
 
 def test_mor_schema_evolution_in_delta(spark, tmp_path):
@@ -597,7 +592,7 @@ def test_mor_schema_evolution_in_delta(spark, tmp_path):
     assert "tag" not in spark.read.parquet(segs[0]).columns
 
     mapping = ColumnMapping.base().evolved(MappedColumn("tag", "tag", "string"))
-    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8, mode="mor")
+    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8)
     replay_segments(spark, table, segs, mapping=mapping, cfg=CFG)
 
     events = [r.asDict() for r in df.collect()]
@@ -630,20 +625,28 @@ def test_lakehouse_refuses_foreign_bucket_hash(spark, tmp_path):
 def test_merge_correct_under_misaligned_shuffle_conf(spark, tmp_path, binlog, oracle_state):
     """With shuffle partitions and n_buckets NOT dividing each other the
     sink repartitions on _bucket before the bucketed write (instead of
-    emitting up to tasks x buckets files); the final state is unchanged."""
+    emitting up to tasks x buckets files); the final state is unchanged.
+    AQE coalescing is off: on this small input it would merge the 7
+    reducer partitions into one and hide a missing guard."""
     path, segs, _ = binlog
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    confs = {"spark.sql.shuffle.partitions": "7",
+             "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    prev = {k: spark.conf.get(k) for k in confs}
     try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
         table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=4)
         assert not table._bucket_aligned()
         replay_segments(spark, table, segs, cfg=CFG)
-        # aligned write would leave <= tasks-per-bucket files; the guard
-        # caps it at ~1 file per bucket even under the misaligned conf
-        man = table.manifest()
-        assert all(len(files) <= 2 for files in man["buckets"].values())
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    # each of the 7 reducer tasks would add a file to every bucket; the
+    # guard caps every commit at ~1 new file per bucket
+    for v in range(1, table.manifest()["version"] + 1):
+        before = table.manifest_at(v - 1)["buckets"]
+        for b, files in table.manifest_at(v)["buckets"].items():
+            assert len(set(files) - set(before.get(b, []))) <= 2, (v, b)
     assert table_state(table.read()) == oracle_state
 
 
@@ -652,7 +655,7 @@ def test_time_travel_reads_historical_snapshots(spark, tmp_path, binlog, oracle_
     """Every committed version's manifest + immutable data files stay
     readable: read(version=k) returns exactly the state after batch k."""
     path, segs, events = binlog
-    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=4, mode="mor")
+    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=4)
     replay_segments(spark, table, segs, cfg=CFG)
     assert table.manifest()["version"] == len(segs)
 
@@ -671,7 +674,7 @@ def test_vacuum_tombstones_drops_only_expired(spark, tmp_path, binlog, oracle_st
     lsn without changing the live state; the pre-vacuum snapshot stays
     time-travelable."""
     path, segs, _ = binlog
-    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=4, mode="mor")
+    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=4)
     replay_segments(spark, table, segs, cfg=CFG)
     pre_version = table.manifest()["version"]
     meta = table.read(include_meta=True, version=pre_version)
@@ -697,10 +700,20 @@ def test_vacuum_tombstones_drops_only_expired(spark, tmp_path, binlog, oracle_st
 def test_reopen_adopts_manifest_layout(spark, tmp_path, binlog, oracle_state):
     """The manifest is authoritative on open: reopening a 4-bucket
     table with n_buckets=32 must NOT merge in a different bucket space
-    (which would leave old rows unresolved = silent duplicates)."""
+    (which would leave old rows unresolved = silent duplicates). A table
+    whose manifest records the removed copy-on-write mode (one row per
+    key per bucket: a compacted layout) opens and merges as
+    merge-on-read; asking for copy-on-write is refused."""
     path, segs, _ = binlog
     t1 = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=4)
     replay_segments(spark, t1, segs[:2], cfg=CFG)
+    t1.compact()
+    man = t1.manifest()
+    man["mode"] = "cow"
+    man["version"] += 1
+    t1._write_manifest(man, man["version"])
+    with pytest.raises(ValueError, match="copy-on-write was removed"):
+        LakehouseTable(spark, str(tmp_path / "t"), mode="cow")
     t2 = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=32, key_col="wrong")
     assert t2.n_buckets == 4 and t2.key_col == "doc_id"
     replay_segments(spark, t2, segs[2:], cfg=CFG)
@@ -791,12 +804,12 @@ def test_streaming_batch_keys_distinct_across_checkpoints(spark, tmp_path, binlo
 def test_crashed_commit_heals_instead_of_wedging(spark, tmp_path, binlog, oracle_state):
     """A writer crashing BETWEEN linking v{N}.json and swapping CURRENT
     used to wedge the table forever (every later commit recomputes N,
-    collides, and raises). The commit protocol now completes the
-    crashed commit's pointer swap and (MOR) rebases onto it."""
+    collides, and raises). CURRENT is now a hint: manifest() scans
+    forward to the crashed commit and the next merge builds on it."""
     import os as _os
 
     path, segs, _ = binlog
-    t = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8, mode="mor")
+    t = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8)
     process_batch(t, spark.read.parquet(segs[0]), "b0", cfg=CFG)
     process_batch(t, spark.read.parquet(segs[1]), "b1", cfg=CFG)
     snap_dir = str(tmp_path / "t" / "_snapshots")
@@ -812,43 +825,36 @@ def test_crashed_commit_heals_instead_of_wedging(spark, tmp_path, binlog, oracle
         _json.dump(crashed, f)
     with open(_os.path.join(snap_dir, "CURRENT")) as f:
         assert f.read().strip() == "2"
-    # next merges must heal (repair CURRENT, rebase to v4+), not wedge
+    # next merges must build on v3 (committing v4+), not wedge
     process_batch(t, spark.read.parquet(segs[2]), "b2", cfg=CFG)
     process_batch(t, spark.read.parquet(segs[3]), "b3", cfg=CFG)
     assert table_state(t.read()) == oracle_state
     assert t.manifest()["version"] >= 4
 
 
-def test_cow_null_key_rows_stored_not_husked(spark, tmp_path):
-    """A NULL-key event reaching a NON-EMPTY COW table used to fall out
-    of the full-outer join as an all-NULL husk (payload and _deleted
-    discarded, row accumulating forever). It must be stored verbatim,
-    matching the MOR and empty-table paths."""
-    from tests.oracle_cdc import table_state as _ts  # noqa: F401
-
-    def batch(rows):
-        return spark.createDataFrame(
+def test_null_key_rows_match_oracle(spark, tmp_path):
+    """NULL-key events LWW-resolve like any other key: two batches each
+    carrying a NULL-doc_id insert leave one NULL-key row, the latest, as
+    in the sequential oracle."""
+    cols = ["op", "lsn", "partition", "offset", "ts", "doc_id", "tokens", "n_tok", "source"]
+    batches = [
+        [("insert", 1, 0, 0, 100, "d1", [1], 1, "s"),
+         ("insert", 2, 0, 1, 100, None, [9, 9], 2, "s")],
+        [("insert", 3, 0, 2, 100, None, [7], 1, "s")],
+    ]
+    cfg = ReplayConfig(vocab=50257, max_len=16)
+    t = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=4)
+    for i, rows in enumerate(batches):
+        df = spark.createDataFrame(
             rows,
             "op string, lsn long, partition int, offset long, ts long, "
             "doc_id string, tokens array<int>, n_tok int, source string",
         )
-
-    results = {}
-    for mode in ("cow", "mor"):
-        t = LakehouseTable(spark, str(tmp_path / f"t_{mode}"), n_buckets=4, mode=mode)
-        process_batch(t, batch([("insert", 1, 0, 0, 100, "d1", [1], 1, "s")]),
-                      "b0", cfg=ReplayConfig(vocab=50257, max_len=16))
-        # non-empty table now receives a NULL-key insert
-        process_batch(t, batch([("insert", 2, 0, 1, 100, None, [9, 9], 2, "s")]),
-                      "b1", cfg=ReplayConfig(vocab=50257, max_len=16))
-        rows = t.read().collect()
-        results[mode] = {
-            (r["doc_id"], tuple(r["tokens"]) if r["tokens"] is not None else None)
-            for r in rows
-        }
-        # no all-NULL husk: every row has real tokens and _deleted
-        assert all(r["tokens"] is not None for r in rows), (mode, rows)
-    assert results["cow"] == results["mor"] == {("d1", (1,)), (None, (9, 9))}
+        process_batch(t, df, f"b{i}", cfg=cfg)
+    events = [dict(zip(cols, r)) for rows in batches for r in rows]
+    want = oracle_replay(events, cfg.vocab, cfg.max_len)
+    assert want[None]["tokens"] == (7,)
+    assert table_state(t.read()) == want
 
 
 def test_auto_compact_failure_does_not_fail_the_durable_merge(
@@ -859,7 +865,7 @@ def test_auto_compact_failure_does_not_fail_the_durable_merge(
     committed batch failed (it would kill a streaming query)."""
     path, segs, _ = binlog
     t = LakehouseTable(
-        spark, str(tmp_path / "t"), n_buckets=8, mode="mor", auto_compact_files=1
+        spark, str(tmp_path / "t"), n_buckets=8, auto_compact_files=1
     )
 
     def boom():

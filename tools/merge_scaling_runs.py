@@ -57,9 +57,8 @@ def main(run1_path: str, run2_path: str, label: str = "round 4") -> None:
         "Sandbox stand-in for the north rule's two cluster sizes: the",
         "identical job at N and 4N local cores; efficiency =",
         "(throughput_4N / throughput_N) / 4. `dataflow` = stored binlog",
-        "read -> normalize -> LWW resolve; `merge-*` adds the",
-        "exactly-once MERGE commit (mor = merge-on-read headline,",
-        "cow = copy-on-write).",
+        "read -> normalize -> LWW resolve; `merge` adds the",
+        "exactly-once MERGE commit into the merge-on-read table.",
         "",
         "## Machine ceilings (calibration, no Spark, no JVM)",
         "",
@@ -99,7 +98,7 @@ def main(run1_path: str, run2_path: str, label: str = "round 4") -> None:
         L.append("| " + m + " | " + " | ".join(f"{best[m][c]:,.0f}" for c in levels) + " |")
     L += [
         "",
-        "`merge-mor` is the headline configuration (merge-on-read:",
+        "`merge` is the headline configuration (merge-on-read:",
         "O(batch) delta appends; compaction amortized separately —",
         "SCALE_EVIDENCE.md compares write amplification and the",
         "`auto_compact_files` commit-time maintenance policy).",
@@ -133,8 +132,8 @@ def main(run1_path: str, run2_path: str, label: str = "round 4") -> None:
         "",
         "## Further scale evidence",
         "",
-        "Skew handling, copy-on-write vs merge-on-read write",
-        "amplification, write+commit isolation, the LWW shuffle-byte A/B,",
+        "Skew handling, write amplification (including the copy-on-write",
+        "record behind its removal), write+commit isolation, the LWW A/B,",
         "and linearity measurements live in",
         "[SCALE_EVIDENCE.md](SCALE_EVIDENCE.md) — maintained separately so",
         "rerunning the generator never destroys them.",

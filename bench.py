@@ -12,9 +12,9 @@ normalize winners ->
 exactly-once lakehouse MERGE). Query timings force full execution via
 the noop sink (no driver collect of large results).
 
-Scaling-efficiency evidence (local[8] vs local[32]) lives in
-jobs/scaling_bench.py which writes BENCH/BASELINE.md; this file is the
-per-round driver entry point.
+Scaling-efficiency evidence (N vs 4N local cores) comes from
+jobs/scaling_bench.py, rendered by tools/merge_scaling_runs.py; this
+file is the per-round bench entry point.
 """
 
 from __future__ import annotations
@@ -249,20 +249,15 @@ def no_jvm_calibration(cpus: int) -> dict:
     trustworthy only RELATIVE to these — events_per_sec_merge x
     mem_stream_sec should hold steady across rounds even when the raw
     headline swings with host phase."""
-    from multiprocessing import Pool
+    from jobs.scaling_bench import _burn, _stream, calibrate
 
-    from jobs.scaling_bench import _burn, _stream
-
-    out: dict[str, float] = {}
-    for name, fn, arg in (
-        ("cpu_burn", _burn, 3_000_000),
-        ("mem_stream", _stream, 8_000_000),
-    ):
-        t0 = time.monotonic()
-        with Pool(min(cpus, 32)) as pool:
-            pool.map(fn, [arg] * 32)
-        out[f"{name}_sec"] = round(time.monotonic() - t0, 3)
-    return out
+    return {
+        f"{name}_sec": round(calibrate(fn, arg, min(cpus, 32)), 3)
+        for name, fn, arg in (
+            ("cpu_burn", _burn, 3_000_000),
+            ("mem_stream", _stream, 8_000_000),
+        )
+    }
 
 
 def _phase_probe(spark) -> float:

@@ -22,8 +22,9 @@ at-least-once auto-commit to exactly-once).
 
 from __future__ import annotations
 
+import hashlib
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -216,6 +217,13 @@ def process_batch(
     return result
 
 
+def _path_tag(path: str) -> str:
+    """8-hex digest of ``path``'s absolute form: the location part of
+    segment and streaming batch keys. The format is pinned by tests — a
+    changed digest re-merges every in-flight batch on resume."""
+    return hashlib.md5(os.path.abspath(path).encode()).hexdigest()[:8]
+
+
 def replay_segments(
     spark: SparkSession,
     table: LakehouseTable,
@@ -241,13 +249,11 @@ def replay_segments(
     the LWW guard). Key-format note: keys changed in r3 from
     basename-only to path-digested — manifests recording the old keys
     re-merge once on resume (idempotent, state converges)."""
-    import hashlib
-
     results = []
     for seg in segment_paths:
         events = spark.read.option("mergeSchema", True).parquet(seg)
         norm_path = os.path.abspath(seg.rstrip("/"))
-        tag = binlog_id or hashlib.md5(norm_path.encode()).hexdigest()[:8]
+        tag = binlog_id or _path_tag(norm_path)
         key = f"{batch_prefix}:{norm_path.rsplit('/', 1)[-1]}:{tag}"
         results.append(process_batch(table, events, key, mapping, cfg))
     return results
@@ -295,15 +301,8 @@ def replay_stream(
     keys before r5 were '{stream_name}:{batch_id}' — on a resumed old
     table the in-flight trigger re-merges once under the new key,
     idempotently, and state converges."""
-    import hashlib
-    import os as _os
-
-    from dataclasses import replace as _dc_replace
-
-    cfg = _dc_replace(cfg or ReplayConfig(), filter_committed_offsets=False)
-    ckpt_id = hashlib.md5(
-        _os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:8]
+    cfg = replace(cfg or ReplayConfig(), filter_committed_offsets=False)
+    ckpt_id = _path_tag(checkpoint_dir)
     stream = (
         spark.readStream.schema(schema_ddl)
         .option("maxFilesPerTrigger", max_files_per_trigger)

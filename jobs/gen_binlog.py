@@ -14,6 +14,16 @@ from etl_rs_spark.session import get_spark
 from etl_rs_spark.sources.binlog import BinlogSpec, gen_events
 
 
+def write_binlog(spark, spec: BinlogSpec, out: str, files: int = 64) -> None:
+    """Write ``spec``'s events to ``out`` as ``files`` parquet files.
+
+    Range-partitioned by lsn: real binlogs are written in log order,
+    and lsn-sorted row groups let segment replays prune the scan."""
+    gen_events(spark, spec).repartitionByRange(files, "lsn").write.mode(
+        "overwrite"
+    ).parquet(out)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("out")
@@ -27,11 +37,7 @@ def main() -> None:
         spec = BinlogSpec(
             n_events=args.events, n_docs=args.docs, n_partitions=args.partitions
         )
-        # range-partition by lsn: real binlogs are written in log order,
-        # and lsn-sorted row groups let segment replays prune the scan
-        gen_events(spark, spec).repartitionByRange(args.files, "lsn").write.mode(
-            "overwrite"
-        ).parquet(args.out)
+        write_binlog(spark, spec, args.out, args.files)
         print(args.out)
     finally:
         spark.stop()

@@ -1,37 +1,43 @@
 """Two-cluster-size scaling evidence (north rule: efficiency >= 0.8
 from N to 4N executors).
 
-No real cluster exists in this sandbox, so per the driver instruction
-the same replay job runs at multiple parallelism levels on the SAME
-input, each in a fresh JVM subprocess. Efficiency for an N -> 4N pair
-= (throughput_4N / throughput_N) / 4.
+Without a real cluster, the same exactly-once merge replay
+(``jobs/replay.py``) runs at several parallelism levels on the SAME
+stored binlog, each in a fresh JVM subprocess. Efficiency for an
+N -> 4N pair = (throughput_4N / throughput_N) / 4.
 
-The sandbox VM (32 virtualized cores) throttles aggregate CPU near
-saturation: a pure-CPU multiprocessing calibration shows ~0.95
-efficiency for 2 -> 8 processes but only ~0.6 for 8 -> 32 — i.e. at
-high core counts the *machine*, not the engine, caps scaling. The
-bench therefore measures levels [2, 8, 32], reports both 4x pairs,
-and prints the calibration ceiling next to each so engine efficiency
-can be judged against what the hardware permits.
+A single box also caps scaling itself, so the run first times two
+no-JVM calibrations at every level — pure-CPU (``_burn``) and
+memory-streaming (``_stream``) — whose own N -> 4N efficiencies are the
+ceilings the engine is judged against.
 
-Writes BENCH/BASELINE.md and prints the summary JSON.
+Prints one summary JSON line (levels, calibration seconds, best
+throughput per level) to stdout; render one or more of them as
+markdown tables with ``tools/merge_scaling_runs.py``:
+
+    python jobs/scaling_bench.py > r1.json
+    python tools/merge_scaling_runs.py r1.json [r2.json ...]
+
+Environment: SCALING_LEVELS (default 2,8,32), SCALING_EVENTS,
+SCALING_DOCS, SCALING_REPS.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
 import time
-from datetime import datetime, timezone
 from multiprocessing import Pool
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 REPLAY = os.path.join(ROOT, "jobs", "replay.py")
 
 LEVELS = [int(x) for x in os.environ.get("SCALING_LEVELS", "2,8,32").split(",")]
-PAIRS = [(a, b) for a in LEVELS for b in LEVELS if b == 4 * a]
+REPS = int(os.environ.get("SCALING_REPS", "3"))
 
 
 def _burn(n: int) -> int:
@@ -54,42 +60,20 @@ def _stream(n: int) -> int:
     return s
 
 
-def memory_calibration(levels: list[int]) -> dict[int, float]:
-    out: dict[int, float] = {}
-    for p in levels:
-        t0 = time.monotonic()
-        with Pool(p) as pool:
-            # 32 chunks so every level up to 32 procs actually uses all
-            # its workers (8 chunks would cap parallelism at 8)
-            pool.map(_stream, [8_000_000] * 32)
-        out[p] = round(time.monotonic() - t0, 2)
-    return out
+def calibrate(fn, arg, procs: int) -> float:
+    """Seconds to map ``fn(arg)`` over 32 chunks on ``procs`` processes
+    — fixed total work, so the time measures what the host itself
+    allows at that parallelism (32 chunks keep every level up to 32
+    processes busy)."""
+    t0 = time.monotonic()
+    with Pool(procs) as pool:
+        pool.map(fn, [arg] * 32)
+    return time.monotonic() - t0
 
 
-def cpu_calibration(levels: list[int]) -> dict[int, float]:
-    """Fixed total work split into 32 chunks, run on p processes —
-    measures what the VM itself allows at each parallelism."""
-    out: dict[int, float] = {}
-    for p in levels:
-        t0 = time.monotonic()
-        with Pool(p) as pool:
-            pool.map(_burn, [3_000_000] * 32)
-        out[p] = round(time.monotonic() - t0, 2)
-    return out
-
-
-REPS = int(os.environ.get("SCALING_REPS", "3"))
-
-
-#: benched replay configurations: pure dataflow and the exactly-once
-#: MERGE into the merge-on-read lake table (the headline)
-MODES = ["dataflow", "merge"]
-HEADLINE = "merge"
-
-
-def run_once(cpus: int, events: int, docs: int, mode: str, binlog: str) -> dict:
+def run_once(cpus: int, events: int, docs: int, binlog: str) -> dict:
     cmd = [sys.executable, REPLAY, "--events", str(events), "--docs", str(docs),
-           "--cpus", str(cpus), "--mode", mode, "--binlog", binlog]
+           "--cpus", str(cpus), "--binlog", binlog]
     out = subprocess.run(cmd, capture_output=True, text=True, check=True, cwd=ROOT)
     last = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
     return json.loads(last)
@@ -99,152 +83,41 @@ def main() -> None:
     events = int(os.environ.get("SCALING_EVENTS", "4000000"))
     docs = int(os.environ.get("SCALING_DOCS", "400000"))
 
-    calib = cpu_calibration(LEVELS)
-    calib_eff = {
-        f"{a}->{b}": round((calib[a] / calib[b]) / (b / a), 3) for a, b in PAIRS
-    }
-    mem_calib = memory_calibration(LEVELS)
-    mem_eff = {
-        f"{a}->{b}": round((mem_calib[a] / mem_calib[b]) / (b / a), 3) for a, b in PAIRS
-    }
-    print(f"[scaling] cpu calibration: {calib} eff={calib_eff}", file=sys.stderr)
-    print(f"[scaling] mem calibration: {mem_calib} eff={mem_eff}", file=sys.stderr)
+    cpu_sec = {p: round(calibrate(_burn, 3_000_000, p), 2) for p in LEVELS}
+    mem_sec = {p: round(calibrate(_stream, 8_000_000, p), 2) for p in LEVELS}
+    print(f"[scaling] calibration sec: cpu={cpu_sec} mem={mem_sec}", file=sys.stderr)
 
-    import tempfile
-    binlog_dir = os.path.join(tempfile.mkdtemp(prefix="scaling_binlog_"), "binlog")
-    subprocess.run(
-        [sys.executable, os.path.join(ROOT, "jobs", "gen_binlog.py"), binlog_dir,
-         "--events", str(events), "--docs", str(docs)],
-        check=True, capture_output=True, cwd=ROOT,
-    )
-    print(f"[scaling] binlog materialized at {binlog_dir}", file=sys.stderr)
-
-    # best-of-REPS, INTERLEAVED across levels: single-JVM runs vary
-    # +-30% (JIT/GC/page-cache state), so reps of different levels are
-    # alternated to decorrelate machine drift from the level.
-    results: dict[str, dict[int, dict]] = {m: {} for m in MODES}
-    for rep in range(REPS):
-        for mode in MODES:
+    tmp = tempfile.mkdtemp(prefix="scaling_binlog_")
+    binlog_dir = os.path.join(tmp, "binlog")
+    try:
+        subprocess.run(
+            [sys.executable, os.path.join(ROOT, "jobs", "gen_binlog.py"), binlog_dir,
+             "--events", str(events), "--docs", str(docs)],
+            check=True, capture_output=True, cwd=ROOT,
+        )
+        # best-of-REPS, INTERLEAVED across levels: single-JVM runs vary
+        # +-30% (JIT/GC/page-cache state), so reps of different levels
+        # are alternated to decorrelate machine drift from the level.
+        best: dict[int, float] = {}
+        for rep in range(REPS):
             for cpus in LEVELS:
-                r = run_once(cpus, events, docs, mode, binlog_dir)
-                cur = results[mode].get(cpus)
-                if cur is None or r["events_per_sec"] > cur["events_per_sec"]:
-                    results[mode][cpus] = r
-                print(f"[scaling] rep={rep} mode={mode} cpus={cpus}: "
+                r = run_once(cpus, events, docs, binlog_dir)
+                best[cpus] = max(best.get(cpus, 0.0), r["events_per_sec"])
+                print(f"[scaling] rep={rep} cpus={cpus}: "
                       f"{r['events_per_sec']} ev/s ({r['elapsed_sec']}s)",
                       file=sys.stderr)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
-    def eff(mode: str, a: int, b: int) -> float:
-        return round(
-            (results[mode][b]["events_per_sec"] / results[mode][a]["events_per_sec"])
-            / (b / a), 3)
-
-    summary = {
+    print(json.dumps({
         "events": events,
         "docs": docs,
+        "reps": REPS,
         "levels": LEVELS,
-        "headline_mode": HEADLINE,
-        "cpu_calibration_sec": calib,
-        "cpu_calibration_efficiency": calib_eff,
-        "mem_calibration_sec": mem_calib,
-        "mem_calibration_efficiency": mem_eff,
-        "throughput": {m: {c: results[m][c]["events_per_sec"] for c in LEVELS} for m in results},
-        "scaling_efficiency": {
-            m: {f"{a}->{b}": eff(m, a, b) for a, b in PAIRS} for m in results
-        },
-    }
-    print(json.dumps(summary))
-
-    bench_dir = os.path.join(ROOT, "BENCH")
-    os.makedirs(bench_dir, exist_ok=True)
-    ts = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
-    lines = [
-        "# BENCH/BASELINE — measured CDC replay throughput + scaling",
-        "",
-        f"Generated {ts} by `python jobs/scaling_bench.py` "
-        f"({events:,} synthetic change events over {docs:,} doc_ids, "
-        "materialized once to parquet and replayed from storage — the",
-        f"SAME stored binlog at every parallelism level, fresh JVM per",
-        f"level, best of {REPS} runs each).",
-        "",
-        "Sandbox stand-in for the north rule's two cluster sizes: the",
-        "identical job at N and 4N local cores; efficiency =",
-        "(throughput_4N / throughput_N) / 4. `dataflow` = stored binlog",
-        "read -> normalize -> LWW resolve; `merge` adds the",
-        "exactly-once MERGE commit into the merge-on-read table.",
-        "",
-        "## Machine ceilings (calibration, no Spark, no JVM)",
-        "",
-        "| pair | pure-CPU efficiency | memory-stream efficiency |",
-        "|---|---|---|",
-    ]
-    for a, b in PAIRS:
-        lines.append(
-            f"| {a} -> {b} procs | {calib_eff[f'{a}->{b}']:.3f} "
-            f"| {mem_eff[f'{a}->{b}']:.3f} |"
-        )
-    lines += [
-        "",
-        "Two hardware ceilings bound ANY workload on this single box:",
-        "pure-CPU work scales near-ideally in the 2->8 region, but",
-        "**memory-streaming work does not scale at all** (the VM's memory",
-        "bandwidth saturates at ~2 cores' worth of streaming; 8 procs",
-        "are SLOWER than 2). The replay job streams columnar token",
-        "arrays through normalize/shuffle — its achievable single-box",
-        "ceiling lies between the two columns. On a real 4N-executor",
-        "cluster each executor contributes its own memory bandwidth, so",
-        "this constraint is a sandbox artifact, not an engine property:",
-        "the engine's plans (map-side partial aggregation, one",
-        "full-payload shuffle, bucketed writes) add no cross-executor",
-        "serialization beyond the one inherent shuffle.",
-        "",
-        "## Replay throughput",
-        "",
-        "| mode | " + " | ".join(f"local[{c}] ev/s" for c in LEVELS) + " |",
-        "|---|" + "---|" * len(LEVELS),
-    ]
-    for m in results:
-        row = " | ".join(f"{results[m][c]['events_per_sec']:,.0f}" for c in LEVELS)
-        lines.append(f"| {m} | {row} |")
-    lines += [
-        "",
-        f"`{HEADLINE}` is the headline configuration (merge-on-read:",
-        "O(batch) delta appends; compaction amortized separately —",
-        "SCALE_EVIDENCE.md compares write amplification).",
-        "",
-        "| mode | pair | engine efficiency | machine ceiling |",
-        "|---|---|---|---|",
-    ]
-    for m in results:
-        for a, b in PAIRS:
-            lines.append(
-                f"| {m} | {a} -> {b} | {eff(m, a, b):.3f} | {calib_eff[f'{a}->{b}']:.3f} |"
-            )
-    lines += [
-        "",
-        "Per-partition committed offsets, lag and lineage counters are",
-        "emitted by `jobs/replay.py` (JSON); lineage for the largest",
-        "headline-mode run:",
-        "```json",
-        json.dumps(results[HEADLINE][LEVELS[-1]].get("lineage", {}), indent=2),
-        "```",
-        "",
-        "10^10-event scale is evidenced by sustained-rate extrapolation:",
-        "the generator is lazy (`spark.range`-derived, never materialized)",
-        "and per-batch state is bounded by doc cardinality, so wall time",
-        "scales linearly in events at fixed doc count.",
-        "",
-        "## Further scale evidence",
-        "",
-        "Skew handling, write amplification (including the",
-        "copy-on-write record behind its removal) and linearity live in",
-        "[SCALE_EVIDENCE.md](SCALE_EVIDENCE.md) — maintained separately",
-        "so rerunning this generator never destroys them.",
-    ]
-    with open(os.path.join(bench_dir, "BASELINE.md"), "w") as f:
-        f.write("\n".join(lines) + "\n")
-    import shutil
-    shutil.rmtree(os.path.dirname(binlog_dir), ignore_errors=True)
+        "cpu_calibration_sec": cpu_sec,
+        "mem_calibration_sec": mem_sec,
+        "throughput": best,
+    }))
 
 
 if __name__ == "__main__":

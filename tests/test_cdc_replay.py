@@ -4,6 +4,9 @@ checkpoint resume, LWW parity, schema evolution, streaming."""
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -753,6 +756,10 @@ def test_segment_keys_distinct_across_roots(spark, tmp_path):
     ra = replay_segments(spark, table, segs_a, cfg=CFG)
     rb = replay_segments(spark, table, segs_b, cfg=CFG)
     assert all(not r["skipped"] for r in ra + rb)  # b NOT mistaken for a
+    # key format '{prefix}:{basename}:{md5(abspath)[:8]}' is persisted:
+    # a changed format re-merges every in-flight batch on resume
+    tag = hashlib.md5(os.path.abspath(segs_a[0]).encode()).hexdigest()[:8]
+    assert f"batch:seg-00000:{tag}" in table.manifest()["committed"]
     # replaying the same root again IS skipped (exactly-once resume)
     again = replay_segments(spark, table, segs_a, cfg=CFG)
     assert all(r["skipped"] for r in again)
@@ -791,6 +798,9 @@ def test_streaming_batch_keys_distinct_across_checkpoints(spark, tmp_path, binlo
     )
     q.awaitTermination(300)
     partial = table_state(table.read())
+    # key format '{stream}:{md5(abspath(ckpt))[:8]}:{batch_id}' is persisted
+    ckpt_tag = hashlib.md5(os.path.abspath(tmp_path / "ckptA").encode()).hexdigest()[:8]
+    assert f"replay:{ckpt_tag}:0" in table.manifest()["committed"]
     # stream B: the rest, NEW checkpoint, same table — batch ids restart
     q2 = replay_stream(
         spark, table, f"{path}/seg-0000[23]", str(tmp_path / "ckptB"), schema,

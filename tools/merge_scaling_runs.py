@@ -1,149 +1,75 @@
-"""Merge two `jobs/scaling_bench.py` summary JSONs into one
-BENCH/BASELINE.md with best-of-both throughput per (mode, level) and
-BOTH runs' machine calibrations reported side by side.
+"""Render one or more `jobs/scaling_bench.py` summary JSONs as markdown
+tables on stdout: the machine calibration, the best replay throughput
+per parallelism level across the runs, and the N -> 4N scaling
+efficiency next to each run's calibration ceilings.
 
-Why this exists: single-JVM runs on this VM swing ±30% with machine
-phase, so since round 3 the published scaling evidence is the best of
-two full generator runs (3 interleaved reps each, ~30 min apart) —
-six samples per cell — judged against the calibration ceilings of the
-sessions that produced them.
+Single-JVM runs swing ±30% with the host's phase, so the published
+scaling evidence is the best of several generator runs, each judged
+against the calibration of the run that produced it. Runs must
+share `levels` and `events`. Nothing is written to disk; paste the
+tables into BENCH/BASELINE.md by hand.
 
 Usage:
-    python tools/merge_scaling_runs.py run1.json run2.json [round_label]
+    python tools/merge_scaling_runs.py run1.json [run2.json ...]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
-import os
-import sys
-from datetime import datetime, timezone
-
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main(run1_path: str, run2_path: str, label: str = "round 4") -> None:
-    r1 = json.load(open(run1_path))
-    r2 = json.load(open(run2_path))
-    assert r1["levels"] == r2["levels"] and r1["events"] == r2["events"]
-    levels = r1["levels"]
+def efficiency(rate: dict, a: int, b: int) -> float:
+    """Speedup from level ``a`` to level ``b`` over the ideal ``b / a``;
+    ``rate`` maps each level (a JSON key) to a throughput."""
+    return (rate[str(b)] / rate[str(a)]) / (b / a)
+
+
+def render(runs: list[dict]) -> str:
+    levels = runs[0]["levels"]
     pairs = [(a, b) for a in levels for b in levels if b == 4 * a]
-    modes = list(r1["throughput"].keys())
+    best = {str(c): max(r["throughput"][str(c)] for r in runs) for c in levels}
 
-    def tp(run: dict, m: str, c: int) -> float:
-        return run["throughput"][m][str(c)] if str(c) in run["throughput"][m] else run["throughput"][m][c]
+    def ceilings(kind: str, a: int, b: int) -> str:
+        # fixed total work: the rate is the reciprocal of the seconds
+        rates = [{c: 1 / s for c, s in r[f"{kind}_calibration_sec"].items()} for r in runs]
+        return " / ".join(f"{efficiency(x, a, b):.3f}" for x in rates)
 
-    best = {
-        m: {c: max(tp(r1, m, c), tp(r2, m, c)) for c in levels} for m in modes
-    }
-    eff = {
-        m: {f"{a}->{b}": round((best[m][b] / best[m][a]) / (b / a), 3) for a, b in pairs}
-        for m in modes
-    }
-    ts = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
-    cal = lambda run, kind, p: run[f"{kind}_calibration_efficiency"][p]
-    L = [
-        "# BENCH/BASELINE — measured CDC replay throughput + scaling",
-        "",
-        f"Generated {ts} ({label}) by `python jobs/scaling_bench.py` run",
-        f"TWICE (~30 min apart) and merged by `tools/merge_scaling_runs.py`:",
-        f"{r1['events']:,} synthetic change events over {r1['docs']:,} doc_ids,",
-        "materialized once to parquet per run and replayed from storage — the",
-        "SAME stored binlog at every parallelism level within a run, fresh JVM",
-        "per run, 3 interleaved reps per level per generator run = best of 6",
-        "samples per cell (single-JVM runs on this VM swing ±30% with machine",
-        "phase; both sessions' calibrations below).",
-        "",
-        "Sandbox stand-in for the north rule's two cluster sizes: the",
-        "identical job at N and 4N local cores; efficiency =",
-        "(throughput_4N / throughput_N) / 4. `dataflow` = stored binlog",
-        "read -> normalize -> LWW resolve; `merge` adds the",
-        "exactly-once MERGE commit into the merge-on-read table.",
-        "",
-        "## Machine ceilings (calibration, no Spark, no JVM)",
-        "",
-        "| pair | pure-CPU efficiency (run1 / run2) | memory-stream efficiency (run1 / run2) |",
-        "|---|---|---|",
-    ]
+    cols = " | ".join(f"local[{c}]" for c in levels)
+    rule = "|---|---|" + "---|" * len(levels)
+    L = [f"## Machine calibration (seconds, no Spark, no JVM; {len(runs)} run(s))",
+         "", f"| run | kind | {cols} |", rule]
+    for i, r in enumerate(runs, 1):
+        for kind, name in (("cpu", "pure-CPU"), ("mem", "memory-stream")):
+            secs = r[f"{kind}_calibration_sec"]
+            L.append(f"| {i} | {name} | " + " | ".join(f"{secs[str(c)]:.2f}" for c in levels) + " |")
+    L += ["", f"## Replay throughput (best of {len(runs)} run(s), ev/s)",
+          "", f"| mode | {cols} |", rule[4:],
+          "| merge | " + " | ".join(f"{best[str(c)]:,.0f}" for c in levels) + " |",
+          "", "## Scaling efficiency ((tp_4N / tp_N) / 4; ceilings per run)",
+          "", "| pair | engine efficiency | pure-CPU ceiling | memory-stream ceiling |",
+          "|---|---|---|---|"]
     for a, b in pairs:
-        p = f"{a}->{b}"
-        L.append(
-            f"| {a} -> {b} procs | {cal(r1,'cpu',p):.3f} / {cal(r2,'cpu',p):.3f} "
-            f"| {cal(r1,'mem',p):.3f} / {cal(r2,'mem',p):.3f} |"
-        )
-    L += [
-        "",
-        "Two hardware ceilings bound ANY workload on this single box:",
-        "pure-CPU work scales near-ideally in the 2->8 region, but",
-        "**memory-streaming work does not scale at all** (the VM's memory",
-        "bandwidth saturates at ~2 cores' worth of streaming). The replay",
-        "job streams columnar token arrays through normalize/shuffle — its",
-        "achievable single-box ceiling lies between the two columns. On a",
-        "real 4N-executor cluster each executor contributes its own memory",
-        "bandwidth, so this constraint is a sandbox artifact, not an engine",
-        "property: the engine's plans (map-side partial aggregation, ONE",
-        "full-payload shuffle, bucket-aligned writes, concurrent",
-        "envelope-lineage job) add no cross-executor serialization beyond",
-        "the one inherent shuffle — round 4 additionally measured a",
-        "shuffle-thin LWW variant and shuffle-codec alternatives and pinned",
-        "the residual gap to raw bandwidth, not shuffle protocol",
-        "(SCALE_EVIDENCE.md \"LWW shuffle-byte A/B\").",
-        "",
-        "## Replay throughput (best of 6 interleaved reps, 2 sessions)",
-        "",
-        "| mode | " + " | ".join(f"local[{c}] ev/s" for c in levels) + " |",
-        "|---|" + "---|" * len(levels),
-    ]
-    for m in modes:
-        L.append("| " + m + " | " + " | ".join(f"{best[m][c]:,.0f}" for c in levels) + " |")
-    L += [
-        "",
-        "`merge` is the headline configuration (merge-on-read:",
-        "O(batch) delta appends; compaction amortized separately —",
-        "SCALE_EVIDENCE.md compares write amplification and the",
-        "`auto_compact_files` commit-time maintenance policy).",
-        "",
-        "| mode | pair | engine efficiency | cpu ceiling | mem-stream ceiling |",
-        "|---|---|---|---|---|",
-    ]
-    for m in modes:
-        for a, b in pairs:
-            p = f"{a}->{b}"
-            cc = f"{min(cal(r1,'cpu',p),cal(r2,'cpu',p)):.2f}-{max(cal(r1,'cpu',p),cal(r2,'cpu',p)):.2f}"
-            mc = f"{min(cal(r1,'mem',p),cal(r2,'mem',p)):.2f}-{max(cal(r1,'mem',p),cal(r2,'mem',p)):.2f}"
-            L.append(f"| {m} | {a} -> {b} | {eff[m][p]:.3f} | {cc} | {mc} |")
-    L += [
-        "",
-        "Reading: at both pairs the engine lands BETWEEN the box's pure-CPU",
-        "and memory-stream ceilings — it scales as far as a mixed",
-        "CPU/bandwidth workload can on shared-bandwidth hardware, and BEATS",
-        "the pure memory-stream ceiling at every pair. The 0.8 north-rule",
-        "bar is not reachable on a box whose own numpy stream benchmark",
-        "scales below 0.45; per-executor memory buses on a real cluster",
-        "remove exactly this ceiling. See SCALE_EVIDENCE.md for the",
-        "write+commit isolation that pins the non-dataflow constant to",
-        "0.6-1.7s and the round-4 LWW strategy A/B.",
-        "",
-        "10^10-event scale is evidenced by sustained-rate extrapolation:",
-        "the generator is lazy (`spark.range`-derived, never materialized)",
-        "and per-batch state is bounded by doc cardinality, so wall time",
-        "scales linearly in events at fixed doc count (linearity table in",
-        "SCALE_EVIDENCE.md).",
-        "",
-        "## Further scale evidence",
-        "",
-        "Skew handling, write amplification (including the copy-on-write",
-        "record behind its removal), write+commit isolation, the LWW A/B,",
-        "and linearity measurements live in",
-        "[SCALE_EVIDENCE.md](SCALE_EVIDENCE.md) — maintained separately so",
-        "rerunning the generator never destroys them.",
-    ]
-    out = os.path.join(ROOT, "BENCH", "BASELINE.md")
-    with open(out, "w") as f:
-        f.write("\n".join(L) + "\n")
-    print(json.dumps({"throughput_best": best, "efficiency": eff}))
-    print(f"wrote {out}", file=sys.stderr)
+        L.append(f"| {a} -> {b} | {efficiency(best, a, b):.3f} "
+                 f"| {ceilings('cpu', a, b)} | {ceilings('mem', a, b)} |")
+    return "\n".join(L)
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("runs", nargs="+", help="scaling_bench.py summary JSON files")
+    args = ap.parse_args()
+    runs = []
+    for path in args.runs:
+        with open(path) as f:
+            runs.append(json.load(f))
+    for path, r in zip(args.runs[1:], runs[1:]):
+        for key in ("levels", "events"):
+            if r[key] != runs[0][key]:
+                ap.error(f"{path}: {key} {r[key]} differs from "
+                         f"{args.runs[0]}'s {runs[0][key]}")
+    print(render(runs))
 
 
 if __name__ == "__main__":
-    main(*sys.argv[1:])
+    main()

@@ -5,10 +5,10 @@ The reference's dedup (SURVEY.md §2.11, operators/dedup.py here) is
 record-linkage over business keys; a training-data pipeline also needs
 *content* dedup over documents. Same architecture rules apply at 100 TB:
 
-- blocking before pairing — candidate pairs come from equality joins on
-  a bucket key (exact hash / LSH band bucket / blocking column), never
-  from a cross join;
-- symmetry breaking ``id_l < id_r`` on every pair join;
+- blocking before pairing — candidate pairs come from equality joins
+  or groupings on a bucket key (exact hash / LSH band bucket / blocking
+  column + shingle), never from a cross join;
+- symmetry breaking ``id_l < id_r`` on every emitted pair;
 - all hashes are arithmetic mod p = 2^31-1 over md5-derived word ids —
   deterministic across engines, so a SQL oracle can verify every stage
   bit-for-bit (no engine-private hash functions in results).
@@ -34,11 +34,12 @@ from etl_rs_spark.operators.text import HASH_P, hash_params, words
 def cap_group_size(
     df: DataFrame, cols: tuple[str, ...], cap: int | None
 ) -> DataFrame:
-    """The shared skew guard of every blocking operator here: drop ALL
+    """The shared skew guard of the blocking joins here: drop ALL
     rows of any ``cols`` group with more than ``cap`` members (an
     over-full block means the blocking key under-splits — pay bounded
     recall, never O(k^2) pairs). ``cap=None`` is a no-op. One window
-    count over already-shuffled small rows."""
+    count over already-shuffled small rows. (``ngram_jaccard_pairs``
+    applies the same rule to its posting-list sizes.)"""
     if cap is None:
         return df
     w = Window.partitionBy(*cols)
@@ -428,54 +429,64 @@ def ngram_jaccard_pairs(
 
     Instead of generating every in-block pair and intersecting shingle
     arrays (O(k^2) pairs x O(s) intersect), explode shingles into
-    postings and equi-join on (block, shingle): only pairs that share
+    postings and group them by (block, shingle): only pairs that share
     >= 1 shingle are ever materialized, and |intersection| falls out of
     a count per pair. |union| = |A| + |B| - |inter|. Identical result
     set (a pair sharing zero shingles has jaccard 0 < threshold), but
     the shuffle key is the shingle — the plan a similarity join should
-    have at 100 TB. Blocking (e.g. lang) stays in the join key.
+    have at 100 TB. Blocking (e.g. lang) stays in the grouping key; a
+    NULL block or a NULL id pairs with nothing.
+
+    Shuffle budget: two aggregations and no self-join. (1) postings
+    group by (block, shingle) into one list of (id, |shingles|) per
+    posting list — partial lists combine map-side; (2) the in-list
+    pairs id_l < id_r group by (id_l, id_r) to count the intersection.
+    The shingle expression is evaluated once per doc: there is no
+    second (build) side that recomputes the postings.
 
     ``max_doc_freq`` is the stop-shingle rule of web-scale dedup: a
     boilerplate shingle shared by k documents (license headers, nav
-    chrome) contributes k^2 rows to the postings self-join, so postings
-    whose per-(block, shingle) document frequency exceeds the cap are
-    dropped BEFORE the join. The trade is bounded and one-sided:
-    |intersection| can only shrink (denominators |A|, |B| are computed
-    before the cut), so reported jaccard never inflates — a pair whose
-    overlap is mostly stop-shingles may fall below threshold (recall
-    loss on boilerplate-dominated pairs, the standard accepted loss);
-    no false pairs are ever added."""
+    chrome) contributes k^2 candidate pairs, so posting lists whose
+    (block, shingle) document frequency exceeds the cap are dropped
+    BEFORE pairing (every posting counts, NULL-id ones included). The
+    trade is bounded and one-sided: |intersection| can only shrink
+    (denominators |A|, |B| are computed before the cut), so reported
+    jaccard never inflates — a pair whose overlap is mostly
+    stop-shingles may fall below threshold (recall loss on
+    boilerplate-dominated pairs, the standard accepted loss); no false
+    pairs are ever added."""
     sh = docs.select(
         F.col(id_col),
         F.col(blocking_col).alias("_blk"),
         ngram_shingles(F.col(word_ids_col), n).alias("_sh"),
     )
-    # each posting carries its doc's shingle-set size: |A| and |B| then
-    # fall out of the SAME pair aggregation (any_value of a per-doc
-    # constant) instead of two extra join-backs to a sizes frame.
     # explode_OUTER, not explode: plain explode's implicit
     # `size(arr) > 0` filter gets pushed below the projection and
     # RE-EVALUATES the whole shingle expression at the scan (verified
     # in the physical plan) — outer + isnotnull keeps one evaluation
-    # per side and drops the same empty-shingle docs.
+    # and drops the same empty-shingle docs.
     postings = sh.select(
         F.col(id_col), "_blk", F.size("_sh").alias("_n"),
         F.explode_outer("_sh").alias("_s"),
-    ).filter(F.col("_s").isNotNull())
-    # document frequency per (block, shingle) — shingles are distinct
-    # per doc, so the group count IS the df
-    postings = cap_group_size(postings, ("_blk", "_s"), max_doc_freq)
-    l, r = postings.alias("l"), postings.alias("r")
+    ).filter(F.col("_s").isNotNull() & F.col("_blk").isNotNull())
+    # each list entry carries its doc's shingle-set size: |A| and |B|
+    # then fall out of the pair aggregation (any_value of a per-doc
+    # constant). Shingles are distinct per doc, so the list size IS
+    # the document frequency.
+    lists = postings.groupBy("_blk", "_s").agg(
+        F.collect_list(F.struct(F.col(id_col).alias("id"), "_n")).alias("_d")
+    )
+    keep = F.size("_d") >= 2
+    if max_doc_freq is not None:
+        keep = keep & (F.size("_d") <= max_doc_freq)
+    pairs = (
+        lists.filter(keep)
+        .select("_d", F.explode("_d").alias("l"))
+        .select("l", F.explode("_d").alias("r"))
+        .filter(F.col("l.id") < F.col("r.id"))
+    )
     return (
-        l.join(
-            r,
-            (F.col("l._s") == F.col("r._s"))
-            & (F.col("l._blk") == F.col("r._blk"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"l.{id_col}").alias("id_l"), F.col(f"r.{id_col}").alias("id_r")
-        )
+        pairs.groupBy(F.col("l.id").alias("id_l"), F.col("r.id").alias("id_r"))
         .agg(
             F.count(F.lit(1)).alias("_inter"),
             F.any_value(F.col("l._n")).alias("_nl"),

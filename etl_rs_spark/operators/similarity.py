@@ -415,8 +415,11 @@ def exact_pairs_blocked(
             for p in range(n_blocks)
         ]
     )
+    # a NULL vector scores NULL (the DuckDB twin's rule) and pairs with
+    # nothing; it would also break the group's dense matrix build
     exploded = (
-        df.select(F.col(id_col), F.col(vec_col), blk.alias("_blk"))
+        df.filter(F.col(vec_col).isNotNull())
+        .select(F.col(id_col), F.col(vec_col), blk.alias("_blk"))
         .select(id_col, vec_col, "_blk", F.explode(group_keys).alias("_g"))
         .select(
             id_col, vec_col, "_blk",

@@ -2,10 +2,16 @@
 
 Runs the full pretraining-data flow over a documents table:
 
-    exact dedup -> near-dup groups (minhash LSH -> connected
+    exact dedup -> near-dup groups (n-gram Jaccard pairs -> connected
     components, one survivor per cluster) -> benchmark decontamination
     -> source-weighted mixing -> fixed-length sequence packing
     -> parquet shards
+
+Each document is hashed to word ids once: the exact-dedup survivors'
+word ids are materialized by one eager local checkpoint whose job also
+counts them (an Observation; the count sizes the stop-shingle cap), and
+every later stage reads that frame. A run therefore pays exact dedup
+and word hashing once, not once per action.
 
 Usage (same launch mode as jobs/replay.py):
 
@@ -42,6 +48,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from etl_rs_spark.operators import dedup_scale as DS
@@ -70,40 +77,52 @@ def prep_corpus(
     (shard, chunk, tokens, ...) DataFrame out — exact dedup -> near-dup
     survivor filter -> decontaminate -> mix -> pack, each stage the same
     operator the contract queries gate. ``on_stage(name, df)`` is an
-    optional observer (the CLI uses it for per-stage row counts; it may
-    return the count, which the near-dup stop-shingle cap then reuses
-    instead of recounting). The returned plan is LAZY — the caller
-    decides the action (write, count, collect)."""
+    optional observer called once per stage (the CLI uses it for
+    per-stage row counts); its return value is ignored.
+
+    Each document's word ids are computed once: the post-dedup word-id
+    frame is materialized by ONE eager ``localCheckpoint`` (the fault
+    model ``connected_components`` already imposes on this pipeline)
+    and feeds the pair search, the survivor anti-join, decontamination,
+    mixing and packing, so the final action re-runs neither exact dedup
+    nor word hashing. Its row count, which sizes the stop-shingle cap,
+    is an ``Observation`` riding that checkpoint job, not a recount.
+    Past these checkpoints (and connected components' own) the returned
+    plan is LAZY — the caller decides the action (write, count, collect)."""
 
     def note(name, df):
-        n = on_stage(name, df) if on_stage else None
-        return n if (n is not None and n >= 0) else None
+        if on_stage:
+            on_stage(name, df)
 
     note("input", docs)
 
-    # 1. exact dedup: digest-keyed survivors, content never shuffled
+    # 1. exact dedup: digest-keyed survivors, content never shuffled.
+    # The count sizes the stop-shingle cap (semantics, not metrics), so
+    # it is taken whether or not an observer runs.
     survivors = DS.dedup_digest_stats(docs, ["text"]).select("doc_id")
     docs = docs.join(survivors, "doc_id", "left_semi")
-    n_exact = note("exact_dedup", docs)
+    obs = Observation("word_ids")
+    wi = (
+        DS.doc_word_ids_hashed(docs, extra_cols=("lang", "source"))
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    note("exact_dedup", wi)
 
     # 2. near-dup groups -> keep one survivor per cluster
     if jaccard > 0:
-        # the stop-shingle cap scales with corpus size — counted even
-        # when no observer runs (the cap is semantics, not metrics)
-        n_for_cap = n_exact if n_exact is not None else docs.count()
-        wi = DS.doc_word_ids_hashed(docs, extra_cols=("lang",))
         edges = DS.ngram_jaccard_pairs(
             wi, blocking_col="lang", n=3, threshold=jaccard,
-            max_doc_freq=max(64, n_for_cap // 100),
+            max_doc_freq=max(64, int(obs.get["n"]) // 100),
         )
         drops = dedup_survivors(edges).filter(~F.col("is_survivor")).select(
             F.col("node").alias("doc_id")
         )
-        docs = docs.join(drops, "doc_id", "left_anti")
-        note("near_dedup", docs)
+        wi = wi.join(drops, "doc_id", "left_anti")
+        note("near_dedup", wi)
+    wi = wi.drop("lang")
 
     # 3. decontamination against the probe corpus
-    wi = DS.doc_word_ids_hashed(docs, extra_cols=("source",))
     if probes is not None:
         probe_ids = DS.doc_word_ids_hashed(probes)
         wi = DS.decontaminate(
@@ -178,15 +197,13 @@ def main() -> None:
     t0 = time.perf_counter()
     last = [t0]
 
-    def stage(name: str, df) -> int:
+    def stage(name: str, df) -> None:
         if args.no_stage_counts:
-            return -1
-        n = df.count()
+            return
         metrics["stages"][name] = {
-            "rows": n, "sec": round(time.perf_counter() - last[0], 2),
+            "rows": df.count(), "sec": round(time.perf_counter() - last[0], 2),
         }
         last[0] = time.perf_counter()
-        return n
 
     docs = spark.read.parquet(args.docs)
     probes = spark.read.parquet(args.probes) if args.probes else None
@@ -202,8 +219,6 @@ def main() -> None:
     # stats ride the write via observe — one pass, and an EMPTY result
     # (e.g. an over-aggressive probe set dropped everything) still
     # reports 0 chunks instead of crashing on an unreadable empty dir
-    from pyspark.sql import Observation
-
     obs = Observation("packed")
     packed = packed.observe(
         obs,

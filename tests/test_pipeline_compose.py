@@ -186,6 +186,23 @@ def test_full_training_pipeline_composes(spark):
     assert 10 in ids_after                                # other-lang near-dup kept
 
 
+def test_prep_corpus_matches_reference(spark):
+    """The shipped composition, ``jobs/corpus_prep.prep_corpus``, packs
+    exactly the reference streams, and its final plan reads the
+    materialized word ids instead of recomputing exact dedup (no sha2
+    digest) at write time."""
+    from jobs.corpus_prep import prep_corpus
+
+    schema = "doc_id long, text string, lang string, source string"
+    packed = prep_corpus(
+        spark.createDataFrame(DOCS, schema), spark.createDataFrame(PROBES, schema),
+        WEIGHTS, max_len=MAX_LEN, shards=2, jaccard=0.6, default_weight=0.0,
+    )
+    got = {(r["shard"], r["chunk"]): tuple(r["tokens"]) for r in packed.collect()}
+    assert got == _py_pipeline()
+    assert "sha2" not in packed._jdf.queryExecution().executedPlan().toString()
+
+
 def test_streaming_snapshot_mix_pack_equals_batch(spark, tmp_path):
     """Streaming mix->pack parity (repack-per-snapshot contract).
 

@@ -75,6 +75,17 @@ def test_q07_pair_join_is_hash_not_nested_loop(spark):
     assert "Join" in p
 
 
+def test_ngram_pair_search_is_one_pass_without_join(spark):
+    """q21's n-gram pair search evaluates its shingle expression once
+    and joins nothing: postings group by (block, shingle) and the
+    in-list pairs aggregate, so no second copy of scan -> shingles ->
+    exchange feeds a build side."""
+    df = entry.q21_ngram_jaccard_pairs(spark, SF)
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert p.count("zip_with(zip_with(") == 1
+    assert "Join" not in p
+
+
 def test_media_metadata_prunes_binary(spark):
     media = mm.synth_media(spark, 50)
     media.write.mode("overwrite").parquet("/tmp/_plan_media_pq")

@@ -591,8 +591,8 @@ def test_simhash_bucket_cap_bounds_skewed_buckets(spark):
 
 def test_ngram_hot_shingle_cap_bounds_join_rows(spark):
     """One boilerplate 3-gram shared by every doc ('the common header')
-    makes the postings self-join O(n^2); capping per-(block, shingle)
-    document frequency removes those postings BEFORE the join while
+    makes in-list pairing O(n^2); capping per-(block, shingle)
+    document frequency removes those postings BEFORE pairing while
     keeping true near-dup pairs whose overlap is real content."""
     n_docs = 40
     header = [901, 902, 903]  # the boilerplate shingle source
@@ -610,17 +610,69 @@ def test_ngram_hot_shingle_cap_bounds_join_rows(spark):
     )
     got = {(r["id_l"], r["id_r"]): r["jaccard"] for r in capped.collect()}
     # dupA/dupB share 5 of their 5 surviving shingles (header 3-grams
-    # cut); every boilerplate-only pair is gone from the join entirely
+    # cut); every boilerplate-only pair is gone from the pairing entirely
     assert set(got) == {("dupA", "dupB")}
 
-    # join-row bound, measured on the operator's own posting construction:
+    # pair-row bound, measured on the operator's own posting construction:
     # sum of c^2 over (block, shingle) doc-frequencies c <= cap
     sh = docs.select(
         "lang", ds.ngram_shingles(F.col("word_ids"), 3).alias("_sh")
     ).select("lang", F.explode("_sh").alias("_s"))
     dfreq = [r["c"] for r in sh.groupBy("lang", "_s").agg(F.count(F.lit(1)).alias("c")).collect()]
     assert sum(c * c for c in dfreq) > n_docs * n_docs          # uncapped blow-up exists
-    assert sum(c * c for c in dfreq if c <= 5) < 10 * n_docs    # capped join is linear-ish
+    assert sum(c * c for c in dfreq if c <= 5) < 10 * n_docs    # capped pairing is linear-ish
+
+
+def test_ngram_pairs_match_brute_force_with_cap(spark):
+    """ngram_jaccard_pairs equals a brute-force python Jaccard over
+    every same-block pair with the stop-shingle cap applied: NULL-lang
+    copies of docs pair with nothing (not even with each other), a NULL
+    doc_id pairs with nothing
+    but still counts toward the cap (it pushes the (1,2,3) shingle of
+    block en over it), and an over-cap shingle contributes to no
+    intersection while every |A|, |B| keeps it."""
+    cap = 4
+    rows = [
+        (1, "en", [1, 2, 3, 4, 5, 6, 7, 8]),
+        (2, "en", [1, 2, 3, 4, 5, 6, 7, 9]),
+        (3, None, [1, 2, 3, 4, 5, 6, 7, 8]),
+        (8, None, [1, 2, 3, 4, 5, 6, 7, 9]),
+        (None, "en", [1, 2, 3, 4, 5, 6, 7, 8]),
+        (4, "en", [1, 2, 3, 50, 51, 52, 53]),
+        (5, "en", [1, 2, 3, 60, 61, 62]),
+        (6, "fr", [1, 2, 3, 4, 5, 6, 7, 8]),
+        (7, "fr", [1, 2, 3, 4, 5, 6, 70, 71]),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, lang string, word_ids array<bigint>")
+
+    def shingles(ids, n=3):
+        out = set()
+        for i in range(len(ids) - n + 1):
+            acc = ids[i] % tx.HASH_P
+            for j in range(1, n):
+                acc = (acc * 1_000_003 + ids[i + j]) % tx.HASH_P
+            out.add(acc)
+        return out
+
+    sh = [(i, lang, shingles(w)) for i, lang, w in rows]
+    dfreq = {}
+    for _i, lang, s in sh:
+        for x in s:
+            dfreq[(lang, x)] = dfreq.get((lang, x), 0) + 1
+    expected = {}
+    for i, la, sa in sh:
+        for j, lb, sb in sh:
+            if i is None or j is None or la is None or la != lb or not i < j:
+                continue
+            inter = sum(1 for x in sa & sb if dfreq[(la, x)] <= cap)
+            if inter and inter / (len(sa) + len(sb) - inter) >= 0.1:
+                expected[(i, j)] = inter / (len(sa) + len(sb) - inter)
+    assert expected == {(1, 2): 0.5, (6, 7): 0.5}  # the fixture's intent
+
+    got = ds.ngram_jaccard_pairs(
+        docs, blocking_col="lang", n=3, threshold=0.1, max_doc_freq=cap
+    ).collect()
+    assert {(r["id_l"], r["id_r"]): r["jaccard"] for r in got} == expected
 
 
 def test_decoded_stats_real_codecs(spark):
@@ -732,6 +784,17 @@ def test_exact_pairs_blocked_matches_truth(spark):
             ).collect()
         }
         assert got == truth, f"n_blocks={n_blocks}"
+
+
+def test_exact_pairs_blocked_skips_null_vectors(spark):
+    """A NULL vector scores NULL and pairs with nothing (the DuckDB
+    twin's rule); it must not sink the whole group's matrix build."""
+    qz = spark.createDataFrame(
+        [(1, [1, 0]), (2, [2, 0]), (3, None), (4, [0, 1])],
+        "vec_id int, qv array<bigint>",
+    )
+    got = sim.exact_pairs_blocked(qz, 0.5, id_col="vec_id", vec_col="qv", n_blocks=1)
+    assert [(r["id_l"], r["id_r"]) for r in got.collect()] == [(1, 2)]
 
 
 def test_brute_cutover_routing(vecs):

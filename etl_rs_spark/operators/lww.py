@@ -11,7 +11,8 @@ Two physical strategies, same semantics:
 - ``lww_agg``: ``max_by(payload_struct, order_struct)`` aggregation.
   Spark plans a partial (map-side) aggregate before the shuffle, so a
   hot key is pre-combined on every input partition — each mapper ships
-  ONE candidate row per key it saw.
+  ONE candidate row per key it saw. Built from SQL strings, so planning
+  costs a few py4j calls however wide the payload is.
 
 The engine uses ``lww_agg`` everywhere; ``lww_window`` stays as the
 baseline it is measured against.
@@ -43,7 +44,8 @@ def lww_agg(
     order: tuple[str, ...] = ("lsn", "offset"),
 ) -> DataFrame:
     payload = [c for c in df.columns if c != key]
-    ord_struct = F.struct(*[F.col(c) for c in order])
-    winner = F.max_by(F.struct(*[F.col(c) for c in payload]), ord_struct).alias("_w")
-    out = df.groupBy(key).agg(winner)
-    return out.select(key, *[F.col(f"_w.{c}").alias(c) for c in payload])
+    values = ", ".join(f"`{c}`" for c in payload)
+    keys = ", ".join(f"`{c}`" for c in order)
+    winner = F.expr(f"max_by(struct({values}), struct({keys})) AS _w")
+    out = df.groupBy(f"`{key}`").agg(winner)
+    return out.selectExpr(f"`{key}`", *[f"_w.`{c}` AS `{c}`" for c in payload])

@@ -54,7 +54,7 @@ def create_table_sql(
 ) -> str:
     """CREATE TABLE for the tokenized-sequence shape, hash-bucketed on
     the merge key (Iceberg's bucket transform = the lakehouse-lite
-    `_bucket` layout; MERGE then touches only matching files)."""
+    base's `_bucket` layout; MERGE then touches only matching files)."""
     return (
         f"CREATE TABLE IF NOT EXISTS {ident} "
         f"({key_col} STRING, {payload_ddl}, {META_DDL}) "

@@ -6,16 +6,17 @@ Iceberg runtime jar, so the same semantics are implemented on plain
 parquet + an atomic manifest-swap commit protocol (the shape of an
 Iceberg snapshot commit):
 
-- ``data/v{N}-{id}/_bucket={B}/*.parquet`` — immutable data files,
-  hash-bucketed by ``pmod(murmur3(key), n_buckets)`` (Spark's own
-  shuffle hash — see ``_bucket``; the manifest records the hash family
-  and ``open`` refuses a mismatch). A MERGE only appends the batch's
-  delta files to their buckets (Iceberg merge-on-read); readers
-  LWW-resolve each key across a bucket's files, and ``compact()`` folds
-  the deltas back into one base per bucket.
-- ``_snapshots/v{N}.json`` — the manifest: schema, per-bucket file
-  lists, committed batch ids, per-partition committed offsets, lineage
-  counters. Linked by exclusive create only after its data files are
+- ``data/v{N}-{id}/*.parquet`` — a MERGE's delta, one immutable file
+  per write task (Iceberg merge-on-read); readers LWW-resolve each key
+  across base and deltas, and ``compact()`` folds them into a new base
+  under ``data/v{N}-{id}/_bucket={B}/``, bucketed by
+  ``pmod(murmur3(key), n_buckets)`` (Spark's own shuffle hash — see
+  ``_bucket``; the manifest records the hash family and ``open``
+  refuses a mismatch).
+- ``_snapshots/v{N}.json`` — the manifest: schema, the base's files per
+  bucket (``buckets``), one file list per delta (``deltas``), committed
+  batch ids, per-partition committed offsets, lineage counters. Linked
+  by exclusive create only after its data files are
   durable, so every linked version is committed; ``_snapshots/CURRENT``
   is a hint the reader scans forward from. Readers see v{N} or
   v{N+1}, never a blend.
@@ -31,8 +32,8 @@ Replay of any subset of batches in any order reconverges to the same
 final state.
 
 Schema evolution is additive and metadata-driven: new payload columns
-widen the manifest schema; existing rows read back as null
-(mergeSchema); batches missing known columns are null-filled. Swapping
+widen the manifest schema, which every read applies, so existing rows
+read back as null; batches missing known columns are null-filled. Swapping
 this class for an Iceberg catalog table keeps every caller unchanged —
 ``merge`` maps to ``MERGE INTO`` + snapshot properties, ``read`` to a
 snapshot scan.
@@ -54,12 +55,10 @@ META_COLS = ["_lsn", "_offset", "_deleted"]
 ENVELOPE_COLS = ["op", "lsn", "offset", "partition", "ts"]
 
 #: the bucket-assignment hash family this code computes. Recorded in the
-#: manifest at table creation and asserted on open: silently changing
-#: the family (as an earlier revision did, xxhash64 -> murmur3) makes
-#: merge() compute touched buckets in a different bucket space than the
-#: persisted files — existing rows for a key sit in an unscanned bucket
-#: and are never LWW-resolved. Refusing the mismatch turns silent
-#: duplicate keys into a loud error.
+#: manifest at table creation and asserted on open: the family is what
+#: the base's ``_bucket={B}`` directories mean, so a table bucketed under
+#: another family (an earlier revision used xxhash64) is refused instead
+#: of getting a base that mixes two placements.
 BUCKET_HASH = "murmur3-pmod"
 
 
@@ -75,13 +74,15 @@ class ConcurrentCommitError(RuntimeError):
 
 
 class LakehouseTable:
-    """Merge-on-read lake table: a MERGE only APPENDS the batch's delta
-    files to their buckets; readers LWW-resolve (max (_lsn,_offset) per
-    key) across base+delta files, and ``compact()`` folds deltas back
-    into one base per bucket. The per-batch write cost is O(batch), not
-    O(table) — the Iceberg MOR/positional-delete shape — at the price
-    of an agg at read time until compaction (``auto_compact_files``
-    bounds it)."""
+    """Merge-on-read lake table: a MERGE only APPENDS the batch as one
+    delta, one file per write task with no bucketing; readers
+    LWW-resolve (max (_lsn,_offset) per key) across base+delta files,
+    and ``compact()`` folds the deltas back into one bucketed base. The
+    per-batch write cost is O(batch), not O(table) — the Iceberg
+    MOR/positional-delete shape — at the price of an agg at read time
+    until compaction (``auto_compact_files`` bounds it). Nothing reads
+    the bucket layout: every read and compaction resolves all live
+    files through one shuffle."""
 
     def __init__(
         self,
@@ -93,7 +94,8 @@ class LakehouseTable:
         auto_compact_files: int | None = None,
     ):
         """``auto_compact_files``: the maintenance policy — after a merge
-        commit, if any bucket holds more than this many live files,
+        commit, if the read depth (``_depth``: the most base files in any
+        bucket plus the number of deltas) exceeds this,
         ``compact()`` runs as its own follow-up snapshot commit. Bounds
         read amplification (a read scans base + every delta file and
         pays an LWW agg over all of them) without a caller-managed
@@ -137,6 +139,7 @@ class LakehouseTable:
                         "auto_compact_files": auto_compact_files,
                         "payload_schema": [],  # [name, ddl_type] pairs, additive
                         "buckets": {},
+                        "deltas": [],
                         "committed": [],
                         "offsets": {},
                         "lineage": {},
@@ -153,9 +156,8 @@ class LakehouseTable:
         # the MANIFEST is authoritative for layout on an existing table:
         # constructor arguments describe table CREATION; opening with a
         # different n_buckets (e.g. a job hardcoding 32 against a
-        # 16-bucket table) must not make merge() compute touched buckets
-        # in the wrong bucket space — existing rows would sit in
-        # unscanned buckets and never LWW-resolve (silent duplicates).
+        # 16-bucket table) must not make compact() write a base in a
+        # different bucket space than the one the manifest records.
         self.key_col = man.get("key_col", key_col)
         self.n_buckets = int(man.get("n_buckets", n_buckets))
         # maintenance policy, not layout: an explicit constructor value
@@ -164,8 +166,8 @@ class LakehouseTable:
             self.auto_compact_files = auto_compact_files
         else:
             self.auto_compact_files = man.get("auto_compact_files")
-        # refuse to open a table bucketed under a different hash family —
-        # merging into it would scan the wrong buckets (see BUCKET_HASH).
+        # refuse to open a table bucketed under a different hash family
+        # (see BUCKET_HASH).
         # Manifests predating the field were written by the murmur3 code
         # lineage, so absence defaults to the current family.
         persisted = man.get("bucket_hash", BUCKET_HASH)
@@ -220,12 +222,14 @@ class LakehouseTable:
             raise ValueError(f"no snapshot v{version} at {self.path!r}")
         try:
             with open(path) as f:
-                return json.load(f)
+                man = json.load(f)
         except json.JSONDecodeError as e:
             # manifests are written tmp+link (never partially visible), so
             # a parse failure means disk-level corruption — say which
             # snapshot file, so the operator can move it aside
             raise ValueError(f"corrupt manifest {path!r}: {e}") from e
+        man.setdefault("deltas", [])  # older manifests: all files are base
+        return man
 
     def _write_manifest(self, man: dict, version: int) -> None:
         final = self._manifest_path(version)
@@ -256,19 +260,19 @@ class LakehouseTable:
         """Bucket id = pmod(murmur3(key), n_buckets) — DELIBERATELY the
         same hash family Spark's own shuffle partitioner uses
         (HashPartitioning = pmod(Murmur3Hash, n)). Consequence: the
-        upstream LWW groupBy, which shuffles on the key,
-        leave every bucket's rows CO-LOCATED in one task whenever the
-        shuffle partition count and n_buckets divide each other — so the
-        bucketed write below needs NO extra repartition (one full-payload
-        shuffle saved per MERGE commit)."""
+        compaction's LWW groupBy, which shuffles on the key, leaves every
+        bucket's rows CO-LOCATED in one task whenever the shuffle
+        partition count and n_buckets divide each other — so the
+        bucketed base write needs NO extra repartition (one full-payload
+        shuffle saved per compaction)."""
         return F.pmod(F.hash(col), F.lit(self.n_buckets)).cast("int")
 
     def _bucket_aligned(self) -> bool:
         """True when the session's shuffle partition count and n_buckets
-        divide each other — the condition under which an upstream
-        key-shuffle (the LWW groupBy) leaves every bucket's rows
-        co-located in a bounded number of tasks, so the bucketed write
-        needs no extra repartition.
+        divide each other: the compaction's key-shuffle (the LWW groupBy)
+        then leaves every bucket's rows in a bounded number of tasks, so
+        the bucketed base write needs no repartition. Merges write
+        unbucketed deltas and never consult it.
 
         AQE interaction (r3 ADVICE): adaptive partition COALESCING does
         not void the guarantee — coalescing merges whole reducer
@@ -277,7 +281,7 @@ class LakehouseTable:
         still emits at most one file per (bucket, task-holding-it), and
         that count only shrinks under coalescing. The one AQE rule that
         can split a partition, the skew-join handler, has no join to act
-        on: the write path's only shuffle is the LWW aggregate. Routing
+        on: the compaction's only shuffle is the LWW aggregate. Routing
         would stay correct regardless, because partitionBy keys on the
         _bucket VALUE, not the task."""
         try:
@@ -287,43 +291,41 @@ class LakehouseTable:
         return sp % self.n_buckets == 0 or self.n_buckets % sp == 0
 
     def _bucket_colocated(self, df: DataFrame) -> DataFrame:
-        """The pre-write co-location guard: with an aligned shuffle conf
-        this is a no-op (the fast path — one full-payload shuffle saved
-        per MERGE commit); with Spark's default 200 partitions and 32
-        buckets, every reducer task could otherwise emit a file per
-        bucket (tasks x buckets small files per commit), so misaligned
-        callers pay one repartition on the _bucket column instead."""
+        """The co-location guard of the bucketed base write: a no-op under
+        an aligned shuffle conf; otherwise (e.g. 200 partitions, 32
+        buckets) every reducer task could emit a file per bucket, so
+        misaligned callers pay one repartition on _bucket instead."""
         if self._bucket_aligned():
             return df
         return df.repartition(self.n_buckets, F.col("_bucket"))
 
-    def _write_buckets(self, df: DataFrame, version: int) -> dict[str, list[str]]:
-        """Bucket-partitioned write of ``df`` (carrying ``_bucket``) into a
-        writer-unique ``data/v{N}-{uuid}``; returns the new files per
-        bucket. Two writers racing the same target version write to
-        DIFFERENT directories, so the loser's mode('overwrite') cannot
-        delete files a winner's committed manifest already references —
-        the os.link manifest guard stays the sole arbiter (Iceberg gets
-        the same property from unique data file names). A losing attempt
-        leaves an orphan directory; harmless, removable by any GC that
-        keeps directories referenced by retained manifests.
+    def _data_dir(self, version: int) -> str:
+        """A writer-unique ``data/v{N}-{uuid}``: racing writers of one
+        version never share a directory, so a loser's mode('overwrite')
+        cannot delete files a winner's manifest references (the os.link
+        guard stays the sole arbiter). A loser leaves an orphan dir."""
+        return os.path.join(self.path, "data", f"v{version}-{uuid.uuid4().hex[:8]}")
 
-        Aligned shuffle conf -> no repartition: the input arrives
-        key-shuffled and _bucket is the same Murmur3 family, so the
-        dynamic partitionBy emits ~1 file per bucket per task holding
-        it. Misaligned callers get one repartition instead of tasks x
-        buckets small files."""
-        out_dir = os.path.join(self.path, "data", f"v{version}-{uuid.uuid4().hex[:8]}")
+    def _write_buckets(self, df: DataFrame, version: int) -> dict[str, list[str]]:
+        """Bucket-partitioned write of a rewrite's base ``df`` (carrying
+        ``_bucket``, co-located by ``_bucket_colocated``); returns the new
+        files per bucket."""
+        out_dir = self._data_dir(version)
         self._bucket_colocated(df).write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
-        return {
-            d.split("=", 1)[1]: [
-                os.path.join(out_dir, d, f)
-                for f in os.listdir(os.path.join(out_dir, d))
-                if f.endswith(".parquet")
-            ]
-            for d in os.listdir(out_dir)
-            if d.startswith("_bucket=")
-        }
+        return {d.split("=", 1)[1]: _parquet_files(os.path.join(out_dir, d))
+                for d in os.listdir(out_dir) if d.startswith("_bucket=")}
+
+    @staticmethod
+    def _live_files(man: dict) -> list[str]:
+        """Every file a read of ``man`` scans: the base, then each delta."""
+        return [f for fl in [*man["buckets"].values(), *man["deltas"]] for f in fl]
+
+    @staticmethod
+    def _depth(man: dict) -> int:
+        """Read depth, what ``auto_compact_files`` bounds: the most base
+        files in any bucket plus one per delta (a delta may hold rows of
+        every bucket)."""
+        return max(map(len, man["buckets"].values()), default=0) + len(man["deltas"])
 
     def _full_schema_ddl(self, man: dict) -> str:
         cols = [f"`{self.key_col}` string"]
@@ -332,15 +334,12 @@ class LakehouseTable:
         return ", ".join(cols)
 
     def _read_files(self, man: dict, files: list[str]) -> DataFrame:
+        """``files`` read with the manifest schema (``_widen`` keeps every
+        file's types in it); columns a file lacks read back as null."""
         schema = StructType.fromDDL(self._full_schema_ddl(man))
         if not files:
             return self.spark.createDataFrame([], schema)
-        df = self.spark.read.option("mergeSchema", True).parquet(*files)
-        # null-fill columns added after these files were written
-        missing = {f.name: f.dataType for f in schema.fields if f.name not in df.columns}
-        for name, dtype in missing.items():
-            df = df.withColumn(name, F.lit(None).cast(dtype))
-        return df.select(*[f.name for f in schema.fields])
+        return self.spark.read.schema(schema).parquet(*files)
 
     def _resolve(self, df: DataFrame) -> DataFrame:
         """Merge-on-read LWW: latest (_lsn, _offset) version per key
@@ -352,8 +351,7 @@ class LakehouseTable:
 
     def _resolved(self, man: dict) -> DataFrame:
         """Every live file of ``man``, LWW-resolved to one row per key."""
-        files = [f for fl in man["buckets"].values() for f in fl]
-        return self._resolve(self._read_files(man, files))
+        return self._resolve(self._read_files(man, self._live_files(man)))
 
     def read(self, include_meta: bool = False, version: int | None = None) -> DataFrame:
         """Snapshot scan; ``version`` time-travels to any committed
@@ -401,19 +399,19 @@ class LakehouseTable:
         # refuses a type change BEFORE anything is written
         schema = _widen(man["payload_schema"], batch_schema)
 
-        chg = changes.withColumn("_bucket", self._bucket(F.col(self.key_col)))
-        chg = (
-            chg.withColumn("_lsn", F.col("lsn").cast("bigint"))
-            .withColumn("_offset", F.col("offset").cast("bigint"))
-            .withColumn("_deleted", F.col("op") == "delete")
+        chg = changes.selectExpr(
+            f"`{self.key_col}`",
+            # null-fill payload columns absent in batch
+            *[f"`{n}`" if n in chg_types else f"CAST(NULL AS {t}) AS `{n}`" for n, t in schema],
+            "CAST(lsn AS BIGINT) AS _lsn",
+            "CAST(`offset` AS BIGINT) AS _offset",
+            "op = 'delete' AS _deleted",
         )
-        for n, t in schema:  # null-fill payload columns absent in batch
-            if n not in chg.columns:
-                chg = chg.withColumn(n, F.lit(None).cast(t))
-        chg = chg.select(self.key_col, *[n for n, _ in schema], *META_COLS, "_bucket")
-        # the batch IS the delta: append its files, never read or
-        # rewrite existing data — O(batch) write cost
-        added = self._write_buckets(chg, man["version"] + 1)
+        # the batch IS the delta, one file per write task: append it,
+        # never read or rewrite existing data — O(batch) write cost
+        out_dir = self._data_dir(man["version"] + 1)
+        chg.write.mode("overwrite").parquet(out_dir)
+        delta = _parquet_files(out_dir)
 
         if callable(lineage):
             lineage = lineage()  # post-write: observations have landed
@@ -428,23 +426,17 @@ class LakehouseTable:
             for k, v in lineage.items():
                 m["lineage"][k] = int(m["lineage"].get(k, 0)) + int(v)
             m["committed"].append(batch_key)
-            self._replace_files(m, batch_key, added, lineage=lineage)
+            self._replace_files(m, batch_key, delta=delta, lineage=lineage)
 
         man = self._commit(man, mutate, batch_key)
         if man is None:  # another writer committed this batch
             return {"skipped": True, "version": self.manifest()["version"], "batch": batch_key}
-        out = {
-            "skipped": False,
-            "version": man["version"],
-            "touched_buckets": sorted(int(b) for b in added),
-        }
-        # maintenance policy: fold deltas once any bucket's live file
-        # count exceeds the threshold — a SEPARATE follow-up snapshot
-        # commit, after the batch is already durable, so a compaction
-        # failure never loses the merge
-        if self.auto_compact_files and any(
-            len(fl) > self.auto_compact_files for fl in man["buckets"].values()
-        ):
+        out = {"skipped": False, "version": man["version"]}
+        # maintenance policy: fold deltas once the read depth exceeds
+        # the threshold — a SEPARATE follow-up snapshot commit, after the
+        # batch is already durable, so a compaction failure never loses
+        # the merge
+        if self.auto_compact_files and self._depth(man) > self.auto_compact_files:
             try:
                 c = self.compact()
                 out["auto_compacted"] = True
@@ -497,22 +489,26 @@ class LakehouseTable:
         self,
         man: dict,
         label: str,
-        added: dict[str, list[str]],
         removed: frozenset[str] = frozenset(),
+        buckets: dict[str, list[str]] | None = None,
+        delta: list[str] | None = None,
         lineage: dict | None = None,
     ) -> None:
         """The file-level part of every commit's ``mutate``: drop
-        ``removed``, append ``added`` per bucket, record the history
-        entry and the session's maintenance policy."""
-        if not removed <= {f for fl in man["buckets"].values() for f in fl}:
+        ``removed`` from the base and the deltas, add a rewrite's base
+        ``buckets`` or a merge's ``delta`` (one new ``deltas`` entry),
+        record the history entry and the session's maintenance policy."""
+        if not removed <= set(self._live_files(man)):
             raise ConcurrentCommitError(
                 f"{label!r} at {self.path!r} rewrites files a concurrent "
                 f"rewrite already replaced; re-run against the fresh manifest"
             )
-        buckets = {b: [f for f in fl if f not in removed] for b, fl in man["buckets"].items()}
-        for b, fl in added.items():
-            buckets[b] = buckets.get(b, []) + fl
-        man["buckets"] = {b: fl for b, fl in buckets.items() if fl}
+        base = {b: [f for f in fl if f not in removed] for b, fl in man["buckets"].items()}
+        for b, fl in (buckets or {}).items():
+            base[b] = base.get(b, []) + fl
+        man["buckets"] = {b: fl for b, fl in base.items() if fl}
+        deltas = [[f for f in d if f not in removed] for d in man["deltas"]] + [delta or []]
+        man["deltas"] = [d for d in deltas if d]
         man["history"] = (
             man["history"] + [{"batch": label, "version": man["version"], "lineage": lineage or {}}]
         )[-100:]
@@ -521,26 +517,29 @@ class LakehouseTable:
         man["auto_compact_files"] = self.auto_compact_files
 
     def _rewrite(self, base: dict, df: DataFrame, label: str) -> int:
-        """Replace every live file of ``base`` by ``df`` (one row per
-        key), written bucket-partitioned. Removes exactly the files it
-        read, so it rebases over a concurrent delta append and conflicts
-        only with another rewrite."""
-        removed = frozenset(f for fl in base["buckets"].values() for f in fl)
+        """Replace every live file of ``base`` (its base and deltas) by
+        ``df`` (one row per key), written as a bucket-partitioned base.
+        Removes exactly the files it read, so it rebases over a
+        concurrent delta append and conflicts only with another
+        rewrite."""
+        removed = frozenset(self._live_files(base))
         df = df.withColumn("_bucket", self._bucket(F.col(self.key_col)))
         added = self._write_buckets(df, base["version"] + 1)
-        return self._commit(base, lambda m: self._replace_files(m, label, added, removed))["version"]
+        return self._commit(
+            base, lambda m: self._replace_files(m, label, removed, buckets=added)
+        )["version"]
 
     # -- compaction (merge-on-read maintenance) -----------------------------
 
     def compact(self) -> dict:
-        """Fold all delta files into one base per bucket: LWW-resolve
-        every key, rewrite the buckets, commit. After compaction a read
+        """Fold the base and every delta into one new base per bucket:
+        LWW-resolve every key, write the buckets, commit. After compaction a read
         is a plain scan again (until the next delta). Tombstones are
         RETAINED by compaction (a replayed older insert must still lose
         to the delete); drop them with vacuum_tombstones once the
         upstream log is known to be past their lsn."""
         man = self.manifest()
-        n_files = sum(len(fl) for fl in man["buckets"].values())
+        n_files = len(self._live_files(man))
         version = self._rewrite(man, self._resolved(man), "_compact")
         return {"skipped": False, "version": version, "compacted_files": n_files}
 
@@ -571,9 +570,9 @@ class LakehouseTable:
 def _widen(schema: list, cols: list) -> list:
     """Additive schema evolution: ``schema`` plus the never-seen
     ``[name, ddl_type]`` pairs of ``cols``. A KNOWN column arriving with a
-    DIFFERENT type is rejected loudly: writing it as-is would commit
-    mixed-type files that poison every later mergeSchema read ("Failed
-    to merge incompatible data types") after the bad batch is durable."""
+    DIFFERENT type is rejected loudly: writing it as-is would commit a
+    file whose type disagrees with the manifest schema every read uses,
+    failing every later read after the bad batch is durable."""
     known = dict(schema)
     for c, t in cols:
         if c in known and known[c] != t:
@@ -583,3 +582,7 @@ def _widen(schema: list, cols: list) -> list:
                 f"type — cast the batch or add a new column"
             )
     return schema + [[c, t] for c, t in cols if c not in known]
+
+
+def _parquet_files(directory: str) -> list[str]:
+    return [os.path.join(directory, f) for f in os.listdir(directory) if f.endswith(".parquet")]

@@ -122,11 +122,8 @@ def process_batch(
         else {}
     )
     if committed:
-        pairs = [x for p, o in committed.items() for x in (F.lit(p), F.lit(o))]
-        cm = F.create_map(*pairs)
-        events = events.filter(
-            F.coalesce(F.col("offset") > cm[F.col("partition")], F.lit(True))
-        )
+        pairs = ", ".join(f"{int(p)}, {int(o)}" for p, o in committed.items())
+        events = events.filter(F.expr(f"coalesce(`offset` > map({pairs})[`partition`], true)"))
 
     events = mapping.apply(events, passthrough=tuple(ENVELOPE))
 
@@ -147,9 +144,9 @@ def process_batch(
     # write — merge() accepts callables for exactly this.
     per_part_fut = _AsyncCollect(
         events.groupBy("partition").agg(
-            F.count(F.lit(1)).alias("rows_in"),
-            (F.count(F.lit(1)) - F.count_distinct("offset")).alias("dups"),
-            F.max("offset").alias("max_offset"),
+            F.expr("count(1) AS rows_in"),
+            F.expr("count(1) - count(DISTINCT `offset`) AS dups"),
+            F.expr("max(`offset`) AS max_offset"),
         )
     )
 
@@ -166,7 +163,7 @@ def process_batch(
         }
 
     # Normalize-after-LWW: row validity is just "delete, or at least
-    # one in-vocab token exists" — an early-exit F.exists with NO
+    # one in-vocab token exists" — an early-exit exists() with NO
     # cleaned-array materialization. The full normalize (clip, truncate,
     # recompute n_tok) runs only on the per-key WINNERS (~docs, not
     # ~events), cutting the memory-streamed bytes of the hot path.
@@ -179,7 +176,7 @@ def process_batch(
     obs_norm = Observation()
     flagged = flagged.observe(
         obs_norm,
-        F.sum(F.when(~F.coalesce(F.col("_valid"), F.lit(False)), 1).otherwise(0)).alias("invalid"),
+        F.expr("sum(CASE WHEN NOT coalesce(_valid, false) THEN 1 ELSE 0 END) AS invalid"),
     )
     valid = flagged.filter("_valid").drop("_valid", "partition")
     winners = lww_agg(valid, key=table.key_col, order=("lsn", "offset"))
@@ -187,8 +184,8 @@ def process_batch(
     obs_win = Observation()
     winners = winners.observe(
         obs_win,
-        F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("deletes"),
-        F.sum(F.when(F.col("op") != "delete", 1).otherwise(0)).alias("upserts"),
+        F.expr("sum(CASE WHEN op = 'delete' THEN 1 ELSE 0 END) AS deletes"),
+        F.expr("sum(CASE WHEN op != 'delete' THEN 1 ELSE 0 END) AS upserts"),
     )
 
     def lineage_fn() -> dict[str, int]:

@@ -55,7 +55,7 @@ class ColumnMapping:
         targets = {m.target for m in self.columns}
         for m in self.columns:
             if m.source in df.columns:
-                out.append(F.col(m.source).cast(m.ddl_type).alias(m.target))
+                out.append(F.expr(f"CAST(`{m.source}` AS {m.ddl_type}) AS `{m.target}`"))
             else:
                 out.append(F.lit(m.default).cast(m.ddl_type).alias(m.target))
         for c in passthrough:

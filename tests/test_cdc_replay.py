@@ -5,6 +5,7 @@ checkpoint resume, LWW parity, schema evolution, streaming."""
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 
 import pytest
@@ -333,10 +334,11 @@ def test_mor_auto_compaction_bounds_read_amplification(
     spark, tmp_path, binlog, oracle_state
 ):
     """The commit-time compaction POLICY (auto_compact_files): driving N
-    incremental batches into a policy-on table keeps every bucket's live
-    file count bounded by the threshold+1 (one fresh delta can land
-    before the follow-up compaction commit folds it), while a policy-off
-    table's file count grows with every batch — and the final state is
+    incremental batches into a policy-on table keeps the read depth (the
+    most base files in any bucket plus the deltas) bounded by the
+    threshold+1 (one fresh delta can land before the follow-up
+    compaction commit folds it), while a policy-off table's depth grows
+    with every batch — and the final state is
     identical to the oracle in both. The policy survives reopen (it is
     manifest state, like n_buckets)."""
     _, segs, _ = binlog
@@ -351,8 +353,8 @@ def test_mor_auto_compaction_bounds_read_amplification(
         process_batch(plain, events, f"b:{seg}", cfg=CFG)
         r = process_batch(auto, events, f"b:{seg}", cfg=CFG)
         compactions += int(bool(r.get("auto_compacted")))
-    plain_max = max(len(v) for v in plain.manifest()["buckets"].values())
-    auto_max = max(len(v) for v in auto.manifest()["buckets"].values())
+    plain_max = plain._depth(plain.manifest())
+    auto_max = auto._depth(auto.manifest())
     assert plain_max >= len(segs)          # uncompacted: one delta per batch
     assert auto_max <= 2 + 1               # bounded by threshold + one delta
     assert compactions >= 1                # the policy actually fired
@@ -387,7 +389,7 @@ def test_auto_compact_policy_adoptable_on_existing_table(
             process_batch(t1, events, f"a:{seg}", cfg=CFG).get("auto_compacted")
         ))
     assert fired >= 1
-    assert max(len(v) for v in t1.manifest()["buckets"].values()) <= 2
+    assert t1._depth(t1.manifest()) <= 2
     assert table_state(t1.read()) == oracle_state
     # the adopted policy is now manifest state: a plain reopen inherits it
     assert LakehouseTable(spark, path).auto_compact_files == 1
@@ -536,11 +538,12 @@ def test_mor_replay_matches_oracle_and_compacts(spark, tmp_path, binlog, oracle_
     assert table_state(table.read()) == oracle_state
 
     man_before = table.manifest()
-    n_files_before = sum(len(v) for v in man_before["buckets"].values())
+    n_files_before = len(table._live_files(man_before))
     info = table.compact()
     assert not info["skipped"] and info["compacted_files"] == n_files_before
-    n_files_after = sum(len(v) for v in table.manifest()["buckets"].values())
-    assert n_files_after < n_files_before
+    # read amplification is the read depth: a delta is one file per
+    # write task, the base one file per bucket
+    assert table._depth(table.manifest()) < table._depth(man_before)
     assert table_state(table.read()) == oracle_state
 
     # exactly-once still holds after compaction
@@ -577,6 +580,81 @@ def test_out_of_order_replay_with_filter_disabled(spark, tmp_path, binlog, oracl
     cfg = ReplayConfig(vocab=VOCAB, max_len=MAX_LEN, filter_committed_offsets=False)
     table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8)
     replay_segments(spark, table, list(reversed(segs)), cfg=cfg)
+    assert table_state(table.read()) == oracle_state
+
+
+def test_merge_appends_one_unbucketed_delta(spark, tmp_path, binlog):
+    """A merge writes its batch as one delta: one ``deltas`` entry per
+    commit, files straight under the commit's data directory (no
+    ``_bucket=`` directory anywhere), and the base left untouched."""
+    _, segs, _ = binlog
+    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8)
+    for i, seg in enumerate(segs[:2]):
+        before = table.manifest()
+        process_batch(table, spark.read.parquet(seg), f"b{i}", cfg=CFG)
+        man = table.manifest()
+        assert man["deltas"][:-1] == before["deltas"] and len(man["deltas"]) == i + 1
+        assert man["deltas"][-1] and man["buckets"] == {}
+        assert len({os.path.dirname(f) for f in man["deltas"][-1]}) == 1
+    assert not [d for d, _, _ in os.walk(tmp_path / "t" / "data") if "_bucket=" in d]
+
+
+def test_compact_leaves_one_file_per_bucket(spark, tmp_path, binlog, oracle_state):
+    """After compact() the table is a base only: no deltas, and under an
+    aligned shuffle conf (8 partitions, 8 buckets) at most one file per
+    bucket, however many files the deltas held."""
+    _, segs, _ = binlog
+    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8)
+    assert table._bucket_aligned()
+    replay_segments(spark, table, segs, cfg=CFG)
+    table.compact()
+    man = table.manifest()
+    assert man["deltas"] == [] and man["buckets"]
+    assert all(len(fl) <= 1 for fl in man["buckets"].values())
+    assert table._depth(man) == 1
+    assert table_state(table.read()) == oracle_state
+
+
+def test_legacy_bucket_layout_opens_merges_and_autocompacts(spark, tmp_path, binlog, oracle_state):
+    """A manifest written before ``deltas`` existed keeps every file in
+    ``buckets``, one file per bucket per merge. It opens with no deltas
+    (its files act as the base), merges append deltas, and
+    auto-compaction fires on the commit the per-bucket file rule fired
+    on: 2 files per bucket, auto_compact_files=3, so the second new
+    merge (2 + 2 > 3)."""
+    _, segs, _ = binlog
+    path = str(tmp_path / "t")
+    table = LakehouseTable(spark, path, n_buckets=8)
+    for i, seg in enumerate(segs[:2]):
+        # the old merge: the LWW winners as one bucket-partitioned write
+        norm = normalize_events(spark.read.parquet(seg), VOCAB, MAX_LEN).filter("_valid")
+        chg = lww_agg(norm.drop("_valid", "partition", "ts"), key="doc_id").selectExpr(
+            "doc_id", "tokens", "n_tok", "source", "CAST(lsn AS BIGINT) AS _lsn",
+            "CAST(`offset` AS BIGINT) AS _offset", "op = 'delete' AS _deleted",
+        )
+        man = table.manifest()
+        added = table._write_buckets(
+            chg.withColumn("_bucket", table._bucket(F.col("doc_id"))), man["version"] + 1
+        )
+        man["version"] += 1
+        for b, fl in added.items():
+            man["buckets"][b] = man["buckets"].get(b, []) + fl
+        man["payload_schema"] = [list(t) for t in chg.dtypes[1:4]]
+        man["committed"].append(f"legacy{i}")
+        del man["deltas"]
+        table._write_manifest(man, man["version"])
+    with open(os.path.join(path, "_snapshots", "v2.json")) as f:
+        assert "deltas" not in json.load(f)
+
+    table = LakehouseTable(spark, path, auto_compact_files=3)
+    man = table.manifest()
+    assert man["deltas"] == [] and len(man["buckets"]) == 8
+    assert min(len(fl) for fl in man["buckets"].values()) >= 2
+    r2 = process_batch(table, spark.read.parquet(segs[2]), "b2", cfg=CFG)
+    assert not r2.get("auto_compacted") and len(table.manifest()["deltas"]) == 1
+    r3 = process_batch(table, spark.read.parquet(segs[3]), "b3", cfg=CFG)
+    assert r3.get("auto_compacted") is True
+    assert table.manifest()["deltas"] == []
     assert table_state(table.read()) == oracle_state
 
 
@@ -626,11 +704,12 @@ def test_lakehouse_refuses_foreign_bucket_hash(spark, tmp_path):
 
 
 def test_merge_correct_under_misaligned_shuffle_conf(spark, tmp_path, binlog, oracle_state):
-    """With shuffle partitions and n_buckets NOT dividing each other the
-    sink repartitions on _bucket before the bucketed write (instead of
-    emitting up to tasks x buckets files); the final state is unchanged.
-    AQE coalescing is off: on this small input it would merge the 7
-    reducer partitions into one and hide a missing guard."""
+    """With shuffle partitions and n_buckets NOT dividing each other,
+    compaction repartitions on _bucket before the bucketed base write
+    (instead of emitting up to tasks x buckets files); the merges before
+    it and the final state are unchanged. AQE coalescing is off: on
+    this small input it would merge the 7 reducer partitions into one
+    and hide a missing guard."""
     path, segs, _ = binlog
     confs = {"spark.sql.shuffle.partitions": "7",
              "spark.sql.adaptive.coalescePartitions.enabled": "false"}
@@ -641,15 +720,16 @@ def test_merge_correct_under_misaligned_shuffle_conf(spark, tmp_path, binlog, or
         table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=4)
         assert not table._bucket_aligned()
         replay_segments(spark, table, segs, cfg=CFG)
+        table.compact()
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
-    # each of the 7 reducer tasks would add a file to every bucket; the
-    # guard caps every commit at ~1 new file per bucket
-    for v in range(1, table.manifest()["version"] + 1):
-        before = table.manifest_at(v - 1)["buckets"]
-        for b, files in table.manifest_at(v)["buckets"].items():
-            assert len(set(files) - set(before.get(b, []))) <= 2, (v, b)
+    # each of the 7 reducer tasks would write a file to every bucket;
+    # the guard caps the compacted base at ~1 file per bucket
+    man = table.manifest()
+    assert man["deltas"] == [] and len(man["buckets"]) == 4
+    for b, files in man["buckets"].items():
+        assert len(files) <= 2, (b, files)
     assert table_state(table.read()) == oracle_state
 
 
@@ -684,16 +764,14 @@ def test_vacuum_tombstones_drops_only_expired(spark, tmp_path, binlog, oracle_st
     # tombstones exist in the resolved state (read() filters them; scan
     # the raw files to count them)
     man = table.manifest()
-    files = [f for fl in man["buckets"].values() for f in fl]
-    raw = table._read_files(man, files)
+    raw = table._read_files(man, table._live_files(man))
     resolved = table._resolve(raw)
     n_tomb = resolved.filter("_deleted").count()
     assert n_tomb > 0
 
     r = table.vacuum_tombstones(min_lsn=SPEC.n_events + 1)
     man2 = table.manifest()
-    files2 = [f for fl in man2["buckets"].values() for f in fl]
-    raw2 = table._read_files(man2, files2)
+    raw2 = table._read_files(man2, table._live_files(man2))
     assert raw2.filter("_deleted").count() == 0          # all expired
     assert table_state(table.read()) == oracle_state     # live rows intact
     assert table_state(table.read(version=pre_version)) == oracle_state  # time travel

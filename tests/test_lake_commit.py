@@ -102,8 +102,8 @@ def test_stale_current_pointer_hides_no_commit(spark, tmp_path):
 def test_compaction_rebases_over_concurrent_delta(spark, tmp_path, monkeypatch):
     """A peer's delta lands between compact()'s snapshot read and its
     commit. Compaction removes only the files it read, so it rebases:
-    the peer's rows (a new key and a newer version of a compacted key)
-    stay visible."""
+    the peer's delta stays live as the table's one delta, and its rows
+    (a new key and a newer version of a compacted key) stay visible."""
     path = str(tmp_path / "t")
     t, peer = LakehouseTable(spark, path, n_buckets=2), LakehouseTable(spark, path, n_buckets=2)
     t.merge(_rows(spark, ("d0", 1, 0), ("d1", 2, 1)), "b0")
@@ -115,6 +115,7 @@ def test_compaction_rebases_over_concurrent_delta(spark, tmp_path, monkeypatch):
     assert raced and info["version"] == raced[0] + 1
     man = t.manifest()
     assert "P" in man["committed"] and man["history"][-1]["batch"] == "_compact"
+    assert man["deltas"] == [t.manifest_at(raced[0])["deltas"][-1]]
     assert _state(t) == {"d0": 10, "d1": 11, "p": 4}
 
 

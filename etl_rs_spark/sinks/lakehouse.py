@@ -11,7 +11,7 @@ Iceberg snapshot commit):
   across base and deltas, and ``compact()`` folds them into a new base
   under ``data/v{N}-{id}/_bucket={B}/``, bucketed by
   ``pmod(murmur3(key), n_buckets)`` (Spark's own shuffle hash — see
-  ``_bucket``; the manifest records the hash family and ``open``
+  ``_write_buckets``; the manifest records the hash family and ``open``
   refuses a mismatch).
 - ``_snapshots/v{N}.json`` — the manifest: schema, the base's files per
   bucket (``buckets``), one file list per delta (``deltas``), committed
@@ -44,10 +44,11 @@ from __future__ import annotations
 import copy
 import json
 import os
+import shutil
 import uuid
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -256,49 +257,6 @@ class LakehouseTable:
 
     # -- read ----------------------------------------------------------------
 
-    def _bucket(self, col):
-        """Bucket id = pmod(murmur3(key), n_buckets) — DELIBERATELY the
-        same hash family Spark's own shuffle partitioner uses
-        (HashPartitioning = pmod(Murmur3Hash, n)). Consequence: the
-        compaction's LWW groupBy, which shuffles on the key, leaves every
-        bucket's rows CO-LOCATED in one task whenever the shuffle
-        partition count and n_buckets divide each other — so the
-        bucketed base write needs NO extra repartition (one full-payload
-        shuffle saved per compaction)."""
-        return F.pmod(F.hash(col), F.lit(self.n_buckets)).cast("int")
-
-    def _bucket_aligned(self) -> bool:
-        """True when the session's shuffle partition count and n_buckets
-        divide each other: the compaction's key-shuffle (the LWW groupBy)
-        then leaves every bucket's rows in a bounded number of tasks, so
-        the bucketed base write needs no repartition. Merges write
-        unbucketed deltas and never consult it.
-
-        AQE interaction (r3 ADVICE): adaptive partition COALESCING does
-        not void the guarantee — coalescing merges whole reducer
-        partitions, so it can co-locate several buckets in one task but
-        never SPLITS a bucket across tasks; the dynamic partitionBy
-        still emits at most one file per (bucket, task-holding-it), and
-        that count only shrinks under coalescing. The one AQE rule that
-        can split a partition, the skew-join handler, has no join to act
-        on: the compaction's only shuffle is the LWW aggregate. Routing
-        would stay correct regardless, because partitionBy keys on the
-        _bucket VALUE, not the task."""
-        try:
-            sp = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            return False
-        return sp % self.n_buckets == 0 or self.n_buckets % sp == 0
-
-    def _bucket_colocated(self, df: DataFrame) -> DataFrame:
-        """The co-location guard of the bucketed base write: a no-op under
-        an aligned shuffle conf; otherwise (e.g. 200 partitions, 32
-        buckets) every reducer task could emit a file per bucket, so
-        misaligned callers pay one repartition on _bucket instead."""
-        if self._bucket_aligned():
-            return df
-        return df.repartition(self.n_buckets, F.col("_bucket"))
-
     def _data_dir(self, version: int) -> str:
         """A writer-unique ``data/v{N}-{uuid}``: racing writers of one
         version never share a directory, so a loser's mode('overwrite')
@@ -307,11 +265,28 @@ class LakehouseTable:
         return os.path.join(self.path, "data", f"v{version}-{uuid.uuid4().hex[:8]}")
 
     def _write_buckets(self, df: DataFrame, version: int) -> dict[str, list[str]]:
-        """Bucket-partitioned write of a rewrite's base ``df`` (carrying
-        ``_bucket``, co-located by ``_bucket_colocated``); returns the new
-        files per bucket."""
+        """Bucket-partitioned write of a rewrite's resolved rows ``df``
+        (one row per key, fresh from the LWW key shuffle); returns the new
+        files per bucket. The one place that knows bucket placement.
+
+        Bucket id = pmod(murmur3(key), n_buckets), DELIBERATELY the hash
+        of Spark's shuffle partitioner (HashPartitioning = pmod(Murmur3Hash,
+        n)). The key shuffle sends a key to reducer ``hash mod partitions``
+        and to bucket ``hash mod n_buckets``, so every bucket stays in one
+        task exactly when ``n_buckets % partitions == 0``, and the write
+        needs no shuffle of its own. Otherwise a bucket spans several
+        reducers (at 32 partitions and 8 buckets, 4 files per bucket and
+        a read depth of 4), so the rows repartition once on ``_bucket``.
+        AQE coalescing merges whole reducer partitions and so never splits
+        a bucket; partitionBy routes on the ``_bucket`` value, so placement
+        is correct either way and only the file count depends on the rule."""
+        df = df.withColumn(
+            "_bucket", F.expr(f"CAST(pmod(hash(`{self.key_col}`), {self.n_buckets}) AS INT)")
+        )
+        if self.n_buckets % int(self.spark.conf.get("spark.sql.shuffle.partitions")):
+            df = df.repartition(self.n_buckets, "_bucket")
         out_dir = self._data_dir(version)
-        self._bucket_colocated(df).write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
+        df.write.partitionBy("_bucket").mode("overwrite").parquet(out_dir)
         return {d.split("=", 1)[1]: _parquet_files(os.path.join(out_dir, d))
                 for d in os.listdir(out_dir) if d.startswith("_bucket=")}
 
@@ -410,8 +385,14 @@ class LakehouseTable:
         # the batch IS the delta, one file per write task: append it,
         # never read or rewrite existing data — O(batch) write cost
         out_dir = self._data_dir(man["version"] + 1)
-        chg.write.mode("overwrite").parquet(out_dir)
-        delta = _parquet_files(out_dir)
+        rows = Observation()
+        chg.observe(rows, F.expr("count(1) AS n")).write.mode("overwrite").parquet(out_dir)
+        delta = _parquet_files(out_dir) if rows.get["n"] else []
+        if not delta:
+            # an empty batch (say, a re-delivery at or below the committed
+            # offsets) commits its key, offsets and lineage but no delta:
+            # its one empty file would only deepen every read
+            shutil.rmtree(out_dir)
 
         if callable(lineage):
             lineage = lineage()  # post-write: observations have landed
@@ -523,7 +504,6 @@ class LakehouseTable:
         concurrent delta append and conflicts only with another
         rewrite."""
         removed = frozenset(self._live_files(base))
-        df = df.withColumn("_bucket", self._bucket(F.col(self.key_col)))
         added = self._write_buckets(df, base["version"] + 1)
         return self._commit(
             base, lambda m: self._replace_files(m, label, removed, buckets=added)

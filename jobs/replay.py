@@ -57,8 +57,9 @@ def main() -> None:
                     help="run compaction after the replay (timed separately)")
     ap.add_argument(
         "--auto-compact-files", type=int, default=None, metavar="N",
-        help="maintenance policy: compact any bucket exceeding N live "
-             "files at commit time (manifest-recorded; bounds read "
+        help="maintenance policy: compact the table at commit time once "
+             "its read depth (the most base files in a bucket plus the "
+             "number of deltas) exceeds N (manifest-recorded; bounds read "
              "amplification over long segmented replays)",
     )
     ap.add_argument("--lake", default=None, help="lake table path (default: tmpdir)")

@@ -7,6 +7,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -599,18 +600,27 @@ def test_merge_appends_one_unbucketed_delta(spark, tmp_path, binlog):
     assert not [d for d, _, _ in os.walk(tmp_path / "t" / "data") if "_bucket=" in d]
 
 
-def test_compact_leaves_one_file_per_bucket(spark, tmp_path, binlog, oracle_state):
+def test_compact_leaves_one_file_per_bucket(spark, tmp_path, binlog, oracle_state, monkeypatch):
     """After compact() the table is a base only: no deltas, and under an
-    aligned shuffle conf (8 partitions, 8 buckets) at most one file per
-    bucket, however many files the deltas held."""
+    aligned shuffle conf (8 partitions, 8 buckets) one file per bucket,
+    however many files the deltas held. The bucketed write then rides
+    the LWW key shuffle: its plan has exactly one Exchange, so aligned
+    hosts pay no repartition."""
     _, segs, _ = binlog
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8)
-    assert table._bucket_aligned()
     replay_segments(spark, table, segs, cfg=CFG)
+    written, frame = [], type(spark.range(0))
+    write = frame.write
+    monkeypatch.setattr(frame, "write", property(lambda df: written.append(df) or write.fget(df)))
     table.compact()
+    monkeypatch.undo()
+    [compaction] = written
+    plan = compaction._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bExchange ", plan)) == 1, plan
     man = table.manifest()
-    assert man["deltas"] == [] and man["buckets"]
-    assert all(len(fl) <= 1 for fl in man["buckets"].values())
+    assert man["deltas"] == [] and len(man["buckets"]) == 8
+    assert all(len(fl) == 1 for fl in man["buckets"].values())
     assert table._depth(man) == 1
     assert table_state(table.read()) == oracle_state
 
@@ -633,9 +643,7 @@ def test_legacy_bucket_layout_opens_merges_and_autocompacts(spark, tmp_path, bin
             "CAST(`offset` AS BIGINT) AS _offset", "op = 'delete' AS _deleted",
         )
         man = table.manifest()
-        added = table._write_buckets(
-            chg.withColumn("_bucket", table._bucket(F.col("doc_id"))), man["version"] + 1
-        )
+        added = table._write_buckets(chg, man["version"] + 1)
         man["version"] += 1
         for b, fl in added.items():
             man["buckets"][b] = man["buckets"].get(b, []) + fl
@@ -703,35 +711,64 @@ def test_lakehouse_refuses_foreign_bucket_hash(spark, tmp_path):
         LakehouseTable(spark, path)
 
 
-def test_merge_correct_under_misaligned_shuffle_conf(spark, tmp_path, binlog, oracle_state):
-    """With shuffle partitions and n_buckets NOT dividing each other,
-    compaction repartitions on _bucket before the bucketed base write
-    (instead of emitting up to tasks x buckets files); the merges before
-    it and the final state are unchanged. AQE coalescing is off: on
-    this small input it would merge the 7 reducer partitions into one
-    and hide a missing guard."""
+@pytest.mark.parametrize("partitions", [7, 16])
+def test_merge_correct_under_misaligned_shuffle_conf(
+    spark, tmp_path, binlog, oracle_state, partitions
+):
+    """With n_buckets not a multiple of the shuffle partition count, a
+    bucket spans several reducers of the LWW key shuffle (at 7 every
+    reducer holds rows of every bucket; at 16 each of the 4 buckets
+    spans 4 reducers), so compaction repartitions on _bucket before the
+    bucketed base write: one file per bucket and a read depth of 1, and
+    with auto_compact_files=3 the next two merges do not compact. The
+    merges and the final state are unchanged. AQE coalescing is off: on
+    this small input it would merge the reducers into one and hide a
+    missing repartition."""
     path, segs, _ = binlog
-    confs = {"spark.sql.shuffle.partitions": "7",
+    confs = {"spark.sql.shuffle.partitions": str(partitions),
              "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    # re-deliveries past the committed offsets: real rows, same state
+    again = ReplayConfig(vocab=VOCAB, max_len=MAX_LEN, filter_committed_offsets=False)
     prev = {k: spark.conf.get(k) for k in confs}
     try:
         for k, v in confs.items():
             spark.conf.set(k, v)
-        table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=4)
-        assert not table._bucket_aligned()
+        table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=4, auto_compact_files=3)
         replay_segments(spark, table, segs, cfg=CFG)
         table.compact()
+        man = table.manifest()
+        after = [process_batch(table, spark.read.parquet(segs[i]), f"again{i}", cfg=again)
+                 for i in range(2)]
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
-    # each of the 7 reducer tasks would write a file to every bucket;
-    # the guard caps the compacted base at ~1 file per bucket
-    man = table.manifest()
     assert man["deltas"] == [] and len(man["buckets"]) == 4
     for b, files in man["buckets"].items():
-        assert len(files) <= 2, (b, files)
+        assert len(files) == 1, (b, files)
+    assert table._depth(man) == 1
+    assert [r.get("auto_compacted") for r in after] == [None, None]
+    assert table._depth(table.manifest()) == 3
     assert table_state(table.read()) == oracle_state
 
+
+def test_empty_batch_commits_no_delta(spark, tmp_path, binlog, oracle_state):
+    """A batch that writes no rows (here a re-delivered segment whose
+    events are all at or below the committed offsets) commits its key
+    and history entry but adds no delta and no data file, so it
+    neither deepens reads nor brings auto-compaction forward."""
+    _, segs, _ = binlog
+    table = LakehouseTable(spark, str(tmp_path / "t"), n_buckets=8)
+    replay_segments(spark, table, segs, cfg=CFG)
+    before = table.manifest()
+    data_dirs = sorted(os.listdir(tmp_path / "t" / "data"))
+    r = process_batch(table, spark.read.parquet(segs[0]), "redelivered", cfg=CFG)
+    man = table.manifest()
+    assert not r["skipped"] and man["version"] == before["version"] + 1
+    assert "redelivered" in man["committed"] and man["history"][-1]["batch"] == "redelivered"
+    assert man["deltas"] == before["deltas"] and man["buckets"] == before["buckets"]
+    assert table._depth(man) == table._depth(before)
+    assert sorted(os.listdir(tmp_path / "t" / "data")) == data_dirs
+    assert table_state(table.read()) == oracle_state
 
 
 def test_time_travel_reads_historical_snapshots(spark, tmp_path, binlog, oracle_state):

@@ -6,13 +6,16 @@
 #   tools/perfbench_ab.sh PARENT_REF WORKLOAD SEED...
 #   tools/perfbench_ab.sh HEAD~1 cdc_replay 1 2 3 4
 #
-# PARENT_REF is checked out with `git worktree add` into a temporary
-# directory, removed again on exit. Every run is
+# PARENT_REF's committed files are unpacked with `git archive` into a
+# temporary directory, removed again on exit. Every run is
 #   python3 perfbench/run.py --workload WORKLOAD --seed SEED --seconds 12 --trace 0
 # from the root of its checkout. One line is printed per run: the side,
 # the seed, the end-to-end metrics, failed/attempted and the host's
-# steal share over the run. The last lines give, per end-to-end metric,
-# the median over seeds of the per-pair ratio change / parent.
+# steal share over the run. The last lines give, per end-to-end metric
+# of BENCHMARK.json, what its acceptance rule reads: the parent and
+# change medians and their ratio, the parent's quartile spread over its
+# median, and the pairs the change won in the metric's `better`
+# direction.
 set -euo pipefail
 
 if [ $# -lt 3 ]; then
@@ -26,13 +29,8 @@ repo=$(git rev-parse --show-toplevel)
 parent=$(mktemp -d)
 out=$(mktemp -d)
 
-cleanup() {
-    git -C "$repo" worktree remove --force "$parent" >/dev/null 2>&1 || true
-    git -C "$repo" worktree prune
-    rm -rf "$parent" "$out"
-}
-trap cleanup EXIT
-git -C "$repo" worktree add --detach "$parent" "$ref" >/dev/null 2>&1
+trap 'rm -rf "$parent" "$out"' EXIT
+git -C "$repo" archive "$ref" | tar -x -C "$parent"
 
 report() {
     python3 - "$@" <<'EOF'
@@ -64,17 +62,24 @@ if mode == "run":
         print(f"{side:6} seed={seed} {m} failed={res['failed']}/{res['attempted']} "
               f"correct={res['correct']} steal={steal if steal is None else round(steal, 4)}")
 else:
-    ratios = {}
-    for seed in sys.argv[3:]:
-        (a, _), (b, _) = load(out_dir, "parent", seed), load(out_dir, "change", seed)
-        if a is None or b is None:
+    with open(f"{sys.argv[3]}/BENCHMARK.json") as f:
+        better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+    pairs = [(load(out_dir, "parent", s)[0], load(out_dir, "change", s)[0])
+             for s in sys.argv[4:]]
+    pairs = [(a["metrics"], b["metrics"]) for a, b in pairs if a and b]
+    for k, direction in better.items():
+        vals = [(a[k]["value"], b[k]["value"]) for a, b in pairs if k in a and k in b]
+        if not vals:
+            print(f"{k}: no complete pair")
             continue
-        for k, v in b["metrics"].items():
-            if k in a["metrics"] and a["metrics"][k]["value"]:
-                ratios.setdefault(k, []).append(v["value"] / a["metrics"][k]["value"])
-    for k, r in ratios.items():
-        print(f"median change/parent {k}: {statistics.median(r):.3f} "
-              f"over {len(r)} pairs (min {min(r):.3f}, max {max(r):.3f})")
+        par, chg = [p for p, _ in vals], [c for _, c in vals]
+        pm, cm = statistics.median(par), statistics.median(chg)
+        q1, _, q3 = statistics.quantiles(par, n=4) if len(par) > 1 else (pm, pm, pm)
+        won = sum(c < p if direction == "lower" else c > p for p, c in vals)
+        print(f"{k} ({direction} is better): parent median {pm:.6g}, change median "
+              f"{cm:.6g} (ratio {cm / pm if pm else float('nan'):.3f}); parent "
+              f"quartile spread / median {(q3 - q1) / pm if pm else float('nan'):.3f}; "
+              f"change won {won} of {len(vals)} pairs")
 EOF
 }
 
@@ -95,4 +100,4 @@ for seed in "$@"; do
     fi
     i=$((i + 1))
 done
-report summary "$out" "$@"
+report summary "$out" "$repo" "$@"

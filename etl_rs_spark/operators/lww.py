@@ -4,38 +4,18 @@ The reference's precedent is Kafka (partition, offset) addressing
 (crates/libs/lib-etl/src/config.rs:10-17) — the winner per ``doc_id`` is
 the event with the greatest ``(lsn, offset)``.
 
-Two physical strategies, same semantics:
-
-- ``lww_window``: row_number over a per-key window. One shuffle, but a
-  hot key serializes into a single task — fine for balanced keys.
-- ``lww_agg``: ``max_by(payload_struct, order_struct)`` aggregation.
-  Spark plans a partial (map-side) aggregate before the shuffle, so a
-  hot key is pre-combined on every input partition — each mapper ships
-  ONE candidate row per key it saw. Built from SQL strings, so planning
-  costs a few py4j calls however wide the payload is.
-
-The engine uses ``lww_agg`` everywhere; ``lww_window`` stays as the
-baseline it is measured against.
+``lww_agg`` is a ``max_by(payload_struct, order_struct)`` aggregation.
+Spark plans a partial (map-side) aggregate before the shuffle, so a hot
+key is pre-combined on every input partition — each mapper ships ONE
+candidate row per key it saw. Built from SQL strings, so planning costs
+a few py4j calls however wide the payload is. The CDC commit, the lake
+table's merge-on-read and its compaction all resolve through it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
-
-
-def lww_window(
-    df: DataFrame,
-    key: str = "doc_id",
-    order: tuple[str, ...] = ("lsn", "offset"),
-) -> DataFrame:
-    w = Window.partitionBy(key).orderBy(*[F.desc(c) for c in order])
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def lww_agg(

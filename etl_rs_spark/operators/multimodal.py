@@ -475,10 +475,10 @@ def decode_media(payload: bytes, mime: str, dim: int, strict: bool) -> list[floa
     except ValueError:
         if strict:
             raise
-    return _decode_stub(payload, mime, dim, strict)
+    return _decode_stub(payload, dim, strict)
 
 
-def _decode_stub(payload: bytes, mime: str, dim: int, strict: bool) -> list[float]:
+def _decode_stub(payload: bytes, dim: int, strict: bool) -> list[float]:
     """THE STUB: real deployments replace this with Pillow / libsndfile /
     pyav decode + model featurization. Deterministic fake in test mode."""
     if strict:
@@ -491,9 +491,7 @@ def _decode_stub(payload: bytes, mime: str, dim: int, strict: bool) -> list[floa
     return (base / 255.0).astype(np.float32).tolist()
 
 
-def extract_features(
-    df: DataFrame, dim: int = 8, strict: bool = False, batch_size_hint: int | None = None
-) -> DataFrame:
+def extract_features(df: DataFrame, dim: int = 8, strict: bool = False) -> DataFrame:
     """Arrow-batched feature extraction over the binary payload.
 
     mapInPandas: payload bytes arrive as zero-copy Arrow buffers per
@@ -605,8 +603,7 @@ def _synth_frame_ppm(media_id: int, frame_idx: int) -> bytes:
 
 
 def synth_video_frames(
-    spark: SparkSession, n_videos: int, frames_per_video: int,
-    seed: int = 42, partitions: int = 8,
+    spark: SparkSession, n_videos: int, frames_per_video: int, partitions: int = 8
 ) -> DataFrame:
     """Deterministic decoded-frame side table: (media_id, frame_idx,
     mime, payload) with a REAL binary-PPM raster per frame — the table a

@@ -52,6 +52,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from etl_rs_spark.operators.lww import lww_agg
+
 META_COLS = ["_lsn", "_offset", "_deleted"]
 ENVELOPE_COLS = ["op", "lsn", "offset", "partition", "ts"]
 
@@ -316,17 +318,13 @@ class LakehouseTable:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(*files)
 
-    def _resolve(self, df: DataFrame) -> DataFrame:
-        """Merge-on-read LWW: latest (_lsn, _offset) version per key
-        wins — literally the write path's operators.lww.lww_agg, so the
-        read-side and write-side tie/NULL semantics can never diverge."""
-        from etl_rs_spark.operators.lww import lww_agg
-
-        return lww_agg(df, key=self.key_col, order=("_lsn", "_offset"))
-
     def _resolved(self, man: dict) -> DataFrame:
-        """Every live file of ``man``, LWW-resolved to one row per key."""
-        return self._resolve(self._read_files(man, self._live_files(man)))
+        """Every live file of ``man``, LWW-resolved to one row per key:
+        the latest (_lsn, _offset) version wins, through the write path's
+        own ``lww_agg``, so read-side and write-side tie/NULL semantics
+        cannot diverge."""
+        df = self._read_files(man, self._live_files(man))
+        return lww_agg(df, key=self.key_col, order=("_lsn", "_offset"))
 
     def read(self, include_meta: bool = False, version: int | None = None) -> DataFrame:
         """Snapshot scan; ``version`` time-travels to any committed

@@ -927,7 +927,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # ---------------------------------------------------------------------------
 # DuckDB oracles — shared SQL fragments
 
-# Replicates dedup_scale.word_hash / doc_word_ids_hashed: ordered
+# Replicates dedup_scale.word_hash60 / doc_word_ids_hashed: ordered
 # hashed word-id arrays straight off the tokenization — no vocab build.
 _WORDS_CTE = f"""
 words AS (

@@ -14,21 +14,25 @@ record-linkage over business keys; a training-data pipeline also needs
   bit-for-bit (no engine-private hash functions in results).
 
 Shuffle budget per operator is noted in each docstring; everything is
-native Column expressions (JVM-side; scalar chains codegen, the
+native Catalyst expressions (JVM-side; scalar chains codegen, the
 higher-order array folds evaluate interpreted — which is why each
 operator folds ALL its hashes in ONE pass and references computed
 array columns a bounded number of times: Catalyst inlines a
 projection's defining expression into every consumer reference, so an
 n-reference consumer pays n recomputes of the md5 token map).
+
+The corpus-prep operators (exact dedup, word ids, n-gram Jaccard pairs,
+decontamination) build their plans from SQL expression strings
+(``etl_rs_spark.sql_text``), a few py4j calls per DataFrame operation.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from etl_rs_spark.operators.text import HASH_P, hash_params, words
+from etl_rs_spark.operators.text import HASH_P, hash_params
+from etl_rs_spark.sql_text import ident
 
 
 def cap_group_size(
@@ -42,10 +46,10 @@ def cap_group_size(
     applies the same rule to its posting-list sizes.)"""
     if cap is None:
         return df
-    w = Window.partitionBy(*cols)
+    part = ", ".join(map(ident, cols))
     return (
-        df.withColumn("_grpsize", F.count(F.lit(1)).over(w))
-        .filter(F.col("_grpsize") <= cap)
+        df.selectExpr("*", f"count(1) OVER (PARTITION BY {part}) AS _grpsize")
+        .filter(f"_grpsize <= {int(cap)}")
         .drop("_grpsize")
     )
 
@@ -66,14 +70,12 @@ def dedup_digest_stats(
     is unambiguous under NULLs, empty strings and values that contain
     any would-be separator byte, so NULL contents form their own group.
     Digest collisions are ignored (2^-128)."""
-    digest = F.sha2(
-        F.to_json(F.struct(*[F.col(c) for c in content_cols])), 256
-    )
+    content = ", ".join(map(ident, content_cols))
     return (
-        df.groupBy(digest.alias("_digest"))
+        df.groupBy(F.expr(f"sha2(to_json(struct({content})), 256) AS _digest"))
         .agg(
-            F.min(id_col).alias(id_col),
-            F.count(F.lit(1)).alias("n_copies"),
+            F.expr(f"min({ident(id_col)}) AS {ident(id_col)}"),
+            F.expr("count(1) AS n_copies"),
         )
         .drop("_digest")
     )
@@ -101,10 +103,9 @@ def word_hash60(col: Column) -> Column:
     )
 
 
-def word_hash(col: Column) -> Column:
-    """The 60-bit id reduced to the universal-hash domain [0, p) —
-    for callers that feed (a*x + b) mod p families directly."""
-    return word_hash60(col) % F.lit(HASH_P)
+def word_hash60_sql(x: str) -> str:
+    """``word_hash60`` as SQL text over the expression ``x``."""
+    return f"CAST(conv(substring(md5(encode({x}, 'UTF-8')), 1, 15), 16, 10) AS BIGINT)"
 
 
 def _mod_p(x: Column) -> Column:
@@ -123,9 +124,12 @@ def doc_word_ids_hashed(
 ) -> DataFrame:
     """Map each doc to its ordered array of 60-bit hashed word ids —
     the no-vocab scale path. A single narrow projection: zero shuffles,
-    zero joins, embarrassingly parallel at any corpus size."""
-    return df.select(
-        id_col, *extra_cols, F.transform(words(text_col), word_hash60).alias(out_col)
+    zero joins, embarrassingly parallel at any corpus size. Words are
+    ``text.words``: whitespace-split, empty tokens dropped."""
+    words = rf"filter(split(trim({ident(text_col)}), '\\s+'), x -> x != '')"
+    return df.selectExpr(
+        *map(ident, (id_col, *extra_cols)),
+        f"transform({words}, w -> {word_hash60_sql('w')}) AS {ident(out_col)}",
     )
 
 
@@ -387,9 +391,10 @@ def _popcount_bigint(col: Column) -> Column:
 # ---------------------------------------------------------------------------
 # n-gram Jaccard (shingle-level, order-sensitive within the shingle)
 
-def ngram_shingles(word_ids: Column, n: int = 3) -> Column:
-    """Word n-gram shingles, each reduced to a single bigint by the
-    polynomial (((w1*B + w2)*B + w3) mod p with B=1_000_003.
+def ngram_shingles(word_ids: str, n: int = 3) -> str:
+    """SQL text of the word n-gram shingles of the array column
+    ``word_ids``, each reduced to a single bigint by the polynomial
+    (((w1*B + w2)*B + w3) mod p with B=1_000_003.
 
     Implemented as n shifted slices folded with zip_with rather than
     element_at(word_ids, i+j) random access: when ``word_ids`` is a
@@ -405,14 +410,12 @@ def ngram_shingles(word_ids: Column, n: int = 3) -> Column:
     equals (acc*B + (w mod p)) mod p — shingle values are identical to
     the old mod-p-id pipeline."""
     B = 1_000_003
-    m = F.size(word_ids) - (n - 1)
-    slices = [
-        F.slice(word_ids, j + 1, F.greatest(m, F.lit(0))) for j in range(n)
-    ]
-    acc = F.transform(slices[0], lambda x: x % F.lit(HASH_P))
-    for j in range(1, n):
-        acc = F.zip_with(acc, slices[j], lambda a, w: (a * B + w) % F.lit(HASH_P))
-    return F.array_distinct(acc)
+    w = ident(word_ids)
+    slices = [f"slice({w}, {j + 1}, greatest(size({w}) - {int(n) - 1}, 0))" for j in range(n)]
+    acc = f"transform({slices[0]}, x -> x % {HASH_P})"
+    for sl in slices[1:]:
+        acc = f"zip_with({acc}, {sl}, (a, w) -> (a * {B} + w) % {HASH_P})"
+    return f"array_distinct({acc})"
 
 
 def ngram_jaccard_pairs(
@@ -437,12 +440,14 @@ def ngram_jaccard_pairs(
     have at 100 TB. Blocking (e.g. lang) stays in the grouping key; a
     NULL block or a NULL id pairs with nothing.
 
-    Shuffle budget: two aggregations and no self-join. (1) postings
-    group by (block, shingle) into one list of (id, |shingles|) per
-    posting list — partial lists combine map-side; (2) the in-list
-    pairs id_l < id_r group by (id_l, id_r) to count the intersection.
-    The shingle expression is evaluated once per doc: there is no
-    second (build) side that recomputes the postings.
+    Shuffle budget: two exchanges and no self-join. (1) postings
+    shuffle by (block, shingle), a window counts each list's document
+    frequency, and only lists of 2..cap postings are collected into
+    (id, |shingles|) lists on that partitioning: the singletons, most
+    postings, never are (BENCH/SCALE_EVIDENCE.md); (2) the in-list pairs
+    id_l < id_r group by (id_l, id_r) to count the intersection. The
+    shingle expression is evaluated once per doc: no second (build)
+    side recomputes the postings.
 
     ``max_doc_freq`` is the stop-shingle rule of web-scale dedup: a
     boilerplate shingle shared by k documents (license headers, nav
@@ -455,49 +460,46 @@ def ngram_jaccard_pairs(
     stop-shingles may fall below threshold (recall loss on
     boilerplate-dominated pairs, the standard accepted loss); no false
     pairs are ever added."""
-    sh = docs.select(
-        F.col(id_col),
-        F.col(blocking_col).alias("_blk"),
-        ngram_shingles(F.col(word_ids_col), n).alias("_sh"),
-    )
+    i = ident(id_col)
     # explode_OUTER, not explode: plain explode's implicit
     # `size(arr) > 0` filter gets pushed below the projection and
     # RE-EVALUATES the whole shingle expression at the scan (verified
     # in the physical plan) — outer + isnotnull keeps one evaluation
     # and drops the same empty-shingle docs.
-    postings = sh.select(
-        F.col(id_col), "_blk", F.size("_sh").alias("_n"),
-        F.explode_outer("_sh").alias("_s"),
-    ).filter(F.col("_s").isNotNull() & F.col("_blk").isNotNull())
-    # each list entry carries its doc's shingle-set size: |A| and |B|
-    # then fall out of the pair aggregation (any_value of a per-doc
-    # constant). Shingles are distinct per doc, so the list size IS
-    # the document frequency.
-    lists = postings.groupBy("_blk", "_s").agg(
-        F.collect_list(F.struct(F.col(id_col).alias("id"), "_n")).alias("_d")
+    postings = (
+        docs.selectExpr(
+            i, f"{ident(blocking_col)} AS _blk",
+            f"{ngram_shingles(word_ids_col, n)} AS _sh",
+        )
+        .selectExpr(i, "_blk", "size(_sh) AS _n", "explode_outer(_sh) AS _s")
+        .filter("_s IS NOT NULL AND _blk IS NOT NULL")
     )
-    keep = F.size("_d") >= 2
+    # shingles are distinct per doc, so a list's row count IS its
+    # document frequency. Each entry carries its doc's shingle-set size:
+    # |A| and |B| fall out of the pair aggregation (any_value).
+    keep = "_df >= 2"
     if max_doc_freq is not None:
-        keep = keep & (F.size("_d") <= max_doc_freq)
+        keep += f" AND _df <= {int(max_doc_freq)}"
+    lists = (
+        postings.selectExpr("*", "count(1) OVER (PARTITION BY _blk, _s) AS _df")
+        .filter(keep)
+        .groupBy("_blk", "_s")
+        .agg(F.expr(f"collect_list(struct({i} AS id, _n)) AS _d"))
+    )
     pairs = (
-        lists.filter(keep)
-        .select("_d", F.explode("_d").alias("l"))
-        .select("l", F.explode("_d").alias("r"))
-        .filter(F.col("l.id") < F.col("r.id"))
+        lists.selectExpr("_d", "explode(_d) AS l")
+        .selectExpr("l", "explode(_d) AS r")
+        .filter("l.id < r.id")
     )
     return (
-        pairs.groupBy(F.col("l.id").alias("id_l"), F.col("r.id").alias("id_r"))
+        pairs.groupBy(F.expr("l.id AS id_l"), F.expr("r.id AS id_r"))
         .agg(
-            F.count(F.lit(1)).alias("_inter"),
-            F.any_value(F.col("l._n")).alias("_nl"),
-            F.any_value(F.col("r._n")).alias("_nr"),
+            F.expr("count(1) AS _inter"),
+            F.expr("any_value(l._n) AS _nl"),
+            F.expr("any_value(r._n) AS _nr"),
         )
-        .withColumn(
-            "jaccard",
-            F.col("_inter") / (F.col("_nl") + F.col("_nr") - F.col("_inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_l", "id_r", "jaccard")
+        .selectExpr("id_l", "id_r", "_inter / (_nl + _nr - _inter) AS jaccard")
+        .filter(f"jaccard >= {float(threshold)!r}D")
     )
 
 
@@ -549,31 +551,30 @@ def decontaminate(
     if min_overlap < 1:
         raise ValueError(f"min_overlap must be >= 1, got {min_overlap}")
 
-    probe_post = probes.select(
-        F.col(id_col),
-        F.explode_outer(ngram_shingles(F.col(word_ids_col), n)).alias("_s"),
-    ).filter(F.col("_s").isNotNull())
-    probe_post = cap_group_size(probe_post, ("_s",), max_probe_freq)
-    probe_sh = probe_post.select("_s").distinct()
+    i = ident(id_col)
 
-    doc_post = docs.select(
-        F.col(id_col),
-        F.explode_outer(ngram_shingles(F.col(word_ids_col), n)).alias("_s"),
-    ).filter(F.col("_s").isNotNull())
+    def postings(df: DataFrame) -> DataFrame:
+        return df.selectExpr(
+            i, f"explode_outer({ngram_shingles(word_ids_col, n)}) AS _s"
+        ).filter("_s IS NOT NULL")
+
+    probe_sh = cap_group_size(postings(probes), ("_s",), max_probe_freq)
+    probe_sh = probe_sh.select("_s").distinct()
     # shingles are distinct per doc, so the match count IS the number
     # of distinct probe shingles present
-    probe_side = F.broadcast(probe_sh) if broadcast_probes else probe_sh
     hits = (
-        doc_post.join(probe_side, "_s")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).cast("int").alias("n_hits"))
+        postings(docs)
+        .join(F.broadcast(probe_sh) if broadcast_probes else probe_sh, "_s")
+        .groupBy(i)
+        .agg(F.expr("CAST(count(1) AS INT) AS n_hits"))
     )
     if mode == "filter":
         return docs.join(
-            hits.filter(F.col("n_hits") >= min_overlap), id_col, "left_anti"
+            hits.filter(f"n_hits >= {int(min_overlap)}"), id_col, "left_anti"
         )
+    cols = [ident(c) for c in docs.columns if c != id_col]
     return (
         docs.join(hits, id_col, "left")
-        .withColumn("n_hits", F.coalesce(F.col("n_hits"), F.lit(0)))
-        .withColumn("contaminated", F.col("n_hits") >= min_overlap)
+        .selectExpr(i, *cols, "coalesce(n_hits, 0) AS n_hits")
+        .selectExpr("*", f"n_hits >= {int(min_overlap)} AS contaminated")
     )

@@ -20,10 +20,11 @@ The 100 TB story: each round is two hash joins + one aggregation, all
 keyed on node/label ids — balanced keys, broadcast-free, no global
 structure. State between rounds is ONE (node, component) frame,
 ``localCheckpoint``-ed so the plan does not grow with iterations (the
-classic iterative-DataFrame lineage explosion). Convergence is
-detected by a changed-label count that rides the checkpoint job as an
-``Observation`` — zero extra actions or joins per round. The result
-is the TRUE components — a pure function of the edge set, independent
+classic iterative-DataFrame lineage explosion); each round is built from
+SQL expression strings, a few py4j calls per DataFrame operation.
+Convergence is detected by a changed-label count that rides the
+checkpoint job as an ``Observation`` — zero extra actions or joins per
+round. The result is the TRUE components — a pure function of the edge set, independent
 of iteration order, partitioning, or cluster size — which is what
 makes a SQL oracle possible (DuckDB replays it as recursive-CTE
 reachability and must agree bit-for-bit).
@@ -31,8 +32,10 @@ reachability and must agree bit-for-bit).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from etl_rs_spark.sql_text import ident
 
 
 def connected_components(
@@ -52,54 +55,40 @@ def connected_components(
     pathological chain longer than 2^max_iter nodes — not a dedup
     graph).
     """
-    spark = edges.sparkSession
-    und = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-    und = und.filter(F.col("u") != F.col("v")).distinct()
-    und = und.localCheckpoint(eager=True)
-
-    labels = und.select(F.col("u").alias("node")).distinct().withColumn(
-        "component", F.col("node")
+    u, v = ident(src), ident(dst)
+    und = edges.selectExpr(f"{u} AS u", f"{v} AS v").union(
+        edges.selectExpr(f"{v} AS u", f"{u} AS v")
     )
+    und = und.filter("u != v").distinct().localCheckpoint(eager=True)
+    labels = und.selectExpr("u AS node").distinct().selectExpr("node", "node AS component")
     labels = labels.localCheckpoint(eager=True)
-
-    from pyspark.sql import Observation
 
     for it in range(max_iter):
         # smallest neighbor label per node; carry the old label so the
         # convergence check RIDES the checkpoint job (an Observation)
         # instead of costing a separate join+count action per round
         neigh = (
-            und.join(labels, und["v"] == labels["node"])
-            .groupBy("u")
-            .agg(F.min("component").alias("_nc"))
-            .withColumnRenamed("u", "node")
+            und.join(labels, F.expr("v = node"))
+            .groupBy(F.expr("u AS node"))
+            .agg(F.expr("min(component) AS _nc"))
         )
-        stepped = labels.join(neigh, "node", "left").select(
-            "node",
-            F.col("component").alias("_old"),
-            F.least("component", "_nc").alias("component"),
+        stepped = labels.join(neigh, "node", "left").selectExpr(
+            "node", "component AS _old", "least(component, _nc) AS component"
         )
         # path halving: component <- label(component)
-        parent = stepped.select(
-            F.col("node").alias("_p_node"), F.col("component").alias("_p_comp")
-        )
-        halved = stepped.join(
-            parent, stepped["component"] == parent["_p_node"], "left"
-        ).select(
-            "node",
-            "_old",
-            F.least("component", "_p_comp").alias("component"),
+        parent = stepped.selectExpr("node AS _p_node", "component AS _p_comp")
+        halved = stepped.join(parent, F.expr("component = _p_node"), "left").selectExpr(
+            "node", "_old", "least(component, _p_comp) AS component"
         )
         obs = Observation(f"cc_round_{it}")
-        halved = halved.observe(
-            obs,
-            F.coalesce(
-                F.sum((F.col("component") != F.col("_old")).cast("long")), F.lit(0)
-            ).alias("changed"),
+        labels = (
+            halved.observe(
+                obs,
+                F.expr("coalesce(sum(CAST(component != _old AS BIGINT)), 0) AS changed"),
+            )
+            .selectExpr("node", "component")
+            .localCheckpoint(eager=True)
         )
-        labels = halved.select("node", "component").localCheckpoint(eager=True)
         if int(obs.get["changed"]) == 0:
             return labels
     raise RuntimeError(
@@ -118,4 +107,4 @@ def dedup_survivors(
     in no pair are absent (they trivially survive); anti-join the
     corpus against the non-survivors to apply the dedup."""
     cc = connected_components(edges, src=src, dst=dst)
-    return cc.withColumn("is_survivor", F.col("node") == F.col("component"))
+    return cc.selectExpr("*", "node = component AS is_survivor")

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_rs_spark.sql_text import ident
+
 
 def lww_agg(
     df: DataFrame,
@@ -24,8 +26,8 @@ def lww_agg(
     order: tuple[str, ...] = ("lsn", "offset"),
 ) -> DataFrame:
     payload = [c for c in df.columns if c != key]
-    values = ", ".join(f"`{c}`" for c in payload)
-    keys = ", ".join(f"`{c}`" for c in order)
+    values = ", ".join(map(ident, payload))
+    keys = ", ".join(map(ident, order))
     winner = F.expr(f"max_by(struct({values}), struct({keys})) AS _w")
-    out = df.groupBy(f"`{key}`").agg(winner)
-    return out.selectExpr(f"`{key}`", *[f"_w.`{c}` AS `{c}`" for c in payload])
+    out = df.groupBy(ident(key)).agg(winner)
+    return out.selectExpr(ident(key), *[f"_w.{ident(c)} AS {ident(c)}" for c in payload])

@@ -20,6 +20,10 @@ threshold floor(frac * 2^60). No floats cross engines, no RNG state:
 the same call yields the same sample on any cluster size or
 partitioning, and a DuckDB oracle replays it bit-for-bit.
 
+``mix_sample`` builds its plan from SQL expression strings
+(``etl_rs_spark.sql_text``; source names enter as escaped literals):
+four DataFrame operations, a few py4j calls each.
+
 The 100 TB story: ZERO shuffles — a broadcast-free narrow projection
 (the weight table folds into the plan as a literal map), one
 ``transform``/``explode`` per row bounded by ceil(weight), and the
@@ -35,7 +39,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_rs_spark.operators.dedup_scale import word_hash60
+from etl_rs_spark.operators.dedup_scale import word_hash60, word_hash60_sql
+from etl_rs_spark.sql_text import ident, literal
 
 #: hash domain: word_hash60 yields ids in [0, 2^60)
 _HASH_DOMAIN = 1 << 60
@@ -90,41 +95,40 @@ def mix_sample(
     cases = {s: _split(w) for s, w in weights.items()}
     dk, dthr = _split(default_weight)
 
-    n_full = F.lit(dk)
-    thr = F.lit(dthr)
-    for s, (k, t) in cases.items():
-        cond = F.col(source_col) == F.lit(s)
-        n_full = F.when(cond, F.lit(k)).otherwise(n_full)
-        thr = F.when(cond, F.lit(t)).otherwise(thr)
+    # one CASE per source, the last-named source outermost
+    n_full, thr = str(dk), str(dthr)
+    for src, (k, t) in cases.items():
+        cond = f"{ident(source_col)} = {literal(src)}"
+        n_full = f"CASE WHEN {cond} THEN {int(k)} ELSE {n_full} END"
+        thr = f"CASE WHEN {cond} THEN {int(t)} ELSE {thr} END"
 
     # candidate replicas 0 .. n_full (the last one is the fractional
     # draw, generated only when a fraction exists). sequence(0, -1)
     # would count BACKWARDS, hence the explicit empty-array guard.
-    n_cand = n_full + F.when(thr > 0, F.lit(1)).otherwise(F.lit(0))
-    cands = F.when(
-        n_cand > 0, F.sequence(F.lit(0), n_cand - 1)
-    ).otherwise(F.array().cast("array<int>"))
+    n_cand = f"{n_full} + CASE WHEN {thr} > 0 THEN 1 ELSE 0 END"
+    cands = (
+        f"CASE WHEN {n_cand} > 0 THEN sequence(0, {n_cand} - 1) "
+        f"ELSE CAST(array() AS ARRAY<INT>) END"
+    )
 
-    # F.concat, NOT concat_ws: concat_ws SKIPS null inputs, so a NULL id
+    # concat, NOT concat_ws: concat_ws SKIPS null inputs, so a NULL id
     # would silently hash as just "replica:seed" (one shared draw for
     # every NULL-id row) while the SQL oracle's || yields NULL and drops
     # the row. concat propagates NULL -> hash NULL -> comparison NULL ->
     # fractional draw filtered out, matching the oracle: NULL-id rows
     # keep their integer copies and never win a fractional draw.
-    key = F.concat(
-        F.col(id_col).cast("string"), F.lit(":"),
-        F.col("_replica").cast("string"), F.lit(":"), F.lit(str(seed)),
+    key = (
+        f"concat(CAST({ident(id_col)} AS STRING), ':', "
+        f"CAST(_replica AS STRING), ':', '{int(seed)}')"
     )
-    out = (
-        df.withColumn("_nf", n_full)
-        .withColumn("_thr", thr)
-        .withColumn("_replica", F.explode_outer(cands))
-        .filter(F.col("_replica").isNotNull())
-        .filter((F.col("_replica") < F.col("_nf")) | (word_hash60(key) < F.col("_thr")))
-        .withColumn("replica", F.col("_replica").cast("int"))
-        .drop("_nf", "_thr", "_replica")
+    return (
+        df.selectExpr("*", f"{n_full} AS _nf", f"{thr} AS _thr")
+        .selectExpr("*", f"explode_outer({cands}) AS _replica")
+        .filter(
+            f"_replica IS NOT NULL AND (_replica < _nf OR {word_hash60_sql(key)} < _thr)"
+        )
+        .selectExpr(*map(ident, df.columns), "CAST(_replica AS INT) AS replica")
     )
-    return out
 
 
 def stratified_split(

@@ -34,6 +34,8 @@ Distribution model (the 100 TB story):
   1M-token document simply spans many chunks.
 - Everything is built-in Catalyst expressions (window sum, transform/
   slice, explode, array_sort/flatten) — no Python in the hot path.
+  ``pack_sequences`` builds them from SQL expression strings
+  (``etl_rs_spark.sql_text``), a few py4j calls per DataFrame operation.
 - The offset window carries the token payload through the one
   shuffle. A shuffle-thin variant (window over (shard, id, length)
   only, then join the payload back by id) trades that for an extra
@@ -57,8 +59,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType
+from pyspark.sql.types import ArrayType, NumericType
 from pyspark.sql.window import Window
+
+from etl_rs_spark.sql_text import ident
 
 
 def pack_sequences(
@@ -104,13 +108,13 @@ def pack_sequences(
         df, max_len, tokens_col, id_col, n_shards, sep_token, shard_expr
     )
     # running offset of each doc inside its shard's concatenated stream
-    w = (
-        Window.partitionBy("shard")
-        .orderBy(*ids)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    off = staged.withColumn("_start", F.coalesce(F.sum("_ln").over(w), F.lit(0)))
-    return _assemble_chunks(off.withColumn("_nd", F.lit(1)), max_len)
+    order = ", ".join(map(ident, ids))
+    return _assemble_chunks(staged.selectExpr(
+        "*",
+        f"coalesce(sum(_ln) OVER (PARTITION BY shard ORDER BY {order} ROWS "
+        f"BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS _start",
+        "1 AS _nd",
+    ), max_len)
 
 
 def _staged_docs(
@@ -131,13 +135,14 @@ def _staged_docs(
         raise ValueError(f"n_shards must be positive, got {n_shards}")
     ids = [id_col] if isinstance(id_col, str) else list(id_col)
 
-    toks = F.col(tokens_col)
+    toks = ident(tokens_col)
     if sep_token is not None:
-        sep = F.lit(sep_token).cast(df.schema[tokens_col].dataType.elementType)
-        toks = F.concat(toks, F.array(sep))
-    if shard_expr is None:
-        from pyspark.sql.types import NumericType
-
+        elem = df.schema[tokens_col].dataType.elementType.simpleString()
+        toks = f"concat({toks}, array(CAST({int(sep_token)} AS {elem})))"
+    if shard_expr is not None:
+        df = df.withColumn("_shard", shard_expr)
+        shard = "_shard"
+    else:
         if not isinstance(df.schema[ids[0]].dataType, NumericType):
             raise ValueError(
                 f"default shard key pmod({ids[0]}, n) needs a numeric id "
@@ -145,15 +150,14 @@ def _staged_docs(
                 f"pass shard_expr (e.g. pmod(xxhash64(id), n)) for "
                 f"string ids"
             )
-        shard_expr = F.pmod(F.col(ids[0]).cast("bigint"), F.lit(n_shards))
-    shard = shard_expr.cast("int")
+        shard = f"pmod(CAST({ident(ids[0])} AS BIGINT), {int(n_shards)})"
 
-    staged = df.select(
-        *ids,
-        shard.alias("shard"),
-        toks.alias("_tk"),
-        F.size(toks).cast("bigint").alias("_ln"),
-    ).filter(F.col("_ln") > 0)
+    staged = df.selectExpr(
+        *map(ident, ids),
+        f"CAST({shard} AS INT) AS shard",
+        f"{toks} AS _tk",
+        f"CAST(size({toks}) AS BIGINT) AS _ln",
+    ).filter("_ln > 0")
     return staged, ids
 
 
@@ -166,66 +170,42 @@ def _assemble_chunks(off: DataFrame, max_len: int) -> DataFrame:
     ``shard`` is a subset of the grouping keys, so the groupBy reuses
     whatever shard-hash partitioning produced ``_start`` (plan-gated:
     one exchange total in pack_sequences)."""
-    L = F.lit(int(max_len)).cast("bigint")
-    off = off.withColumn("_fin", F.col("_start") + F.col("_ln"))
-
+    L = f"CAST({int(max_len)} AS BIGINT)"
     # chunks this run spans: floor(start/L) .. floor((fin-1)/L). _ln > 0
-    # guarantees the range is non-empty — F.sequence with hi < lo would
+    # guarantees the range is non-empty — sequence with hi < lo would
     # COUNT BACKWARDS, so upstream's empty-run filter is load-bearing.
-    spans = off.select(
-        "shard",
-        "_start",
-        "_fin",
-        "_tk",
-        "_nd",
-        F.expr(f"sequence(_start div {int(max_len)}, (_fin - 1) div {int(max_len)})").alias(
-            "_chunks"
-        ),
+    spans = off.selectExpr("*", "_start + _ln AS _fin").selectExpr(
+        "shard", "_start", "_fin", "_tk", "_nd",
+        f"sequence(_start div {int(max_len)}, (_fin - 1) div {int(max_len)}) AS _chunks",
     )
-
     # per-(run, chunk) slice, in LOCAL 1-based positions: the piece's
-    # global range is [max(start, c*L), min(fin, (c+1)*L))
-    def _piece(c: Column) -> Column:
-        g0 = F.greatest(F.col("_start"), c * L)
-        g1 = F.least(F.col("_fin"), (c + F.lit(1).cast("bigint")) * L)
-        return F.struct(
-            c.alias("chunk"),
-            F.slice(
-                F.col("_tk"),
-                (g0 - F.col("_start") + F.lit(1)).cast("int"),
-                (g1 - g0).cast("int"),
-            ).alias("piece"),
-        )
-
+    # global range is [g0, g1) = [max(start, c*L), min(fin, (c+1)*L))
+    g0 = f"greatest(_start, c * {L})"
+    g1 = f"least(_fin, (c + CAST(1 AS BIGINT)) * {L})"
+    piece = (
+        f"struct(c AS chunk, slice(_tk, CAST({g0} - _start + 1 AS INT), "
+        f"CAST({g1} - {g0} AS INT)) AS piece)"
+    )
     # explode_outer + null filter, NOT plain explode: explode's implicit
     # size>0 pushdown re-evaluates the computed array at the scan
     pieces = (
-        spans.select(
-            "shard",
-            "_start",
-            "_nd",
-            F.explode_outer(F.transform(F.col("_chunks"), _piece)).alias("_cp"),
+        spans.selectExpr(
+            "shard", "_start", "_nd",
+            f"explode_outer(transform(_chunks, c -> {piece})) AS _cp",
         )
-        .filter(F.col("_cp").isNotNull())
-        .select("shard", "_start", "_nd", F.col("_cp.chunk").alias("chunk"), F.col("_cp.piece").alias("_piece"))
+        .filter("_cp IS NOT NULL")
+        .selectExpr("shard", "_start", "_nd", "_cp.chunk AS chunk", "_cp.piece AS _piece")
     )
-
     # assemble each window: pieces ordered by their run's start offset
     # (unique within a chunk), then flattened
-    asm = (
+    return (
         pieces.groupBy("shard", "chunk")
         .agg(
-            F.array_sort(F.collect_list(F.struct("_start", "_piece"))).alias("_sp"),
-            F.sum("_nd").cast("int").alias("n_docs"),
+            F.expr("array_sort(collect_list(struct(_start, _piece))) AS _sp"),
+            F.expr("CAST(sum(_nd) AS INT) AS n_docs"),
         )
-        .withColumn("tokens", F.flatten(F.col("_sp._piece")))
-    )
-    return asm.select(
-        "shard",
-        "chunk",
-        "tokens",
-        F.size("tokens").alias("n_tokens"),
-        "n_docs",
+        .selectExpr("*", "flatten(_sp._piece) AS tokens")
+        .selectExpr("shard", "chunk", "tokens", "size(tokens) AS n_tokens", "n_docs")
     )
 
 

@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from etl_rs_spark.operators.lww import lww_agg
+from etl_rs_spark.sql_text import ident
 
 META_COLS = ["_lsn", "_offset", "_deleted"]
 ENVELOPE_COLS = ["op", "lsn", "offset", "partition", "ts"]
@@ -283,7 +284,7 @@ class LakehouseTable:
         a bucket; partitionBy routes on the ``_bucket`` value, so placement
         is correct either way and only the file count depends on the rule."""
         df = df.withColumn(
-            "_bucket", F.expr(f"CAST(pmod(hash(`{self.key_col}`), {self.n_buckets}) AS INT)")
+            "_bucket", F.expr(f"CAST(pmod(hash({ident(self.key_col)}), {int(self.n_buckets)}) AS INT)")
         )
         if self.n_buckets % int(self.spark.conf.get("spark.sql.shuffle.partitions")):
             df = df.repartition(self.n_buckets, "_bucket")
@@ -305,8 +306,8 @@ class LakehouseTable:
         return max(map(len, man["buckets"].values()), default=0) + len(man["deltas"])
 
     def _full_schema_ddl(self, man: dict) -> str:
-        cols = [f"`{self.key_col}` string"]
-        cols += [f"`{n}` {t}" for n, t in man["payload_schema"]]
+        cols = [f"{ident(self.key_col)} string"]
+        cols += [f"{ident(n)} {t}" for n, t in man["payload_schema"]]
         cols += ["`_lsn` bigint", "`_offset` bigint", "`_deleted` boolean"]
         return ", ".join(cols)
 
@@ -373,9 +374,9 @@ class LakehouseTable:
         schema = _widen(man["payload_schema"], batch_schema)
 
         chg = changes.selectExpr(
-            f"`{self.key_col}`",
+            ident(self.key_col),
             # null-fill payload columns absent in batch
-            *[f"`{n}`" if n in chg_types else f"CAST(NULL AS {t}) AS `{n}`" for n, t in schema],
+            *[ident(n) if n in chg_types else f"CAST(NULL AS {t}) AS {ident(n)}" for n, t in schema],
             "CAST(lsn AS BIGINT) AS _lsn",
             "CAST(`offset` AS BIGINT) AS _offset",
             "op = 'delete' AS _deleted",

@@ -22,6 +22,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_rs_spark.sql_text import ident
+
 
 @dataclass(frozen=True)
 class MappedColumn:
@@ -55,7 +57,7 @@ class ColumnMapping:
         targets = {m.target for m in self.columns}
         for m in self.columns:
             if m.source in df.columns:
-                out.append(F.expr(f"CAST(`{m.source}` AS {m.ddl_type}) AS `{m.target}`"))
+                out.append(F.expr(f"CAST({ident(m.source)} AS {m.ddl_type}) AS {ident(m.target)}"))
             else:
                 out.append(F.lit(m.default).cast(m.ddl_type).alias(m.target))
         for c in passthrough:

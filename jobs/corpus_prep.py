@@ -7,6 +7,9 @@ Runs the full pretraining-data flow over a documents table:
     -> source-weighted mixing -> fixed-length sequence packing
     -> parquet shards
 
+Every stage builds its plan from SQL expression strings
+(``etl_rs_spark.sql_text``): a few py4j calls per DataFrame operation.
+
 Each document is hashed to word ids once: the exact-dedup survivors'
 word ids are materialized by one eager local checkpoint whose job also
 counts them (an Observation; the count sizes the stop-shingle cap), and
@@ -99,12 +102,12 @@ def prep_corpus(
     # 1. exact dedup: digest-keyed survivors, content never shuffled.
     # The count sizes the stop-shingle cap (semantics, not metrics), so
     # it is taken whether or not an observer runs.
-    survivors = DS.dedup_digest_stats(docs, ["text"]).select("doc_id")
+    survivors = DS.dedup_digest_stats(docs, ["text"]).selectExpr("doc_id")
     docs = docs.join(survivors, "doc_id", "left_semi")
     obs = Observation("word_ids")
     wi = (
         DS.doc_word_ids_hashed(docs, extra_cols=("lang", "source"))
-        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .observe(obs, F.expr("count(1) AS n"))
         .localCheckpoint(eager=True)
     )
     note("exact_dedup", wi)
@@ -115,8 +118,8 @@ def prep_corpus(
             wi, blocking_col="lang", n=3, threshold=jaccard,
             max_doc_freq=max(64, int(obs.get["n"]) // 100),
         )
-        drops = dedup_survivors(edges).filter(~F.col("is_survivor")).select(
-            F.col("node").alias("doc_id")
+        drops = dedup_survivors(edges).filter("NOT is_survivor").selectExpr(
+            "node AS doc_id"
         )
         wi = wi.join(drops, "doc_id", "left_anti")
         note("near_dedup", wi)
@@ -135,15 +138,13 @@ def prep_corpus(
     if weights:
         mixed = mix_sample(wi, weights, default_weight=default_weight)
     else:
-        mixed = wi.withColumn("replica", F.lit(0))
+        mixed = wi.selectExpr("*", "0 AS replica")
     note("mix", mixed)
 
     # 5. pack
-    toks = mixed.select(
+    toks = mixed.selectExpr(
         "doc_id", "replica",
-        F.transform(
-            F.col("word_ids"), lambda w: (w % F.lit(vocab)).cast("int")
-        ).alias("tokens"),
+        f"transform(word_ids, w -> CAST(w % {int(vocab)} AS INT)) AS tokens",
     )
     return pack_sequences(
         toks, max_len, id_col=("doc_id", "replica"),

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import threading
 
 import pytest
 
@@ -27,3 +29,31 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def jvm_calls(spark, monkeypatch):
+    """``with jvm_calls() as calls: build()`` records one entry in
+    ``calls`` per py4j ``send_command`` the calling thread makes inside
+    the block: plan-building cost as a count, not a timing. py4j's
+    finalizer thread sends the deletes of garbage-collected JavaObjects
+    through the same client, so other threads are not counted (one GC
+    pass inside the window once added ~260 calls)."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    @contextlib.contextmanager
+    def counting():
+        send, calls, caller = client.send_command, [], threading.get_ident()
+
+        def counted(*args, **kwargs):
+            if threading.get_ident() == caller:
+                calls.append(1)
+            return send(*args, **kwargs)
+
+        monkeypatch.setattr(client, "send_command", counted)
+        try:
+            yield calls
+        finally:
+            monkeypatch.setattr(client, "send_command", send)
+
+    return counting

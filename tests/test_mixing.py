@@ -114,6 +114,17 @@ def test_mix_null_id_matches_sql_null_semantics(spark):
     assert (None, 2) not in got
 
 
+def test_mix_source_names_with_quotes_and_backslashes(spark):
+    """Source names enter the plan as escaped SQL literals: a name with
+    a quote, an escaped-quote look-alike and a trailing backslash
+    selects exactly its own rows, like any other name."""
+    odd = "it's \\' a \\"
+    docs = [(i, [odd, "plain", "it's"][i % 3]) for i in range(300)]
+    df = spark.createDataFrame(docs, "doc_id long, source string")
+    weights = {odd: 1.5, "plain": 0.0, "it's": 2.0}
+    assert _spark_mix(df, weights) == _py_mix(docs, weights)
+
+
 def test_mix_plans_zero_exchanges(corpus):
     """Mixing is a narrow projection: no shuffle, no broadcast — the
     weight map folds into the plan as literals and the hash filter runs

@@ -18,8 +18,8 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import random
 import sys
-import threading
 
 import pytest
 
@@ -129,7 +129,7 @@ def test_whole_stage_codegen_on_transforms(spark):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
 
 
-def test_cdc_plan_building_is_few_jvm_calls(spark, monkeypatch):
+def test_cdc_plan_building_is_few_jvm_calls(spark, jvm_calls):
     """Building (not running) valid_flag -> lww_agg -> normalize_events
     costs few py4j round trips: the operators are SQL strings, one call
     each, instead of Column chains that cost a call (plus PySpark's
@@ -148,18 +148,44 @@ def test_cdc_plan_building_is_few_jvm_calls(spark, monkeypatch):
         return normalize_events(lww_agg(valid_flag(df, vocab=100)), vocab=100, max_len=8)
 
     build()  # warm the session's lazily created JVM helpers
-    client = spark.sparkContext._gateway._gateway_client
-    send, calls, builder = client.send_command, [], threading.get_ident()
-
-    def counting(*args, **kwargs):
-        # py4j's finalizer thread sends the deletes of JavaObjects that
-        # Python garbage-collected through this client too; only the
-        # calling thread builds the plan
-        if threading.get_ident() == builder:
-            calls.append(1)
-        return send(*args, **kwargs)
-
-    monkeypatch.setattr(client, "send_command", counting)
-    build()
-    monkeypatch.undo()
+    with jvm_calls() as calls:
+        build()
     assert 0 < len(calls) <= 596 // 4, len(calls)
+
+
+def _small_corpus(spark):
+    """60 random 30-word docs over 300 words, one exact copy and three
+    one-word near-copies (3-shingle Jaccard 27/29), and two probes, one
+    sharing a 5-word run with doc 5."""
+    rng = random.Random(5)
+    texts = [" ".join(f"w{rng.randrange(300)}" for _ in range(30)) for _ in range(60)]
+    texts.append(texts[3])
+    texts += [texts[i].rsplit(" ", 1)[0] + " dup" for i in (3, 10, 11)]
+    docs = spark.createDataFrame(
+        [(i, t, "en", f"src{i % 3}") for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string, source string",
+    )
+    probes = spark.createDataFrame(
+        [(0, " ".join(texts[5].split()[:5])), (1, "unrelated probe words")],
+        "doc_id long, text string",
+    )
+    return docs, probes
+
+
+def test_corpus_plan_building_is_few_jvm_calls(spark, jvm_calls):
+    """``prep_corpus`` builds every stage from SQL strings. On this
+    corpus one call, eager jobs included (the word-id checkpoint and
+    connected components' rounds), made 4,257 calling-thread py4j calls
+    when its stages were Column chains with Python lambdas (PySpark
+    4.1); the bound is a quarter of that."""
+    from jobs.corpus_prep import prep_corpus
+
+    docs, probes = _small_corpus(spark)
+    weights = {"src0": 2.0, "src1": 0.5}
+    stages = {}
+    prep_corpus(docs, probes, weights, max_len=64, shards=4, on_stage=stages.__setitem__)
+    n = {k: stages[k].count() for k in ("input", "exact_dedup", "near_dedup", "decontaminate")}
+    assert n == {"input": 64, "exact_dedup": 63, "near_dedup": 60, "decontaminate": 59}
+    with jvm_calls() as calls:
+        prep_corpus(docs, probes, weights, max_len=64, shards=4)
+    assert 0 < len(calls) <= 4257 // 4, len(calls)

@@ -616,7 +616,7 @@ def test_ngram_hot_shingle_cap_bounds_join_rows(spark):
     # pair-row bound, measured on the operator's own posting construction:
     # sum of c^2 over (block, shingle) doc-frequencies c <= cap
     sh = docs.select(
-        "lang", ds.ngram_shingles(F.col("word_ids"), 3).alias("_sh")
+        "lang", F.expr(ds.ngram_shingles("word_ids", 3)).alias("_sh")
     ).select("lang", F.explode("_sh").alias("_s"))
     dfreq = [r["c"] for r in sh.groupBy("lang", "_s").agg(F.count(F.lit(1)).alias("c")).collect()]
     assert sum(c * c for c in dfreq) > n_docs * n_docs          # uncapped blow-up exists

@@ -64,16 +64,17 @@ STOPWORDS = TX.DEFAULT_STOPWORDS
 HP = [TX.hash_params(i) for i in range(64)]
 
 # q27's configuration: 3 planes per band, band count derived by
-# inverting the S-curve to a 0.95 recall floor at the 0.3 threshold
-# (similarity.bands_for_recall — 13 bands). At this threshold the
-# derived 13 bands / 2^3 buckets exceed brute-force candidate volume,
-# so embedding_near_dup_pairs' cost-based cutover routes the SHIPPED
-# query to exact_pairs_blocked (blocked GEMM, recall 1.0); the banded
-# config is still measured + recall-gated in bench.py, and ships
-# unchanged at near-dup-grade thresholds where the S-curve is steep.
+# inverting the S-curve to the 0.95 recall floor embedding_near_dup_pairs
+# derives with (similarity.bands_for_recall — 13 bands). At this
+# threshold the derived 13 bands / 2^3 buckets exceed the operator's
+# BRUTE_CUTOVER, so its cost-based plan choice routes the SHIPPED query
+# to exact_pairs_blocked (blocked GEMM, recall 1.0); the banded config
+# (the same lsh_candidates join minhash and simhash use) is still
+# measured + recall-gated in bench.py, and ships unchanged at
+# near-dup-grade thresholds where the S-curve is steep.
 Q27_THRESHOLD = 0.3
 Q27_PLANES = 3
-Q27_BANDS = SIM.bands_for_recall(Q27_THRESHOLD, Q27_PLANES, 0.95)
+Q27_BANDS = SIM.bands_for_recall(Q27_THRESHOLD, Q27_PLANES)
 
 # Skew caps ACTIVE in the contract/bench paths (round-3 verdict: the
 # caps existed but every shipped query ran uncapped). Chosen above the
@@ -491,13 +492,15 @@ def q27_embedding_near_dups(spark, sf_dir):
     bands_for_recall -> 13 bands of 3 planes) derives a candidate
     volume ~1.6x BRUTE FORCE (13 bands / 2^3 buckets of n^2/2 pairs):
     the regime where LSH mathematically cannot win. The operator
-    detects exactly that (brute_cutover) and routes to
+    detects exactly that (b / 2^k >= the constant
+    similarity.BRUTE_CUTOVER) and routes to
     exact_pairs_blocked — a blocked numpy-GEMM all-pairs scorer (one
     shuffle, B(B+1)/2 equal tasks, no self-join, recall 1.0 by
     construction) — so the shipped q27 is EXACT and the oracle is the
     plain all-pairs SQL. At near-dup-grade thresholds (>= ~0.9) the
     same derivation yields a handful of bands far below the cutover
-    and the banded LSH plan ships instead; bench.py measures BOTH
+    and the banded LSH plan ships instead (dedup_scale.lsh_candidates,
+    then one exact-cosine verify per distinct pair); bench.py measures BOTH
     (asserts the shipped path matches the truth exactly AND the
     banded derivation still clears the 0.9 recall floor), so a knob
     change can't silently trade recall again. The scale path
@@ -1463,7 +1466,7 @@ def oracle_sql() -> dict[str, str]:
         LIMIT 50 OFFSET 10
     """
 
-    # q27 ships the exact path (the brute_cutover fires at threshold
+    # q27 ships the exact path (the BRUTE_CUTOVER fires at threshold
     # 0.3 — see q27_embedding_near_dups), so the oracle is the plain
     # all-pairs cosine: products and partial sums over the quantized
     # integer vectors are exactly representable in float64, making the

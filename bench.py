@@ -149,10 +149,11 @@ Q33_RECALL_FLOOR = 0.85
 def bench_ann_recall(spark, sf_dir: str) -> dict[str, float]:
     """ANN quality tracked next to latency, so knob changes can't
     silently trade recall:
-    - q27's SHIPPED config (auto-derived: at threshold 0.3 the
-      brute_cutover routes to exact_pairs_blocked) vs the brute-force
-      twin (n_planes=0 = one bucket = all-pairs self-join verify), at
-      sf0.01 where the quadratic truth stays cheap. ASSERTS recall
+    - q27's SHIPPED config (auto-derived: at threshold 0.3 the derived
+      band volume passes similarity.BRUTE_CUTOVER and the operator
+      routes to exact_pairs_blocked) vs the brute-force twin
+      (n_planes=0 = one bucket = all-pairs candidates, each verified
+      once), at sf0.01 where the quadratic truth stays cheap. ASSERTS recall
       == 1.0 — the cutover promises exactness, and a regression in the
       blocked GEMM or the routing would show here;
     - the BANDED derivation (explicit n_bands=Q27_BANDS, the plan that
@@ -184,7 +185,7 @@ def bench_ann_recall(spark, sf_dir: str) -> dict[str, float]:
     )
     if r27 != 1.0:
         raise RuntimeError(
-            f"q27 shipped-config recall {r27} != 1.0 — the brute_cutover "
+            f"q27 shipped-config recall {r27} != 1.0 — the BRUTE_CUTOVER "
             f"routes this threshold to exact_pairs_blocked, which must "
             f"match the all-pairs truth exactly; fix the blocked GEMM or "
             f"the routing before shipping this bench"

@@ -39,6 +39,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_rs_spark.sql_text import ident
+
 
 @dataclass
 class DedupConfig:
@@ -66,6 +68,11 @@ class DedupConfig:
     max_block_size: int | None = 10_000
 
 
+def _col(name: str, side: str = "") -> Column:
+    """Column ``name`` of the frame aliased ``side``, quoted."""
+    return F.col(f"{side}.{ident(name)}" if side else ident(name))
+
+
 def _serialize_list(col: Column) -> Column:
     """'/'-join with reference null semantics: any null element nulls the
     whole result (Polars list.join(ignore_nulls=false)); order canonical."""
@@ -77,9 +84,9 @@ def _serialize_list(col: Column) -> Column:
 def candidate_blocks(df: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Stages 2-3 (reference :265-311): keep rows in blocking groups of
     size > 1; the shuffle replaces the driver-side hash_partition."""
-    w = Window.partitionBy(cfg.blocking_col)
+    w = Window.partitionBy(_col(cfg.blocking_col))
     out = (
-        df.filter(F.col(cfg.blocking_col).isNotNull())
+        df.filter(_col(cfg.blocking_col).isNotNull())
         .withColumn("_block_size", F.count(F.lit(1)).over(w))
         .filter(F.col("_block_size") > 1)
     )
@@ -100,10 +107,10 @@ def detect_duplicates(df: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, DataF
     right = df.alias("r")
 
     def L(c: str) -> Column:
-        return F.col(f"l.`{c}`")
+        return _col(c, "l")
 
     def R(c: str) -> Column:
-        return F.col(f"r.`{c}`")
+        return _col(c, "r")
 
     soft = (
         (L(cfg.soft_col) == R(cfg.soft_col))
@@ -140,14 +147,14 @@ def detect_duplicates(df: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, DataF
     # reference :130-162 — group by (Id, Nom, Prenom); PCE keeps dups
     aggs = []
     for c, keep_dups in cfg.merge_cols.items():
-        merged = F.flatten(F.collect_list(F.col(f"`{c}`")))
+        merged = F.flatten(F.collect_list(_col(c)))
         if not keep_dups:
             merged = F.array_distinct(merged)
         aggs.append(merged.alias(c))
     aggs.append(
-        F.array_distinct(F.flatten(F.collect_list(cfg.ids_col))).alias(cfg.ids_col)
+        F.array_distinct(F.flatten(F.collect_list(_col(cfg.ids_col)))).alias(cfg.ids_col)
     )
-    merged = pair_df.groupBy(i, cfg.blocking_col, cfg.soft_col).agg(*aggs)
+    merged = pair_df.groupBy(*map(_col, (i, cfg.blocking_col, cfg.soft_col))).agg(*aggs)
 
     # reference :165-200 — eliminate rows whose id-set is a subset of
     # another row's (equal sets kill BOTH rows). Subsets can only occur
@@ -156,31 +163,27 @@ def detect_duplicates(df: DataFrame, cfg: DedupConfig) -> tuple[DataFrame, DataF
     subset_ids = (
         ml.join(
             mr,
-            (F.col(f"ml.`{cfg.blocking_col}`") == F.col(f"mr.`{cfg.blocking_col}`"))
-            & (F.col(f"ml.`{i}`") != F.col(f"mr.`{i}`"))
+            (_col(cfg.blocking_col, "ml") == _col(cfg.blocking_col, "mr"))
+            & (_col(i, "ml") != _col(i, "mr"))
             & (
-                F.size(
-                    F.array_except(
-                        F.col(f"ml.`{cfg.ids_col}`"), F.col(f"mr.`{cfg.ids_col}`")
-                    )
-                )
+                F.size(F.array_except(_col(cfg.ids_col, "ml"), _col(cfg.ids_col, "mr")))
                 == 0
             ),
             "inner",
         )
-        .select(F.col(f"ml.`{i}`").alias(i))
+        .select(_col(i, "ml").alias(i))
         .distinct()
     )
     survivors = merged.join(subset_ids, on=i, how="left_anti")
 
-    out_cols = [F.col(f"`{i}`"), F.col(f"`{cfg.blocking_col}`"), F.col(f"`{cfg.soft_col}`")]
+    out_cols = [_col(i), _col(cfg.blocking_col), _col(cfg.soft_col)]
     for c in cfg.merge_cols:
-        out_cols.append(_serialize_list(F.col(f"`{c}`")).alias(c))
-    out_cols.append(_serialize_list(F.col(f"`{cfg.ids_col}`")).alias(cfg.ids_col))
+        out_cols.append(_serialize_list(_col(c)).alias(c))
+    out_cols.append(_serialize_list(_col(cfg.ids_col)).alias(cfg.ids_col))
     rows_to_add = survivors.select(*out_cols)
 
     ids_to_remove = (
-        survivors.select(F.explode(cfg.ids_col).alias(i)).distinct()
+        survivors.select(F.explode(_col(cfg.ids_col)).alias(i)).distinct()
     )
     return rows_to_add, ids_to_remove
 
@@ -196,7 +199,7 @@ def reconciliate(
     originals = df_original.withColumn(
         cfg.ids_col, F.lit(None).cast("string")
     ).join(ids_to_remove, on=cfg.id_col, how="left_anti")
-    return originals.unionByName(rows_to_add.select(*originals.columns))
+    return originals.unionByName(rows_to_add.select(*map(_col, originals.columns)))
 
 
 def dedup_merge(df: DataFrame, cfg: DedupConfig | None = None) -> DataFrame:
@@ -207,6 +210,6 @@ def dedup_merge(df: DataFrame, cfg: DedupConfig | None = None) -> DataFrame:
     """
     cfg = cfg or DedupConfig()
     keep = [cfg.id_col, cfg.blocking_col, cfg.soft_col, *cfg.merge_cols]
-    candidates = candidate_blocks(df.select(*[F.col(f"`{c}`") for c in keep]), cfg)
-    rows_to_add, ids_to_remove = detect_duplicates(candidates, cfg)
-    return reconciliate(df.select(*[F.col(f"`{c}`") for c in keep]), rows_to_add, ids_to_remove, cfg)
+    kept = df.select(*map(_col, keep))
+    rows_to_add, ids_to_remove = detect_duplicates(candidate_blocks(kept, cfg), cfg)
+    return reconciliate(kept, rows_to_add, ids_to_remove, cfg)

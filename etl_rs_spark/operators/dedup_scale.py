@@ -54,6 +54,48 @@ def cap_group_size(
     )
 
 
+def lsh_candidates(
+    df: DataFrame,
+    id_col: str,
+    keys: list[Column],
+    cap: int | None,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """The candidate stage of every banded-LSH pair search here
+    (minhash, simhash, embedding): ``keys[b]`` is band b's bucket key
+    over ``df``'s columns. Each row explodes into one (band, key) row
+    per band, ``cap_group_size`` drops over-full buckets, and an equi
+    self-join on (band, key) with ``id_l < id_r`` emits a pair once per
+    colliding band; the distinct makes it once per pair, so a verify
+    placed above it runs once per pair, never once per band. Returns
+    (id_l, id_r) plus each ``carry`` column as ``{c}_l`` / ``{c}_r``."""
+    band_keys = F.array(
+        *[F.struct(F.lit(bi).alias("band"), k.alias("key")) for bi, k in enumerate(keys)]
+    )
+    cols = [F.col(ident(c)) for c in (id_col, *carry)]
+    banded = df.select(*cols, F.explode(band_keys).alias("_b")).select(
+        *cols, F.col("_b.band").alias("band"), F.col("_b.key").alias("key")
+    )
+    banded = cap_group_size(banded, ("band", "key"), cap)
+
+    l, r = banded.alias("l"), banded.alias("r")
+    i = ident(id_col)
+    return (
+        l.join(
+            r,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.key") == F.col("r.key"))
+            & (F.col(f"l.{i}") < F.col(f"r.{i}")),
+        )
+        .select(
+            F.col(f"l.{i}").alias("id_l"),
+            F.col(f"r.{i}").alias("id_r"),
+            *[F.col(f"{s}.{ident(c)}").alias(f"{c}_{s}") for c in carry for s in "lr"],
+        )
+        .distinct()
+    )
+
+
 # ---------------------------------------------------------------------------
 # exact dedup
 
@@ -186,7 +228,7 @@ def minhash_lsh_pairs(
     (band, key) pair instead of a signature array, and the fold is
     replicable in ANSI SQL for the oracles. Fold collisions can only ADD
     candidates (verified next), never lose a true pair. Shuffles:
-    (1) banded equi self-join on (band, key) — never a cross join;
+    (1) ``lsh_candidates``' equi self-join on (band, key) and distinct;
     (2) distinct pairs join back to word-id sets for the exact verify.
     Returns (id_l, id_r, jaccard), id_l < id_r, jaccard rounded to
     6 decimals (cross-engine float parity) and >= threshold.
@@ -205,32 +247,16 @@ def minhash_lsh_pairs(
         k = F.lit(0).cast("bigint")
         for j in range(rows_per_band):
             k = (k * BAND_KEY_B + F.col("_sig")[bi * rows_per_band + j]) % F.lit(HASH_P)
-        return F.struct(F.lit(bi).alias("band"), k.alias("key"))
+        return k
 
-    banded = with_sig.select(
-        id_col, F.explode(F.array(*[band_key(bi) for bi in range(bands)])).alias("_b")
-    ).select(id_col, F.col("_b.band").alias("band"), F.col("_b.key").alias("key"))
-
-    banded = cap_group_size(banded, ("band", "key"), max_bucket_size)
-
-    l, r = banded.alias("l"), banded.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_l"), F.col(f"r.{id_col}").alias("id_r")
-        )
-        .distinct()
+    cand = lsh_candidates(
+        with_sig, id_col, [band_key(bi) for bi in range(bands)], max_bucket_size
     )
 
     sets = docs.select(
         F.col(id_col), F.array_distinct(F.col(word_ids_col)).alias("_set")
     )
-    verified = (
+    return (
         cand.join(sets.withColumnsRenamed({id_col: "id_l", "_set": "_sl"}), "id_l")
         .join(sets.withColumnsRenamed({id_col: "id_r", "_set": "_sr"}), "id_r")
         .withColumn(
@@ -244,7 +270,6 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_l", "id_r", "jaccard")
     )
-    return verified
 
 
 # ---------------------------------------------------------------------------
@@ -321,8 +346,9 @@ def simhash_pairs(
     """Near-dup pairs by SimHash Hamming distance <= max_hamming.
 
     Blocking: split the fingerprint into (max_hamming+1) bit-bands —
-    by pigeonhole any pair within distance d agrees on >= 1 band, so an
-    equi join per band finds all true pairs without a cross join.
+    by pigeonhole any pair within distance d agrees on >= 1 band, so
+    ``lsh_candidates``' equi join finds all true pairs without a cross
+    join; the distance is computed from the carried fingerprints.
 
     Scale controls (the same remedies as embedding_near_dup_pairs):
     ``bits=None`` derives the fingerprint width from the corpus size
@@ -348,36 +374,14 @@ def simhash_pairs(
     # join no band: the pigeonhole guarantee is unaffected — differing
     # uncovered bits leave every band key untouched, so a <=max_hamming
     # pair still agrees on >= 1 band.
-    band_structs = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            (F.shiftright(F.col("_fp"), bi * band_bits)
-             % F.lit(2 ** band_bits).cast("bigint")).alias("key"),
-        )
+    keys = [
+        F.shiftright(F.col("_fp"), bi * band_bits) % F.lit(2 ** band_bits).cast("bigint")
         for bi in range(n_bands)
     ]
-    banded = with_fp.select(
-        id_col, "_fp", F.explode(F.array(*band_structs)).alias("_b")
-    ).select(id_col, "_fp", F.col("_b.band").alias("band"), F.col("_b.key").alias("key"))
-
-    banded = cap_group_size(banded, ("band", "key"), max_bucket_size)
-
-    l, r = banded.alias("l"), banded.alias("r")
-    hamming = _popcount_bigint(F.col("l._fp").bitwiseXOR(F.col("r._fp")))
-    return (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_l"),
-            F.col(f"r.{id_col}").alias("id_r"),
-            hamming.alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+    cand = lsh_candidates(with_fp, id_col, keys, max_bucket_size, carry=("_fp",))
+    hamming = _popcount_bigint(F.col("_fp_l").bitwiseXOR(F.col("_fp_r")))
+    return cand.select("id_l", "id_r", hamming.alias("hamming")).filter(
+        F.col("hamming") <= max_hamming
     )
 
 

@@ -16,14 +16,18 @@ random-hyperplane LSH (``lsh_bucket``). Hyperplanes are deterministic
 exactly. Ranking uses the RAW double
 score (exact for the quantized integer vectors the contract queries
 feed in — no cross-engine divergence possible); only the *reported*
-score is rounded to 6 decimals. Ties break on corpus id.
+score is rounded to ``SCORE_DIGITS`` decimals. Ties break on corpus id.
 
 Scale controls (100 TB):
 - ``auto_n_planes`` derives the plane count from corpus size so the
   expected bucket occupancy stays constant as the corpus grows (fixed
   n_planes means O(n^2 / 2^planes) in-bucket pairs — quadratic);
 - ``bands_for_recall`` derives the OR-amplification band count that
-  buys a recall floor without shrinking buckets;
+  buys a recall floor without shrinking buckets, and the candidate
+  volume it implies picks the plan: banded LSH through
+  ``dedup_scale.lsh_candidates`` (the candidate join minhash and
+  simhash share) or, past ``BRUTE_CUTOVER``, the exact blocked GEMM
+  ``exact_pairs_blocked``;
 - ``embedding_near_dup_pairs`` takes ``max_bucket_size``: buckets
   larger than the cap are excluded from pairing (the dedup
   ``max_block_size`` rule — a mega-bucket means the planes under-split
@@ -36,7 +40,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_rs_spark.operators.dedup_scale import lsh_candidates
 from etl_rs_spark.operators.text import HASH_P, hash_params
+
+#: decimals of every reported score (ranking uses the raw double)
+SCORE_DIGITS = 6
+#: candidate share of all pairs at which ``embedding_near_dup_pairs``
+#: stops banding and scores every pair exactly
+BRUTE_CUTOVER = 0.5
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -52,16 +63,12 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Null (not error) on zero-norm vectors — the engine's null-on-
-    invalid rule, and ANSI-mode safe."""
-    return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
-
-
 def _cosine_precomputed(a: Column, b: Column, na: Column, nb: Column) -> Column:
     """Cosine with per-VECTOR norms hoisted out of the pair join —
     computing norms per pair triples the array work in an O(pairs)
-    stage (ArrayAggregate runs interpreted, not codegen'd)."""
+    stage (ArrayAggregate runs interpreted, not codegen'd). Null (not
+    error) on zero-norm vectors — the engine's null-on-invalid rule,
+    and ANSI-mode safe."""
     return dot(a, b) / F.nullif(na * nb, F.lit(0.0))
 
 
@@ -86,7 +93,6 @@ def cosine_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
@@ -122,7 +128,7 @@ def cosine_topk(
         .filter(F.col("rank") <= k)
         .select(
             "query_id", "neighbor_id",
-            F.round("score", round_digits).alias("score"), "rank",
+            F.round("score", SCORE_DIGITS).alias("score"), "rank",
         )
     )
 
@@ -196,16 +202,14 @@ def _plane_projection(vec: Column, plane_idx: int, dim: int) -> Column:
     return F.round(F.aggregate(signed, F.lit(0.0), lambda acc, x: acc + x), 6)
 
 
-def hyperplane_sign(vec: Column, plane_idx: int, dim: int) -> Column:
-    """Sign bit of <vec, plane>."""
-    return (_plane_projection(vec, plane_idx, dim) > 0).cast("int")
-
-
-def lsh_bucket(vec: Column, n_planes: int, dim: int) -> Column:
-    """Bucket id = concatenated sign bits of n_planes hyperplanes."""
+def lsh_bucket(vec: Column, n_planes: int, dim: int, band: int = 0) -> Column:
+    """Bucket id = concatenated sign bits of <vec, plane> over n_planes
+    hyperplanes. OR-amplification band ``band`` uses planes
+    [band*n_planes, (band+1)*n_planes), an independent set per band;
+    band 0 is the bucket q23 assigns."""
     bucket = F.lit(0)
-    for j in range(n_planes):
-        bucket = bucket * 2 + hyperplane_sign(vec, j, dim)
+    for j in range(band * n_planes, (band + 1) * n_planes):
+        bucket = bucket * 2 + (_plane_projection(vec, j, dim) > 0).cast("int")
     return bucket
 
 
@@ -295,7 +299,6 @@ def ivf_topk_exact(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """IVF ANN with a DETERMINISTIC integer Lloyd's coarse quantizer,
     so the result is oracle-checkable (a library k-means's centroids
@@ -338,19 +341,9 @@ def ivf_topk_exact(
         .filter(F.col("rank") <= k)
         .select(
             "query_id", "neighbor_id",
-            F.round("score", round_digits).alias("score"), "rank",
+            F.round("score", SCORE_DIGITS).alias("score"), "rank",
         )
     )
-
-
-def _lsh_bucket_banded(vec: Column, band: int, n_planes: int, dim: int) -> Column:
-    """Bucket id for OR-amplification band ``band``: planes
-    [band*n_planes, (band+1)*n_planes) — independent hyperplane sets
-    per band. band=0 reproduces ``lsh_bucket`` exactly."""
-    bucket = F.lit(0)
-    for j in range(n_planes):
-        bucket = bucket * 2 + hyperplane_sign(vec, band * n_planes + j, dim)
-    return bucket
 
 
 def exact_pairs_blocked(
@@ -359,7 +352,6 @@ def exact_pairs_blocked(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_blocks: int = 16,
-    round_digits: int = 6,
 ) -> DataFrame:
     """EXACT all-pairs cosine ≥ threshold, distributed as a block matrix
     product — the right plan when LSH banding cannot beat brute force
@@ -429,7 +421,7 @@ def exact_pairs_blocked(
     # emit margin: round(raw, d) >= t iff raw >= t - 0.5*10^-d; one full
     # ulp of the rounding grid is a safe over-approximation, and the
     # Spark-side round()+filter below makes the final cut
-    margin = threshold - 10.0 ** (-round_digits)
+    margin = threshold - 10.0 ** (-SCORE_DIGITS)
 
     def run(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         g1, g2 = int(key[0]), int(key[1])
@@ -460,7 +452,7 @@ def exact_pairs_blocked(
         return pd.DataFrame({"id_l": id_l, "id_r": id_r, "_raw": raw})
 
     pairs = exploded.groupBy("_g1", "_g2").applyInPandas(run, out_schema)
-    score = F.round(F.col("_raw"), round_digits).alias("score")
+    score = F.round(F.col("_raw"), SCORE_DIGITS).alias("score")
     return pairs.select("id_l", "id_r", score).filter(
         F.col("score") >= threshold
     )
@@ -473,13 +465,8 @@ def embedding_near_dup_pairs(
     n_planes: int | None = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
     max_bucket_size: int | None = None,
-    target_bucket_size: int = 1024,
     n_bands: int | None = None,
-    target_recall: float = 0.95,
-    brute_cutover: float | None = 0.5,
-    n_blocks: int = 16,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: LSH bucket self-join (near-
     identical vectors land in the same bucket with high probability),
@@ -487,133 +474,63 @@ def embedding_near_dup_pairs(
 
     ``n_planes=None`` derives the plane count from the corpus size
     (auto_n_planes, one cheap count job) so in-bucket pair work stays
-    linear as the corpus grows. ``max_bucket_size`` mirrors dedup's
+    linear as the corpus grows; ``n_planes=0`` puts every vector in one
+    bucket (exact all-pairs). ``max_bucket_size`` mirrors dedup's
     max_block_size rule: buckets over the cap are excluded from pairing
-    entirely (bounded worst case under adversarial skew — a mega-bucket
-    means the planes under-split; raise n_planes instead of paying
-    O(k^2)).
+    entirely (a mega-bucket means the planes under-split; raise
+    n_planes instead of paying O(k^2)).
 
-    ``n_bands`` is the RECALL knob (OR-amplification, the same banding
-    minhash LSH uses): each band hashes with an independent set of
-    n_planes hyperplanes and a pair is a candidate if it collides in
-    ANY band. Single-band recall for a pair at angle θ is
-    (1 - θ/π)^n_planes — only ~0.67 even at cosine 0.98 with 6 planes,
-    and ~0.05 at a 0.3 threshold — while b bands give 1-(1-p^k)^b
-    WITHOUT growing any bucket: cost is b× the candidate join, not
-    2^k× the bucket size. The DEFAULT (``n_bands=None``) derives b from
-    (threshold, n_planes, target_recall) by inverting the S-curve
-    (``bands_for_recall``) so the shipped configuration has a recall
-    FLOOR for pairs at the threshold instead of whatever the knobs
-    happen to give. Pass ``n_bands=1`` explicitly for the original
-    single-plane-set behavior (band 0 = the original planes; banded
-    candidates are a superset). The exact-cosine verify runs once per
-    distinct pair — bands add candidates, never wrong scores.
+    ``n_bands`` is the RECALL knob (OR-amplification, as in minhash
+    LSH): band b hashes with its own planes (``lsh_bucket(...,
+    band=b)``) and a pair is a candidate if it collides in ANY band.
+    One band of k planes finds a pair at angle θ with probability
+    p = (1 - θ/π)^k — ~0.05 at a 0.3 threshold with 6 planes — while b
+    bands give 1-(1-p)^b WITHOUT growing any bucket. The default
+    (``None``) derives b by inverting that S-curve to a 0.95 recall
+    floor at the threshold (``bands_for_recall``). Every band count
+    takes the same plan: ``dedup_scale.lsh_candidates`` yields distinct
+    pairs (band 0's are a subset of any banded run's), the vectors join
+    back, and the exact-cosine verify runs once per pair.
 
-    ``brute_cutover`` is the COST-BASED strategy choice the derivation
-    enables: expected candidate volume of b bands of k planes is
-    ~(b / 2^k) * n^2/2 pairs, so when the derived b / 2^k reaches the
-    cutover fraction, banding generates as many candidates as exact
-    all-pairs verification would score — while also paying b× bucket
-    hashing, a distinct, and two vector join-backs. At that point the
-    operator routes to ``exact_pairs_blocked`` (blocked numpy GEMM:
-    cheaper per pair AND recall 1.0 by construction). This fires
-    exactly in the regime the S-curve says LSH loses — low thresholds
-    (e.g. 0.3: derived 13 bands / 2^3 buckets = 1.6x brute volume); at
-    near-dup-grade thresholds (>= ~0.9) the derived b stays far below
-    the cutover and the banded plan ships. The cutover applies ONLY
-    when ``n_bands`` is auto-derived — an explicit band count always
-    gets the banded plan — and only when ``max_bucket_size`` is unset:
-    the cap deliberately EXCLUDES mega-bucket pairs from the result,
-    a contract the exact path cannot honor, so asking for capped LSH
-    semantics always gets them. ``brute_cutover=None`` disables it."""
+    A derived b also picks the plan: b bands of k planes yield ~b/2^k
+    of all n^2/2 pairs as candidates, so once b/2^k reaches
+    ``BRUTE_CUTOVER`` banding costs more than scoring every pair and
+    the operator routes to ``exact_pairs_blocked`` (blocked numpy GEMM,
+    recall 1.0). That happens at low thresholds (0.3 with 3 planes: 13
+    bands / 2^3 = 1.6x brute volume), never at near-dup-grade ones
+    (>= ~0.9). An explicit ``n_bands`` always gets the banded plan, and
+    so does a set ``max_bucket_size``: the cap EXCLUDES mega-bucket
+    pairs, a contract the exact path cannot honor."""
     if n_planes is None:
-        n_planes = auto_n_planes(df.count(), target_bucket_size)
+        n_planes = auto_n_planes(df.count())
     if n_bands is None:
-        n_bands = bands_for_recall(threshold, n_planes, target_recall)
+        n_bands = bands_for_recall(threshold, n_planes)
         if (
-            brute_cutover is not None
-            and max_bucket_size is None
+            max_bucket_size is None
             and n_planes > 0
-            and n_bands / (2 ** n_planes) >= brute_cutover
+            and n_bands / (2 ** n_planes) >= BRUTE_CUTOVER
         ):
-            return exact_pairs_blocked(
-                df, threshold, id_col=id_col, vec_col=vec_col,
-                n_blocks=n_blocks, round_digits=round_digits,
-            )
+            return exact_pairs_blocked(df, threshold, id_col=id_col, vec_col=vec_col)
     if n_bands < 1:
         raise ValueError(f"n_bands must be >= 1, got {n_bands}")
-    base = df.select(
-        F.col(id_col),
-        F.col(vec_col).alias("_v"),
-        norm(F.col(vec_col)).alias("_n"),
-    )
-    banded = base.select(
-        F.col(id_col), "_v", "_n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        _lsh_bucket_banded(F.col("_v"), bi, n_planes, dim).alias("key"),
-                    )
-                    for bi in range(n_bands)
-                ]
-            )
-        ).alias("_b"),
-    ).select(
-        id_col, "_v", "_n",
-        F.col("_b.band").alias("_band"), F.col("_b.key").alias("_bucket"),
-    )
-    from etl_rs_spark.operators.dedup_scale import cap_group_size
+    keys = [lsh_bucket(F.col(vec_col), n_planes, dim, band=bi) for bi in range(n_bands)]
+    cand = lsh_candidates(df, id_col, keys, max_bucket_size)
 
-    banded = cap_group_size(banded, ("_band", "_bucket"), max_bucket_size)
+    def side(s: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(f"id_{s}"),
+            F.col(vec_col).alias("_v"),
+            norm(F.col(vec_col)).alias("_n"),
+        ).alias(s)
+
     score = F.round(
         _cosine_precomputed(
             F.col("l._v"), F.col("r._v"), F.col("l._n"), F.col("r._n")
         ),
-        round_digits,
+        SCORE_DIGITS,
     ).alias("score")
-    if n_bands == 1:
-        # single band: a pair can collide at most once — score inline
-        l, r = banded.alias("l"), banded.alias("r")
-        return (
-            l.join(
-                r,
-                (F.col("l._bucket") == F.col("r._bucket"))
-                & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-            )
-            .select(
-                F.col(f"l.{id_col}").alias("id_l"),
-                F.col(f"r.{id_col}").alias("id_r"),
-                score,
-            )
-            .filter(F.col("score") >= threshold)
-        )
-    # multi-band: distinct the candidate ID pairs FIRST, then join the
-    # vectors back — the interpreted exact-cosine verify runs once per
-    # pair, not once per colliding band (the minhash_lsh_pairs shape)
-    lb, rb = banded.alias("lb"), banded.alias("rb")
-    cand = (
-        lb.join(
-            rb,
-            (F.col("lb._band") == F.col("rb._band"))
-            & (F.col("lb._bucket") == F.col("rb._bucket"))
-            & (F.col(f"lb.{id_col}") < F.col(f"rb.{id_col}")),
-        )
-        .select(
-            F.col(f"lb.{id_col}").alias("id_l"),
-            F.col(f"rb.{id_col}").alias("id_r"),
-        )
-        .distinct()
-    )
-    l = base.select(
-        F.col(id_col).alias("id_l"), F.col("_v"), F.col("_n")
-    ).alias("l")
-    r = base.select(
-        F.col(id_col).alias("id_r"), F.col("_v"), F.col("_n")
-    ).alias("r")
     return (
-        cand.join(l, "id_l").join(r, "id_r")
+        cand.join(side("l"), "id_l").join(side("r"), "id_r")
         .select("id_l", "id_r", score)
         .filter(F.col("score") >= threshold)
     )

@@ -127,3 +127,29 @@ def test_transitive_chain_subset_elimination(spark):
     # left-id-1 group had pairs (1,2) and (1,3): PCE flatten keeps dups
     assert merged["PCE"] == "p/p"
     assert merged["Id_source"] == "1/2/3"
+
+
+def test_backtick_named_columns_merge_like_plain_names(spark):
+    """A blocking column and a merge column whose names hold a backtick
+    give the same rows as plain names: every name the pipeline refers
+    to is quoted with the backtick doubled."""
+    rows = [
+        ("1", "X", "A", None, "a@x", None, None, None, None, "1"),
+        ("2", "X", "A", None, "a@x", None, None, None, None, "2"),
+        ("3", "X", "B", None, "b@x", None, None, None, None, "3"),
+        ("4", "Y", "A", None, "a@x", None, None, None, None, "4"),
+    ]
+    plain = spark.createDataFrame(rows, HDD_SCHEMA)
+    names = {"Nom": "N`om", "Email": "Em`ail"}
+    cfg = DedupConfig()
+    odd_cfg = DedupConfig(
+        blocking_col=names["Nom"],
+        any_match_cols=tuple(names.get(c, c) for c in cfg.any_match_cols),
+        merge_cols={names.get(c, c): keep for c, keep in cfg.merge_cols.items()},
+    )
+    want = {r["ID"]: r.asDict() for r in dedup_merge(plain, cfg).collect()}
+    got = dedup_merge(plain.withColumnsRenamed(names), odd_cfg).withColumnsRenamed(
+        {odd: c for c, odd in names.items()}
+    )
+    assert {r["ID"]: r.asDict() for r in got.collect()} == want
+    assert want["1"]["IDS"] == "1/2"

@@ -19,6 +19,7 @@ import contextlib
 import io
 import os
 import random
+import re
 import sys
 
 import pytest
@@ -26,7 +27,9 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry
+from etl_rs_spark.operators import dedup_scale as ds
 from etl_rs_spark.operators import multimodal as mm
+from etl_rs_spark.operators import similarity as sim
 
 SF = "/root/testdata/sf0.001"
 
@@ -189,3 +192,49 @@ def test_corpus_plan_building_is_few_jvm_calls(spark, jvm_calls):
     with jvm_calls() as calls:
         prep_corpus(docs, probes, weights, max_len=64, shards=4)
     assert 0 < len(calls) <= 4257 // 4, len(calls)
+
+
+def test_lsh_pairs_verify_once_per_pair(spark):
+    """The three banded-LSH pair searches share one candidate stage
+    (dedup_scale.lsh_candidates): one equi join on (band, key), then a
+    distinct over the pairs. A pair colliding in several bands must be
+    verified once, so no verify expression may sit under the distinct.
+    The one exception is simhash's Hamming predicate, which Catalyst
+    pushes into the (band, key) join condition (one popcount per
+    colliding row, pruning the distinct's input); the distance it
+    reports is computed once per pair, above the distinct."""
+    wi = entry._doc_word_ids(spark, SF)
+    qz = entry._quantized(spark, SF)
+    cases = {
+        "minhash": (ds.minhash_lsh_pairs(wi, jaccard_threshold=0.6), r"array_intersect"),
+        "simhash": (ds.simhash_pairs(wi, bits=16, max_hamming=2), r"bit_count"),
+        # the cosine's dot product zips two different vector columns
+        # (a norm zips one column with itself)
+        "embedding": (
+            sim.embedding_near_dup_pairs(
+                qz, dim=64, threshold=0.3, n_planes=3, n_bands=2,
+                id_col="vec_id", vec_col="qv",
+            ),
+            r"zip_with\((\w+)#(\d+), \1#(?!\2,)\d+",
+        ),
+    }
+    for name, (df, verify) in cases.items():
+        lines = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+        depth = [re.match(r"[ :+\-]*", line).end() for line in lines]
+        nodes = [line[d:] for line, d in zip(lines, depth)]
+        band_joins = [
+            n for n in nodes
+            if n.startswith("Join ") and "band#" in n and "key#" in n
+        ]
+        assert len(band_joins) == 1, (name, band_joins)
+        (top,) = [i for i, n in enumerate(nodes) if n.startswith("Aggregate [id_l#")]
+        # the distinct is on the leftmost branch: lines before it are
+        # its ancestors, lines after it at greater depth its subtree
+        assert any(re.search(verify, n) for n in nodes[: top + 1]), name
+        below = []
+        for d, n in zip(depth[top + 1:], nodes[top + 1:]):
+            if d <= depth[top]:
+                break
+            if re.search(verify, n) and not (name == "simhash" and n.startswith("Join ")):
+                below.append(n)
+        assert below == [], (name, below)

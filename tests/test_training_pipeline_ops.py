@@ -802,8 +802,8 @@ def test_brute_cutover_routing(vecs):
     path is a grouped-map pandas stage (FlatMapGroupsInPandas), the
     banded path is not. Auto-derived banding routes to exact exactly
     when b/2^k reaches the cutover — and never when the caller pinned
-    n_bands, set max_bucket_size (capped semantics exclude mega-bucket
-    pairs, which the exact path cannot honor), or disabled the cutover."""
+    n_bands or set max_bucket_size (capped semantics exclude mega-bucket
+    pairs, which the exact path cannot honor)."""
 
     def plan(**kw):
         df = sim.embedding_near_dup_pairs(vecs, dim=4, n_planes=3, **kw)
@@ -816,7 +816,6 @@ def test_brute_cutover_routing(vecs):
     # explicit knobs win over the cost model
     assert "FlatMapGroupsInPandas" not in plan(threshold=0.3, n_bands=13)
     assert "FlatMapGroupsInPandas" not in plan(threshold=0.3, max_bucket_size=100)
-    assert "FlatMapGroupsInPandas" not in plan(threshold=0.3, brute_cutover=None)
     # cutover result at the routed threshold == the banded truth superset
     got = {
         (r["id_l"], r["id_r"])

@@ -13,8 +13,8 @@ Cross-engine exactness strategy (the whole point of this file):
 - every hash is ``(a*x + b) mod 2^31-1`` over word ids produced by an
   engine-portable 60-bit md5-prefix hash (dedup_scale.word_hash60 — no
   vocab build, no global sort; universal-hash consumers reduce mod p
-  internally) — both engines compute identical signatures, fingerprints
-  and LSH buckets;
+  first, as dedup_scale's minhash and simhash do) — both engines
+  compute identical signatures, fingerprints and LSH buckets;
 - embeddings are quantized to ``floor(x*1000)`` ints before dot
   products, making cosine scores bit-identical across engines;
 - float ratios of exact integers are emitted with round(.., 6) on both
@@ -347,11 +347,8 @@ def _doc_word_ids(spark, sf_dir):
 
 def q18_minhash_signatures(spark, sf_dir):
     wi = _doc_word_ids(spark, sf_dir)
-    sig = DS.minhash_signature(F.col("word_ids"), 4)
-    return wi.select(
-        "doc_id",
-        *[sig[i].alias(f"m{i}") for i in range(4)],
-    )
+    sig = DS.minhash_signature("word_ids", 4)
+    return wi.selectExpr("doc_id", *[f"{sig}[{i}] AS m{i}" for i in range(4)])
 
 
 def q19_minhash_lsh_pairs(spark, sf_dir):
@@ -368,7 +365,7 @@ def q19_minhash_lsh_pairs(spark, sf_dir):
 
 def q20_simhash(spark, sf_dir):
     wi = _doc_word_ids(spark, sf_dir)
-    return wi.select("doc_id", DS.simhash(F.col("word_ids"), 16).alias("simhash16"))
+    return wi.selectExpr("doc_id", f"{DS.simhash('word_ids', 16)} AS simhash16")
 
 
 def q20b_simhash_pairs(spark, sf_dir):
@@ -421,7 +418,7 @@ def q23_embedding_lsh_buckets(spark, sf_dir):
     """Sign-LSH bucket assignment over quantized embeddings — the
     write-time partition key of the ANN scale path."""
     qz = _quantized(spark, sf_dir)
-    return qz.select("vec_id", SIM.lsh_bucket(F.col("qv"), 4, 64).alias("bucket"))
+    return qz.selectExpr("vec_id", f"{SIM.lsh_bucket('qv', 4, 64)} AS bucket")
 
 
 # ---------------------------------------------------------------------------
@@ -644,6 +641,16 @@ def q33_ivf_topk(spark, sf_dir):
     )
 
 
+def _doc_tokens(spark, sf_dir):
+    """(doc_id, tokens): each word's 60-bit md5 hash mod 50257 as an int
+    token id, the portable tokenization q34 and q38 pack."""
+    words = DS.split_words("text")
+    return _t(spark, sf_dir, "documents").selectExpr(
+        "doc_id",
+        f"transform({words}, w -> CAST({DS.word_hash60('w')} % 50257 AS INT)) AS tokens",
+    )
+
+
 def q34_pack_sequences(spark, sf_dir):
     """GPT-style sequence packing (operators/packing.pack_sequences):
     token ids = 60-bit md5 word hash mod 50257 (portable), shard by
@@ -656,15 +663,7 @@ def q34_pack_sequences(spark, sf_dir):
     canonicalizer sorts columns and cannot sort list-typed cells (the
     q08 precedent); pytest keeps the raw-array exactness check
     (tests/test_packing.py)."""
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.transform(
-            TX.words("text"),
-            lambda w: (DS.word_hash60(w) % F.lit(50257)).cast("int"),
-        ).alias("tokens"),
-    )
-    packed = PK.pack_sequences(toks, max_len=128, n_shards=8)
+    packed = PK.pack_sequences(_doc_tokens(spark, sf_dir), max_len=128, n_shards=8)
     return packed.select(
         "shard",
         "chunk",
@@ -777,14 +776,7 @@ def q38_pack_tail(spark, sf_dir):
     with q34's cumulative-offset machinery and keeps, for shards with
     new docs, the chunks at or after the prefix boundary floor(base/L)
     — exactly the tail-emitted set in every carry/no-carry case."""
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.transform(
-            TX.words("text"),
-            lambda w: (DS.word_hash60(w) % F.lit(50257)).cast("int"),
-        ).alias("tokens"),
-    )
+    toks = _doc_tokens(spark, sf_dir)
     pre = PK.pack_sequences(
         toks.filter(F.col("doc_id") < Q38_SPLIT), max_len=128, n_shards=8
     )
@@ -959,7 +951,7 @@ quant AS (
 
 def _minhash_sql_terms(n: int, src: str = "word_id") -> list[str]:
     # (src % P) first: ids are 60-bit, a * (x % p) stays in BIGINT and
-    # matches dedup_scale._mod_p's internal reduction exactly
+    # matches the reduction dedup_scale's minhash and simhash apply
     return [
         f"min((({src} % {P}) * {HP[i][0]} + {HP[i][1]}) % {P}) AS m{i}"
         for i in range(n)

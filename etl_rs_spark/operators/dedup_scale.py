@@ -21,17 +21,19 @@ array columns a bounded number of times: Catalyst inlines a
 projection's defining expression into every consumer reference, so an
 n-reference consumer pays n recomputes of the md5 token map).
 
-The corpus-prep operators (exact dedup, word ids, n-gram Jaccard pairs,
-decontamination) build their plans from SQL expression strings
-(``etl_rs_spark.sql_text``), a few py4j calls per DataFrame operation.
+Every builder here renders SQL expression text (``etl_rs_spark.sql_text``
+quotes the column names), a few py4j calls per DataFrame operation; a
+Column chain with Python lambdas costs one per function and lambda.
+Each portable hash has one definition: ``word_hash60`` for the word id
+and ``text.universal_hash`` for the family h_i.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_rs_spark.operators.text import HASH_P, hash_params
+from etl_rs_spark.operators.text import HASH_P, universal_hash
 from etl_rs_spark.sql_text import ident
 
 
@@ -57,40 +59,39 @@ def cap_group_size(
 def lsh_candidates(
     df: DataFrame,
     id_col: str,
-    keys: list[Column],
+    keys: list[str],
     cap: int | None,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """The candidate stage of every banded-LSH pair search here
-    (minhash, simhash, embedding): ``keys[b]`` is band b's bucket key
-    over ``df``'s columns. Each row explodes into one (band, key) row
-    per band, ``cap_group_size`` drops over-full buckets, and an equi
+    (minhash, simhash, embedding): ``keys[b]`` is the SQL text of band
+    b's bucket key over ``df``'s columns. Each row explodes into one
+    (band, key) row per band, ``cap_group_size`` drops over-full
+    buckets, and an equi
     self-join on (band, key) with ``id_l < id_r`` emits a pair once per
     colliding band; the distinct makes it once per pair, so a verify
     placed above it runs once per pair, never once per band. Returns
     (id_l, id_r) plus each ``carry`` column as ``{c}_l`` / ``{c}_r``."""
-    band_keys = F.array(
-        *[F.struct(F.lit(bi).alias("band"), k.alias("key")) for bi, k in enumerate(keys)]
+    band_keys = ", ".join(
+        f"struct({bi} AS band, {k} AS key)" for bi, k in enumerate(keys)
     )
-    cols = [F.col(ident(c)) for c in (id_col, *carry)]
-    banded = df.select(*cols, F.explode(band_keys).alias("_b")).select(
-        *cols, F.col("_b.band").alias("band"), F.col("_b.key").alias("key")
+    cols = [ident(c) for c in (id_col, *carry)]
+    banded = df.selectExpr(*cols, f"explode(array({band_keys})) AS _b").selectExpr(
+        *cols, "_b.band AS band", "_b.key AS key"
     )
     banded = cap_group_size(banded, ("band", "key"), cap)
 
-    l, r = banded.alias("l"), banded.alias("r")
     i = ident(id_col)
     return (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col(f"l.{i}") < F.col(f"r.{i}")),
+        banded.alias("l")
+        .join(
+            banded.alias("r"),
+            F.expr(f"l.band = r.band AND l.key = r.key AND l.{i} < r.{i}"),
         )
-        .select(
-            F.col(f"l.{i}").alias("id_l"),
-            F.col(f"r.{i}").alias("id_r"),
-            *[F.col(f"{s}.{ident(c)}").alias(f"{c}_{s}") for c in carry for s in "lr"],
+        .selectExpr(
+            f"l.{i} AS id_l",
+            f"r.{i} AS id_r",
+            *[f"{s}.{ident(c)} AS {ident(f'{c}_{s}')}" for c in carry for s in "lr"],
         )
         .distinct()
     )
@@ -134,27 +135,26 @@ def dedup_digest_stats(
 # universal-hash domain [0, p) (minhash, simhash, shingle folds) reduce
 # mod p INTERNALLY.
 
-def word_hash60(col: Column) -> Column:
-    """Word -> bigint id in [0, 2^60): first 15 hex chars of
-    md5(utf8(word)). Engine-portable: DuckDB computes the identical
-    value with ``('0x' || substr(md5(w), 1, 15))::BIGINT``. Pure
-    codegen expression — no vocab, no join, no shuffle."""
-    return (
-        F.conv(F.substring(F.md5(F.encode(col, "UTF-8")), 1, 15), 16, 10)
-        .cast("bigint")
-    )
-
-
-def word_hash60_sql(x: str) -> str:
-    """``word_hash60`` as SQL text over the expression ``x``."""
+def word_hash60(x: str) -> str:
+    """SQL text of word -> bigint id in [0, 2^60) over the string
+    expression ``x``: the first 15 hex chars of md5(utf8(x)).
+    Engine-portable: DuckDB computes the identical value with
+    ``('0x' || substr(md5(w), 1, 15))::BIGINT``. Pure codegen
+    expression — no vocab, no join, no shuffle."""
     return f"CAST(conv(substring(md5(encode({x}, 'UTF-8')), 1, 15), 16, 10) AS BIGINT)"
 
 
-def _mod_p(x: Column) -> Column:
-    """Reduce a (possibly 60-bit) word id into the universal-hash
-    domain. Keeps (a*x + b) products inside bigint: a < p ~ 2^31, so
-    a * (x mod p) <= 2^62."""
-    return x % F.lit(HASH_P)
+def split_words(x: str) -> str:
+    """SQL text of ``text.words`` over the string expression ``x``:
+    whitespace-split, empty tokens dropped."""
+    return rf"filter(split(trim({x}), '\\s+'), x -> x != '')"
+
+
+def _id_hashes(x: str, n: int) -> list[str]:
+    """h_0 .. h_{n-1} of the word id ``x``, reduced mod p first: a
+    60-bit id times a < p would overflow bigint, a*(x mod p) <= 2^62
+    does not, and ids already below p keep their value."""
+    return [universal_hash(f"({x} % {HASH_P})", i) for i in range(n)]
 
 
 def doc_word_ids_hashed(
@@ -168,21 +168,22 @@ def doc_word_ids_hashed(
     the no-vocab scale path. A single narrow projection: zero shuffles,
     zero joins, embarrassingly parallel at any corpus size. Words are
     ``text.words``: whitespace-split, empty tokens dropped."""
-    words = rf"filter(split(trim({ident(text_col)}), '\\s+'), x -> x != '')"
     return df.selectExpr(
         *map(ident, (id_col, *extra_cols)),
-        f"transform({words}, w -> {word_hash60_sql('w')}) AS {ident(out_col)}",
+        f"transform({split_words(ident(text_col))}, w -> {word_hash60('w')}) "
+        f"AS {ident(out_col)}",
     )
 
 
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 
-def minhash_signature(
-    word_ids: Column, n_hashes: int
-) -> Column:
-    """n_hashes universal hashes h_i(x) = (a_i*x + b_i) mod p; signature
-    element i = min over the doc's distinct word ids.
+def minhash_signature(word_ids: str, n_hashes: int) -> str:
+    """SQL text of the MinHash signature of the array expression
+    ``word_ids`` (a column name quoted by ``sql_text.ident``, or any
+    expression): n_hashes universal hashes h_i(x) = (a_i*x + b_i) mod p
+    (``text.universal_hash`` over x mod p); signature element i = min
+    over the doc's distinct word ids.
 
     Computed as ONE fold over the distinct set (acc[i] = min(acc[i],
     h_i(x)) via zip_with) rather than n_hashes independent
@@ -191,20 +192,15 @@ def minhash_signature(
     hashed no-vocab path) Catalyst inlines its md5 token map into every
     reference — n full recomputes per row. Same arithmetic, same
     values."""
-    distinct = F.array_distinct(word_ids)
-    params = [hash_params(i) for i in range(n_hashes)]
-    init = F.array_repeat(F.lit(HASH_P).cast("bigint"), n_hashes)
-
-    def step(acc: Column, x: Column) -> Column:
-        # reduce 60-bit ids into the hash domain first — values are
-        # unchanged for ids already < p, and a * (x % p) stays in bigint
-        hashes = F.array(*[(_mod_p(x) * a + b) % F.lit(HASH_P) for a, b in params])
-        return F.zip_with(acc, hashes, lambda m, h: F.least(m, h))
-
-    sig = F.aggregate(distinct, init, step)
+    distinct = f"array_distinct({word_ids})"
+    hashes = ", ".join(_id_hashes("x", n_hashes))
+    sig = (
+        f"aggregate({distinct}, array_repeat(CAST({HASH_P} AS BIGINT), {int(n_hashes)}), "
+        f"(acc, x) -> zip_with(acc, array({hashes}), (m, h) -> least(m, h)))"
+    )
     # empty word set -> null signature (matches the old per-element
     # array_min-of-empty semantics of "no signature")
-    return F.when(F.size(distinct) > 0, sig)
+    return f"CASE WHEN size({distinct}) > 0 THEN {sig} END"
 
 
 #: polynomial base folding a band's signature slice into one bigint key
@@ -238,73 +234,68 @@ def minhash_lsh_pairs(
     one (band, key) bucket holds k docs and the self-join pays k^2 —
     buckets over the cap are excluded from pairing (run exact dedup
     FIRST; a pair sharing only capped buckets is the documented recall
-    trade)."""
-    rows_per_band = n_hashes // bands
-    sig = minhash_signature(F.col(word_ids_col), n_hashes)
-    with_sig = docs.select(id_col, sig.alias("_sig"))
+    trade).
 
-    def band_key(bi: int) -> Column:
-        k = F.lit(0).cast("bigint")
+    Raises ``ValueError`` unless 1 <= bands <= n_hashes: more bands than
+    hashes would give every band an empty slice, a key of 0 and one
+    all-pairs bucket."""
+    if not 1 <= bands <= n_hashes:
+        raise ValueError(f"bands must be in [1, n_hashes={n_hashes}], got {bands}")
+    rows_per_band = n_hashes // bands
+    i, w = ident(id_col), ident(word_ids_col)
+    with_sig = docs.selectExpr(i, f"{minhash_signature(w, n_hashes)} AS _sig")
+
+    def band_key(bi: int) -> str:
+        k = "CAST(0 AS BIGINT)"
         for j in range(rows_per_band):
-            k = (k * BAND_KEY_B + F.col("_sig")[bi * rows_per_band + j]) % F.lit(HASH_P)
+            k = f"({k} * {BAND_KEY_B} + _sig[{bi * rows_per_band + j}]) % {HASH_P}"
         return k
 
     cand = lsh_candidates(
         with_sig, id_col, [band_key(bi) for bi in range(bands)], max_bucket_size
     )
 
-    sets = docs.select(
-        F.col(id_col), F.array_distinct(F.col(word_ids_col)).alias("_set")
+    sets = docs.selectExpr(i, f"array_distinct({w}) AS _set")
+    jaccard = (
+        "round(CAST(size(array_intersect(_sl, _sr)) AS DOUBLE) "
+        "/ size(array_union(_sl, _sr)), 6) AS jaccard"
     )
     return (
         cand.join(sets.withColumnsRenamed({id_col: "id_l", "_set": "_sl"}), "id_l")
         .join(sets.withColumnsRenamed({id_col: "id_r", "_set": "_sr"}), "id_r")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("_sl", "_sr")).cast("double")
-                / F.size(F.array_union("_sl", "_sr")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_l", "id_r", "jaccard")
+        .selectExpr("*", jaccard)
+        .filter(f"jaccard >= {float(jaccard_threshold)!r}D")
+        .selectExpr("id_l", "id_r", "jaccard")
     )
 
 
 # ---------------------------------------------------------------------------
 # SimHash
 
-def simhash(word_ids: Column, bits: int = 16) -> Column:
-    """SimHash fingerprint over a doc's distinct word ids: bit j is set
-    when the majority of word-hash bits h_j(x) mod 2 are 1. Returns the
-    fingerprint as a bigint. Pure array algebra, no shuffle.
+def simhash(word_ids: str, bits: int = 16) -> str:
+    """SQL text of the SimHash fingerprint of the array expression
+    ``word_ids`` (as in ``minhash_signature``) over its distinct word
+    ids: bit j is set when the majority of word-hash bits h_j(x) mod 2
+    are 1. The fingerprint is a bigint. Pure array algebra, no shuffle.
 
     One fold accumulates ALL per-bit votes (zip_with add of a ±1 array
     per word) instead of `bits` independent aggregate passes — the
     distinct array is referenced once, so the hashed no-vocab word-id
     expression isn't re-inlined per bit (see minhash_signature)."""
-    distinct = F.array_distinct(word_ids)
-    params = [hash_params(j) for j in range(bits)]
-    zeros = F.array_repeat(F.lit(0).cast("bigint"), bits)
-
-    def step(acc: Column, x: Column) -> Column:
-        word_votes = F.array(
-            *[
-                F.when(((_mod_p(x) * a + b) % F.lit(HASH_P)) % 2 == 1, F.lit(1))
-                .otherwise(F.lit(-1))
-                .cast("bigint")
-                for a, b in params
-            ]
-        )
-        return F.zip_with(acc, word_votes, lambda v, w: v + w)
-
-    votes = F.aggregate(distinct, zeros, step)
-    powers = F.array(*[F.lit(2 ** j).cast("bigint") for j in range(bits)])
-    bits_set = F.zip_with(
-        votes, powers, lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("bigint"))
+    word_votes = ", ".join(
+        f"CAST(CASE WHEN ({h}) % 2 = 1 THEN 1 ELSE -1 END AS BIGINT)"
+        for h in _id_hashes("x", bits)
     )
-    return F.aggregate(bits_set, F.lit(0).cast("bigint"), lambda a, x: a + x)
+    votes = (
+        f"aggregate(array_distinct({word_ids}), array_repeat(CAST(0 AS BIGINT), {int(bits)}), "
+        f"(acc, x) -> zip_with(acc, array({word_votes}), (v, w) -> v + w))"
+    )
+    powers = ", ".join(f"CAST({2 ** j} AS BIGINT)" for j in range(bits))
+    bits_set = (
+        f"zip_with({votes}, array({powers}), "
+        "(v, p) -> CASE WHEN v > 0 THEN p ELSE CAST(0 AS BIGINT) END)"
+    )
+    return f"aggregate({bits_set}, CAST(0 AS BIGINT), (a, x) -> a + x)"
 
 
 def auto_simhash_bits(
@@ -362,34 +353,37 @@ def simhash_pairs(
 
     All bit algebra is shift/mask arithmetic (no doubles): exact up to
     the full 62-bit fingerprint a bigint can hold non-negatively.
+
+    Raises ``ValueError`` for ``max_hamming < 0`` and for an explicit
+    ``bits`` outside [max_hamming + 1, 62]: fewer bits than bands would
+    give 0-bit band keys, so every document would share one bucket.
     """
+    n_bands = max_hamming + 1
+    if max_hamming < 0:
+        raise ValueError(f"max_hamming must be >= 0, got {max_hamming}")
     if bits is None:
         bits = auto_simhash_bits(docs.count(), max_hamming, target_bucket_size)
-    n_bands = max_hamming + 1
+    elif not n_bands <= bits <= 62:
+        raise ValueError(f"bits must be in [max_hamming + 1, 62] = [{n_bands}, 62], got {bits}")
     band_bits = bits // n_bands
-    fp = simhash(F.col(word_ids_col), bits)
-    with_fp = docs.select(F.col(id_col), fp.alias("_fp"))
+    with_fp = docs.selectExpr(
+        ident(id_col), f"{simhash(ident(word_ids_col), bits)} AS _fp"
+    )
 
     # top bits beyond n_bands*band_bits (bits not divisible by n_bands)
     # join no band: the pigeonhole guarantee is unaffected — differing
     # uncovered bits leave every band key untouched, so a <=max_hamming
     # pair still agrees on >= 1 band.
     keys = [
-        F.shiftright(F.col("_fp"), bi * band_bits) % F.lit(2 ** band_bits).cast("bigint")
+        f"shiftright(_fp, {bi * band_bits}) % CAST({2 ** band_bits} AS BIGINT)"
         for bi in range(n_bands)
     ]
     cand = lsh_candidates(with_fp, id_col, keys, max_bucket_size, carry=("_fp",))
-    hamming = _popcount_bigint(F.col("_fp_l").bitwiseXOR(F.col("_fp_r")))
-    return cand.select("id_l", "id_r", hamming.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
-    )
-
-
-def _popcount_bigint(col: Column) -> Column:
-    """Popcount via the JVM's Long.bitCount — exact for the full 62-bit
-    fingerprint range (the old pow(2, j) double division broke above
-    2^53) and whole-stage-codegen'd, not an interpreted array fold."""
-    return F.bit_count(col).cast("int")
+    # bit_count is the JVM's Long.bitCount: exact over the full 62 bits
+    # and whole-stage-codegen'd, not an interpreted array fold
+    return cand.selectExpr(
+        "id_l", "id_r", "CAST(bit_count(_fp_l ^ _fp_r) AS INT) AS hamming"
+    ).filter(f"hamming <= {int(max_hamming)}")
 
 
 # ---------------------------------------------------------------------------

@@ -14,15 +14,16 @@ over the same (doc_id, tokens, source) shape, like packing and
 decontamination.
 
 Determinism and portability: a row's fate is a pure function of
-(id, replica, seed) — the 60-bit md5 hash (dedup_scale.word_hash60's
-formula over a "id:replica:seed" key) compared against the INTEGER
+(id, replica, seed) — the 60-bit md5 hash (dedup_scale.word_hash60
+over a "id:replica:seed" key) compared against the INTEGER
 threshold floor(frac * 2^60). No floats cross engines, no RNG state:
 the same call yields the same sample on any cluster size or
 partitioning, and a DuckDB oracle replays it bit-for-bit.
 
-``mix_sample`` builds its plan from SQL expression strings
-(``etl_rs_spark.sql_text``; source names enter as escaped literals):
-four DataFrame operations, a few py4j calls each.
+Every operator here builds its plan from SQL expression strings
+(``etl_rs_spark.sql_text``; column names enter quoted, source and split
+names as escaped literals): a few DataFrame operations, a few py4j
+calls each.
 
 The 100 TB story: ZERO shuffles — a broadcast-free narrow projection
 (the weight table folds into the plan as a literal map), one
@@ -39,7 +40,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_rs_spark.operators.dedup_scale import word_hash60, word_hash60_sql
+from etl_rs_spark.operators.dedup_scale import word_hash60
 from etl_rs_spark.sql_text import ident, literal
 
 #: hash domain: word_hash60 yields ids in [0, 2^60)
@@ -125,7 +126,7 @@ def mix_sample(
         df.selectExpr("*", f"{n_full} AS _nf", f"{thr} AS _thr")
         .selectExpr("*", f"explode_outer({cands}) AS _replica")
         .filter(
-            f"_replica IS NOT NULL AND (_replica < _nf OR {word_hash60_sql(key)} < _thr)"
+            f"_replica IS NOT NULL AND (_replica < _nf OR {word_hash60(key)} < _thr)"
         )
         .selectExpr(*map(ident, df.columns), "CAST(_replica AS INT) AS replica")
     )
@@ -160,10 +161,8 @@ def stratified_split(
     if total > 1 + 1e-9:
         raise ValueError(f"split fractions sum to {total} > 1")
 
-    h = word_hash60(
-        F.concat(F.col(id_col).cast("string"), F.lit(f":{seed}"))
-    )
-    expr = None
+    h = _seed_draw(id_col, seed)
+    branches = []
     cum = 0.0
     names = list(splits)
     for name, frac in splits.items():
@@ -177,9 +176,8 @@ def stratified_split(
             thr = _HASH_DOMAIN
         else:
             thr = min(int(cum * _HASH_DOMAIN), _HASH_DOMAIN)  # exact integer
-        cond = h < F.lit(thr)
-        expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    return df.withColumn(out_col, expr)
+        branches.append(f"WHEN {h} < {thr} THEN {literal(name)}")
+    return df.withColumn(out_col, F.expr(f"CASE {' '.join(branches)} END"))
 
 
 def cap_per_group(
@@ -204,19 +202,18 @@ def cap_per_group(
     downsample to ~k x parallelism) before capping."""
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    from pyspark.sql.window import Window
-
-    h = word_hash60(
-        F.concat(F.col(id_col).cast("string"), F.lit(f":{seed}"))
-    )
-    # asc_nulls_last, NOT asc: Spark ASC ranks NULL FIRST while SQL
-    # windows (and the DuckDB oracle) rank NULL LAST — bare asc() would
+    # NULLS LAST, NOT bare ASC: Spark ASC ranks NULL FIRST while SQL
+    # windows (and the DuckDB oracle) rank NULL LAST — bare ASC would
     # let NULL-id junk rows displace real documents from every cap
-    w = Window.partitionBy(group_col).orderBy(
-        h.asc_nulls_last(), F.col(id_col).asc_nulls_last()
+    rn = (
+        f"row_number() OVER (PARTITION BY {ident(group_col)} ORDER BY "
+        f"{_seed_draw(id_col, seed)} ASC NULLS LAST, {ident(id_col)} ASC NULLS LAST) AS _rn"
     )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return df.selectExpr("*", rn).filter(f"_rn <= {int(k)}").drop("_rn")
+
+
+def _seed_draw(id_col: str, seed: int) -> str:
+    """SQL text of the 60-bit (id, seed) draw of ``stratified_split``
+    and ``cap_per_group``: word_hash60 of "id:seed"; a NULL id draws
+    NULL."""
+    return word_hash60(f"concat(CAST({ident(id_col)} AS STRING), {literal(f':{seed}')})")

@@ -3,8 +3,8 @@
 Top-k search over ``array<float>`` embeddings:
 
 - ``cosine_topk`` — exact brute force: broadcast the (small) query set
-  against the corpus, dot products via zip_with/aggregate (codegen, no
-  Python), per-query top-k via window. The baseline and the verifier.
+  against the corpus, dot products via zip_with/aggregate (JVM-side,
+  no Python), per-query top-k via window. The baseline and the verifier.
 - ``ivf_topk_exact`` — IVF ANN: a deterministic integer Lloyd's coarse
   quantizer buckets the corpus into cells; each query ranks exactly
   within its ``n_probe`` nearest cells.
@@ -32,16 +32,21 @@ Scale controls (100 TB):
   larger than the cap are excluded from pairing (the dedup
   ``max_block_size`` rule — a mega-bucket means the planes under-split
   the corpus; raise n_planes rather than pay O(k^2)).
+
+Every builder renders SQL expression text over column names quoted by
+``etl_rs_spark.sql_text.ident`` (a few py4j calls per DataFrame
+operation); the one Python function is the pandas GEMM of
+``exact_pairs_blocked``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from etl_rs_spark.operators.dedup_scale import lsh_candidates
-from etl_rs_spark.operators.text import HASH_P, hash_params
+from etl_rs_spark.operators.text import universal_hash
+from etl_rs_spark.sql_text import ident
 
 #: decimals of every reported score (ranking uses the raw double)
 SCORE_DIGITS = 6
@@ -50,40 +55,57 @@ SCORE_DIGITS = 6
 BRUTE_CUTOVER = 0.5
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential double-precision dot product — deterministic order."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def dot(a: str, b: str) -> str:
+    """SQL text of the sequential double-precision dot product of the
+    array expressions ``a`` and ``b`` — deterministic order."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "0.0D, (acc, x) -> acc + x)"
     )
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
+def norm(a: str) -> str:
+    return f"sqrt({dot(a, a)})"
 
 
-def _cosine_precomputed(a: Column, b: Column, na: Column, nb: Column) -> Column:
+def _cosine_precomputed(a: str, b: str, na: str, nb: str) -> str:
     """Cosine with per-VECTOR norms hoisted out of the pair join —
     computing norms per pair triples the array work in an O(pairs)
     stage (ArrayAggregate runs interpreted, not codegen'd). Null (not
     error) on zero-norm vectors — the engine's null-on-invalid rule,
     and ANSI-mode safe."""
-    return dot(a, b) / F.nullif(na * nb, F.lit(0.0))
+    return f"{dot(a, b)} / nullif({na} * {nb}, 0.0D)"
 
 
-def _finite_scores(scored: DataFrame) -> DataFrame:
-    """Drop candidates whose score is NULL/NaN/Inf before a top-k rank:
-    a NaN/Inf embedding (real dumps contain them) yields a NaN score,
-    and Spark's DESC sort ranks NaN ABOVE every real number — one
-    poisoned corpus vector would displace genuine neighbors from EVERY
-    query's top-k. Zero vectors score null via the nullif norm guard
-    and drop here too. Shared by every ranking path so they cannot
-    disagree on degenerate vectors."""
-    return scored.filter(
-        F.col("score").isNotNull()
-        & ~F.isnan("score")
-        & (F.abs("score") != float("inf"))
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """The score-rank-and-round tail of both top-k searches over
+    candidate ``pairs`` (query_id, _qv, _qn, neighbor_id, _cv, _cn):
+    self-matches drop, each pair scores its cosine.
+
+    Candidates whose score is NULL/NaN/Inf drop next: a NaN/Inf
+    embedding (real dumps contain them) yields a NaN score, and Spark's
+    DESC sort ranks NaN ABOVE every real number — one poisoned corpus
+    vector would displace genuine neighbors from EVERY query's top-k.
+    Zero vectors score null via the nullif norm guard and drop here
+    too. The rank uses the RAW score (deterministic given deterministic
+    inputs), ties to the lower neighbor id; only the reported score is
+    rounded."""
+    return (
+        pairs.filter("query_id != neighbor_id")
+        .selectExpr("*", f"{_cosine_precomputed('_qv', '_cv', '_qn', '_cn')} AS score")
+        .filter(
+            "score IS NOT NULL AND NOT isnan(score) "
+            "AND abs(score) != CAST('Infinity' AS DOUBLE)"
+        )
+        .selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY query_id "
+            "ORDER BY score DESC, neighbor_id ASC) AS rank",
+        )
+        .filter(f"rank <= {int(k)}")
+        .selectExpr(
+            "query_id", "neighbor_id", f"round(score, {SCORE_DIGITS}) AS score", "rank"
+        )
     )
 
 
@@ -100,37 +122,10 @@ def cosine_topk(
     query sets beyond broadcast size, use ``ivf_topk_exact``). Excludes
     self-matches. Returns (query_id, neighbor_id, score, rank).
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"),
-        norm(F.col(vec_col)).alias("_qn"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"),
-        norm(F.col(vec_col)).alias("_cn"),
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "score",
-            _cosine_precomputed(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")),
-        )
-    )
-    scored = _finite_scores(scored)
-    # rank on the RAW score (deterministic given deterministic inputs);
-    # round only the reported value
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("score", SCORE_DIGITS).alias("score"), "rank",
-        )
-    )
+    i, v = ident(id_col), ident(vec_col)
+    q = queries.selectExpr(f"{i} AS query_id", f"{v} AS _qv", f"{norm(v)} AS _qn")
+    c = corpus.selectExpr(f"{i} AS neighbor_id", f"{v} AS _cv", f"{norm(v)} AS _cn")
+    return _top_k(F.broadcast(q).crossJoin(c), k)
 
 
 def bands_for_recall(
@@ -186,30 +181,24 @@ def auto_n_planes(n_vectors: int, target_bucket_size: int = 1024) -> int:
     return max(1, min(30, math.ceil(math.log2(n_vectors / target_bucket_size))))
 
 
-def _plane_projection(vec: Column, plane_idx: int, dim: int) -> Column:
-    """<vec, plane> for the deterministic ±1 hyperplane
-    plane[d] = +1 if h_j(d) mod 2 == 0 else -1, rounded to 6 decimals
-    (stable sign across engines)."""
-    a, b = hash_params(plane_idx)
-    signed = F.zip_with(
-        vec,
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        # cast before multiply: int*int overflows under ANSI mode
-        lambda x, d: F.when(
-            ((d.cast("bigint") * a + b) % F.lit(HASH_P)) % 2 == 0, x.cast("double")
-        ).otherwise(-x.cast("double")),
-    )
-    return F.round(F.aggregate(signed, F.lit(0.0), lambda acc, x: acc + x), 6)
-
-
-def lsh_bucket(vec: Column, n_planes: int, dim: int, band: int = 0) -> Column:
-    """Bucket id = concatenated sign bits of <vec, plane> over n_planes
-    hyperplanes. OR-amplification band ``band`` uses planes
+def lsh_bucket(vec: str, n_planes: int, dim: int, band: int = 0) -> str:
+    """SQL text of the bucket id of the ``dim``-long array expression
+    ``vec``: the concatenated sign bits of <vec, plane j> over n_planes
+    deterministic ±1 hyperplanes, plane_j[d] = +1 if h_j(d) mod 2 == 0
+    else -1, each projection rounded to 6 decimals (stable sign across
+    engines). OR-amplification band ``band`` uses planes
     [band*n_planes, (band+1)*n_planes), an independent set per band;
     band 0 is the bucket q23 assigns."""
-    bucket = F.lit(0)
+    bucket = "0"
     for j in range(band * n_planes, (band + 1) * n_planes):
-        bucket = bucket * 2 + (_plane_projection(vec, j, dim) > 0).cast("int")
+        # cast before multiply: int*int overflows under ANSI mode
+        signed = (
+            f"zip_with({vec}, sequence(0, {int(dim) - 1}), (x, d) -> "
+            f"CASE WHEN ({universal_hash('CAST(d AS BIGINT)', j)}) % 2 = 0 "
+            "THEN CAST(x AS DOUBLE) ELSE -CAST(x AS DOUBLE) END)"
+        )
+        proj = f"round(aggregate({signed}, 0.0D, (acc, x) -> acc + x), 6)"
+        bucket = f"({bucket}) * 2 + CAST({proj} > 0 AS INT)"
     return bucket
 
 
@@ -226,11 +215,10 @@ def ann_recall(approx: DataFrame, exact: DataFrame) -> float:
     return e.intersect(a).count() / total
 
 
-def _sq_dist_int(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, c: (x - c) * (x - c)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
+def _sq_dist_int(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, c) -> (x - c) * (x - c)), "
+        "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
     )
 
 
@@ -245,13 +233,15 @@ def _assign_cells(
 ) -> DataFrame:
     """n nearest centroids per vector: broadcast-centroid cross join +
     window rank (ties to the lower cell). No per-row Python."""
-    d = side.crossJoin(F.broadcast(cent_df)).withColumn(
-        "_dist", _sq_dist_int(F.col(vec_col), F.col("_cent"))
-    )
-    w = Window.partitionBy(sid).orderBy(F.asc("_dist"), F.asc("cell"))
     return (
-        d.withColumn("_cr", F.row_number().over(w))
-        .filter(F.col("_cr") <= n)
+        side.crossJoin(F.broadcast(cent_df))
+        .selectExpr("*", f"{_sq_dist_int(ident(vec_col), '_cent')} AS _dist")
+        .selectExpr(
+            "*",
+            f"row_number() OVER (PARTITION BY {ident(sid)} "
+            "ORDER BY _dist ASC, cell ASC) AS _cr",
+        )
+        .filter(f"_cr <= {int(n)}")
         .drop("_dist", "_cr", "_cent")
     )
 
@@ -267,17 +257,17 @@ def _train_integer_lloyds(
     import math
 
     spark = corpus.sparkSession
-    init = corpus.orderBy(id_col).limit(n_cells).select(vec_col).collect()
-    cents: list[list[int]] = [[int(x) for x in r[vec_col]] for r in init]
+    i, v = ident(id_col), ident(vec_col)
+    init = corpus.orderBy(i).limit(n_cells).selectExpr(v).collect()
+    cents: list[list[int]] = [[int(x) for x in r[0]] for r in init]
     for _ in range(iters):
         assigned = _assign_cells(
-            corpus.select(id_col, vec_col), _cent_frame(spark, cents), 1,
-            id_col, vec_col,
+            corpus.selectExpr(i, v), _cent_frame(spark, cents), 1, id_col, vec_col
         )
         rows = (
-            assigned.select("cell", F.posexplode(vec_col).alias("pos", "v"))
+            assigned.selectExpr("cell", f"posexplode({v}) AS (pos, v)")
             .groupBy("cell", "pos")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("c"))
+            .agg(F.expr("sum(v) AS s"), F.expr("count(1) AS c"))
             .collect()
         )
         by_cell: dict[int, dict[int, tuple[int, int]]] = {}
@@ -313,37 +303,21 @@ def ivf_topk_exact(
     bit-for-bit. Per-iteration driver traffic is n_cells rows (the
     centroids) — never O(corpus).
     """
-    spark = corpus.sparkSession
     cents = _train_integer_lloyds(corpus, n_cells, iters, id_col, vec_col)
-    cent_df = _cent_frame(spark, cents)
+    cent_df = _cent_frame(corpus.sparkSession, cents)
+    i, v = ident(id_col), ident(vec_col)
 
-    c_cells = _assign_cells(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col)),
-        cent_df, 1, "neighbor_id", vec_col,
-    ).withColumnsRenamed({vec_col: "_cv"}).withColumn("_cn", norm(F.col("_cv")))
-    q_cells = _assign_cells(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col)),
-        cent_df, n_probe, "query_id", vec_col,
-    ).withColumnsRenamed({vec_col: "_qv"}).withColumn("_qn", norm(F.col("_qv")))
+    def cells(side: DataFrame, sid: str, n: int, s: str) -> DataFrame:
+        return (
+            _assign_cells(side.selectExpr(f"{i} AS {sid}", v), cent_df, n, sid, vec_col)
+            .withColumnsRenamed({vec_col: f"_{s}v"})
+            .selectExpr("*", f"{norm(f'_{s}v')} AS _{s}n")
+        )
 
-    scored = (
-        q_cells.join(c_cells, "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "score",
-            _cosine_precomputed(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")),
-        )
+    pairs = cells(queries, "query_id", n_probe, "q").join(
+        cells(corpus, "neighbor_id", 1, "c"), "cell"
     )
-    scored = _finite_scores(scored)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id",
-            F.round("score", SCORE_DIGITS).alias("score"), "rank",
-        )
-    )
+    return _top_k(pairs, k)
 
 
 def exact_pairs_blocked(
@@ -371,9 +345,9 @@ def exact_pairs_blocked(
     representable in float64 (|v_i| <= ~1000, dim <= ~2000), so the
     GEMM is exact integer arithmetic and summation order is irrelevant;
     norms and the division are single IEEE ops on identical operands —
-    bit-identical to the Column-expression and DuckDB formulations.
+    bit-identical to the SQL-expression and DuckDB formulations.
     The UDF emits the RAW score (pairs above ``threshold`` minus one
-    rounding ulp); the final ``F.round`` happens Spark-side so the
+    rounding ulp); the final ``round`` happens Spark-side so the
     reported score is produced by the exact same rounding code as every
     other operator here.
 
@@ -397,26 +371,18 @@ def exact_pairs_blocked(
             StructField("_raw", DoubleType()),
         ]
     )
-    blk = F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks))
-    group_keys = F.array(
-        *[
-            F.struct(
-                F.least(F.col("_blk"), F.lit(p)).alias("g1"),
-                F.greatest(F.col("_blk"), F.lit(p)).alias("g2"),
-            )
-            for p in range(n_blocks)
-        ]
+    i, v = ident(id_col), ident(vec_col)
+    group_keys = ", ".join(
+        f"struct(least(_blk, {p}) AS g1, greatest(_blk, {p}) AS g2)"
+        for p in range(n_blocks)
     )
     # a NULL vector scores NULL (the DuckDB twin's rule) and pairs with
     # nothing; it would also break the group's dense matrix build
     exploded = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col), F.col(vec_col), blk.alias("_blk"))
-        .select(id_col, vec_col, "_blk", F.explode(group_keys).alias("_g"))
-        .select(
-            id_col, vec_col, "_blk",
-            F.col("_g.g1").alias("_g1"), F.col("_g.g2").alias("_g2"),
-        )
+        df.filter(f"{v} IS NOT NULL")
+        .selectExpr(i, v, f"pmod(hash({i}), {int(n_blocks)}) AS _blk")
+        .selectExpr(i, v, "_blk", f"explode(array({group_keys})) AS _g")
+        .selectExpr(i, v, "_blk", "_g.g1 AS _g1", "_g.g2 AS _g2")
     )
     # emit margin: round(raw, d) >= t iff raw >= t - 0.5*10^-d; one full
     # ulp of the rounding grid is a safe over-approximation, and the
@@ -452,10 +418,9 @@ def exact_pairs_blocked(
         return pd.DataFrame({"id_l": id_l, "id_r": id_r, "_raw": raw})
 
     pairs = exploded.groupBy("_g1", "_g2").applyInPandas(run, out_schema)
-    score = F.round(F.col("_raw"), SCORE_DIGITS).alias("score")
-    return pairs.select("id_l", "id_r", score).filter(
-        F.col("score") >= threshold
-    )
+    return pairs.selectExpr(
+        "id_l", "id_r", f"round(_raw, {SCORE_DIGITS}) AS score"
+    ).filter(f"score >= {float(threshold)!r}D")
 
 
 def embedding_near_dup_pairs(
@@ -513,24 +478,16 @@ def embedding_near_dup_pairs(
             return exact_pairs_blocked(df, threshold, id_col=id_col, vec_col=vec_col)
     if n_bands < 1:
         raise ValueError(f"n_bands must be >= 1, got {n_bands}")
-    keys = [lsh_bucket(F.col(vec_col), n_planes, dim, band=bi) for bi in range(n_bands)]
+    i, v = ident(id_col), ident(vec_col)
+    keys = [lsh_bucket(v, n_planes, dim, band=bi) for bi in range(n_bands)]
     cand = lsh_candidates(df, id_col, keys, max_bucket_size)
 
     def side(s: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(f"id_{s}"),
-            F.col(vec_col).alias("_v"),
-            norm(F.col(vec_col)).alias("_n"),
-        ).alias(s)
+        return df.selectExpr(f"{i} AS id_{s}", f"{v} AS _v", f"{norm(v)} AS _n").alias(s)
 
-    score = F.round(
-        _cosine_precomputed(
-            F.col("l._v"), F.col("r._v"), F.col("l._n"), F.col("r._n")
-        ),
-        SCORE_DIGITS,
-    ).alias("score")
+    score = _cosine_precomputed("l._v", "r._v", "l._n", "r._n")
     return (
         cand.join(side("l"), "id_l").join(side("r"), "id_r")
-        .select("id_l", "id_r", score)
-        .filter(F.col("score") >= threshold)
+        .selectExpr("id_l", "id_r", f"round({score}, {SCORE_DIGITS}) AS score")
+        .filter(f"score >= {float(threshold)!r}D")
     )

@@ -30,6 +30,15 @@ def hash_params(i: int) -> tuple[int, int]:
     return (a or 1), b
 
 
+def universal_hash(x: str, i: int) -> str:
+    """SQL text of h_i(x) = (a_i*x + b_i) mod p over the bigint
+    expression ``x``, which must lie in [0, p): a product a_i*x then
+    stays below 2^62. Callers reduce wider values (60-bit word ids)
+    mod p first."""
+    a, b = hash_params(i)
+    return f"({x} * {a} + {b}) % {HASH_P}"
+
+
 def words(col: Column | str) -> Column:
     """Whitespace tokenization (the corpora here are space-separated).
 

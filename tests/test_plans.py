@@ -194,6 +194,35 @@ def test_corpus_plan_building_is_few_jvm_calls(spark, jvm_calls):
     assert 0 < len(calls) <= 4257 // 4, len(calls)
 
 
+def test_near_dup_plan_building_is_few_jvm_calls(spark, jvm_calls):
+    """Building (not running) the three banded-LSH pair searches costs
+    few py4j round trips: their hashes are SQL text, a few calls per
+    DataFrame operation, where a Column chain with Python lambdas costs
+    one per function and per lambda. On this input with PySpark 4.1 the
+    Column-lambda builds made 2,581 (``minhash_lsh_pairs``), 2,843
+    (``simhash_pairs``, 16 bits) and 10,958 (``embedding_near_dup_pairs``,
+    13 bands of 3 planes) calling-thread calls; each bound is a tenth of
+    its count. Counts, not timings."""
+    wi = entry._doc_word_ids(spark, SF)
+    qz = entry._quantized(spark, SF)
+    builds = {
+        "minhash": (lambda: ds.minhash_lsh_pairs(wi, jaccard_threshold=0.6), 2581),
+        "simhash": (lambda: ds.simhash_pairs(wi, bits=16, max_hamming=2), 2843),
+        "embedding": (
+            lambda: sim.embedding_near_dup_pairs(
+                qz, dim=64, threshold=0.3, n_planes=3, n_bands=13,
+                id_col="vec_id", vec_col="qv",
+            ),
+            10958,
+        ),
+    }
+    for name, (build, column_calls) in builds.items():
+        build()  # warm the session's lazily created JVM helpers
+        with jvm_calls() as calls:
+            build()
+        assert 0 < len(calls) <= column_calls // 10, (name, len(calls))
+
+
 def test_lsh_pairs_verify_once_per_pair(spark):
     """The three banded-LSH pair searches share one candidate stage
     (dedup_scale.lsh_candidates): one equi join on (band, key), then a

@@ -132,7 +132,7 @@ def test_minhash_finds_near_dups(with_ids):
 
 def test_minhash_signature_matches_python(with_ids):
     rows = with_ids.select(
-        "doc_id", ds.minhash_signature(F.col("word_ids"), 4).alias("sig")
+        "doc_id", F.expr(ds.minhash_signature("word_ids", 4)).alias("sig")
     ).collect()
     ids = _py_word_ids()
     for r in rows:
@@ -560,7 +560,7 @@ def test_simhash_pairs_auto_bits_matches_brute_force(spark):
     fps = {
         r["doc_id"]: r["fp"]
         for r in docs.select(
-            "doc_id", ds.simhash(F.col("word_ids"), bits).alias("fp")
+            "doc_id", F.expr(ds.simhash("word_ids", bits)).alias("fp")
         ).collect()
     }
     ids = sorted(fps)
@@ -587,6 +587,53 @@ def test_simhash_bucket_cap_bounds_skewed_buckets(spark):
     assert uncapped.count() == 30 * 29 // 2 + 1
     got = {(r["id_l"], r["id_r"]) for r in capped.collect()}
     assert got == {("u1", "u2")}  # mega-bucket dropped, small cluster kept
+
+
+def test_lsh_band_parameters_rejected(with_ids):
+    """Band layouts that would put every document in one bucket are
+    rejected before any plan is built: minhash bands outside
+    [1, n_hashes] (more bands than hashes leaves every band slice empty,
+    so every key is 0), and simhash fingerprints narrower than their
+    max_hamming + 1 bands (0-bit band keys) or wider than a non-negative
+    bigint."""
+    for bands in (0, 5):
+        with pytest.raises(ValueError, match="bands"):
+            ds.minhash_lsh_pairs(with_ids, n_hashes=4, bands=bands)
+    for bits, max_hamming in ((2, 2), (63, 2), (16, -1)):
+        with pytest.raises(ValueError):
+            ds.simhash_pairs(with_ids, bits=bits, max_hamming=max_hamming)
+    with pytest.raises(ValueError, match="max_hamming"):
+        ds.simhash_pairs(with_ids, max_hamming=-1)
+
+
+@pytest.mark.parametrize("name", ["doc.id", "doc`id"])
+def test_id_column_names_are_quoted(with_ids, vecs, name):
+    """An id column whose name holds a dot or a backtick is a plain
+    column to every near-dup, split and cap operator: each returns what
+    it returns for the same frame under a plain id name."""
+    from etl_rs_spark.operators.mixing import cap_per_group, stratified_split
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    docs = with_ids.select("doc_id", "word_ids", "lang")
+    odd = docs.withColumnRenamed("doc_id", name)
+    emb = vecs.withColumnRenamed("vec_id", name)
+    runs = [
+        lambda d, i: ds.minhash_lsh_pairs(d, id_col=i, bands=8, jaccard_threshold=0.5),
+        lambda d, i: ds.simhash_pairs(d, id_col=i, bits=16, max_hamming=2),
+        lambda d, i: stratified_split(d, {"a": 0.5, "b": 0.5}, id_col=i),
+        lambda d, i: cap_per_group(d, "lang", 1, id_col=i),
+    ]
+    for run in runs:
+        assert rows(run(odd, name)) == rows(run(docs, "doc_id"))
+    near = [
+        rows(sim.embedding_near_dup_pairs(
+            df, dim=4, threshold=0.9, n_planes=2, n_bands=2, id_col=i
+        ))
+        for df, i in ((emb, name), (vecs, "vec_id"))
+    ]
+    assert near[0] == near[1] and near[0]
 
 
 def test_ngram_hot_shingle_cap_bounds_join_rows(spark):
